@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.ops.StateFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -38,6 +39,8 @@ object IncrementalSnapshot {
 
   private val CursorFile = "_cursor"
 
+  private def cursorPath(statePath: String) = new Path(statePath, CursorFile)
+
   private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -75,39 +78,16 @@ object IncrementalSnapshot {
   }
 
   /** The persisted cursor: (next chunk id, last completed key) — None
-    * before the first completed chunk. Re-read through the same
-    * TMP-then-rename protocol the writer uses (r15 review): a kill
-    * during an in-place overwrite would leave a truncated file that
-    * breaks every later resume; under the staged protocol every crash
-    * point leaves either the old cursor, the complete staged tmp, or
-    * the new cursor readable.
-    *
-    * The TMP read is LENIENT (r16 advice): the tmp is only
-    * complete-by-construction inside the delete-before-rename window —
-    * a crash DURING the very first cursor write (no main file yet)
-    * leaves a truncated/empty tmp, and a strict parse would then throw
-    * on every resume, permanently wedging the snapshot. A malformed tmp
-    * degrades to "no cursor" and the chunk re-lands (idempotent by the
-    * dynamic-overwrite rule). The MAIN file stays strict: it only ever
-    * appears via rename of a complete tmp, so a parse failure there is
-    * real corruption worth a loud error.
+    * before the first completed chunk. Written and read through
+    * [[graft.ops.StateFiles]]: a torn first write reads as "no cursor"
+    * and the chunk re-lands (idempotent by the dynamic-overwrite rule).
     */
   def cursor(spark: org.apache.spark.sql.SparkSession,
-             statePath: String): Option[(Long, Long)] = {
-    val fs = fsOf(spark, statePath)
-    def readAt(p: Path, lenient: Boolean): Option[(Long, Long)] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-        def parse = { val parts = s.split(","); (parts(0).toLong, parts(1).toLong) }
-        if (lenient) scala.util.Try(parse).toOption else Some(parse)
-      }
-    readAt(new Path(statePath, CursorFile), lenient = false)
-      .orElse(readAt(new Path(statePath, CursorFile + ".tmp"), lenient = true))
-  }
+             statePath: String): Option[(Long, Long)] =
+    StateFiles.read(fsOf(spark, statePath), cursorPath(statePath)) { s =>
+      val parts = s.split(",")
+      (parts(0).toLong, parts(1).toLong)
+    }
 
   /** The chunk-schema pin: chunks land over a LIVE table across a long
     * window, and a mid-snapshot DDL would otherwise mix schemas inside
@@ -115,28 +95,17 @@ object IncrementalSnapshot {
     * footer luck. Debezium's own posture for DDL-during-snapshot is
     * restart — so the FIRST landed chunk pins the schema and any later
     * chunk that disagrees refuses loudly with the restart instruction.
-    * Same TMP-then-rename + lenient-tmp protocol as the cursor.
+    * Persisted through [[graft.ops.StateFiles]] like the cursor.
     */
   private def pinChunkSchema(spark: org.apache.spark.sql.SparkSession,
                              statePath: String,
                              schema: org.apache.spark.sql.types.StructType): Unit = {
     val fs = fsOf(spark, statePath)
-    val main = new Path(statePath, "_chunk_schema")
-    def readAt(p: Path, lenient: Boolean): Option[org.apache.spark.sql.types.StructType] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val json = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-        def parse = org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        if (lenient) scala.util.Try(parse).toOption else Some(parse)
-      }
+    val pin = new Path(statePath, "_chunk_schema")
     def canon(st: org.apache.spark.sql.types.StructType) =
       st.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-    readAt(main, lenient = false)
-      .orElse(readAt(new Path(statePath, "_chunk_schema.tmp"), lenient = true)) match {
+    StateFiles.read(fs, pin)(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]) match {
       case Some(pinned) =>
         if (canon(pinned) != canon(schema)) {
           // the rejected DDL is a B17 schema-history event before the
@@ -151,15 +120,10 @@ object IncrementalSnapshot {
               "re-execute the snapshot")
         }
       case None =>
-        fs.mkdirs(new Path(statePath))
         // history first, pin second: a crash between re-pins on the next
         // chunk and re-appends — at-least-once, never silently missing
         SchemaHistory.append(spark, statePath, "pin", None, Some(schema))
-        val tmp = new Path(statePath, "_chunk_schema.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-        if (fs.exists(main)) fs.delete(main, false)
-        fs.rename(tmp, main)
+        StateFiles.replace(fs, pin, schema.json.getBytes("UTF-8"))
     }
   }
 
@@ -184,16 +148,9 @@ object IncrementalSnapshot {
     val lastKey = chunkRows.agg(max(col(keyCol)), count(lit(1))).head()
     if (!lastKey.isNullAt(0)) {
       val priorRows = cursorStats(spark, statePath).map(_._2).getOrElse(0L)
-      val fs = fsOf(spark, statePath)
-      val tmp = new Path(statePath, CursorFile + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
+      StateFiles.replace(fsOf(spark, statePath), cursorPath(statePath),
         s"${chunkId + 1},${lastKey.get(0)},${chunkId + 1},${priorRows + lastKey.getLong(1)}"
           .getBytes("UTF-8"))
-      finally out.close()
-      val main = new Path(statePath, CursorFile)
-      if (fs.exists(main)) fs.delete(main, false)
-      fs.rename(tmp, main)
     }
   }
 
@@ -204,31 +161,17 @@ object IncrementalSnapshot {
     * stats never double-count.
     */
   def cursorStats(spark: org.apache.spark.sql.SparkSession,
-                  statePath: String): Option[(Long, Long)] = {
-    val fs = fsOf(spark, statePath)
-    def readAt(p: Path): Option[(Long, Long)] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-        scala.util.Try {
-          if (s.startsWith("{")) {
-            val n = jsonMapper.readTree(s)
-            val (c, r) = (n.get("chunks"), n.get("rows"))
-            if (c == null || r == null) None
-            else Some((c.asLong(), r.asLong()))
-          } else {
-            val parts = s.split(",")
-            if (parts.length >= 4) Some((parts(2).toLong, parts(3).toLong))
-            else None
-          }
-        }.toOption.flatten
+                  statePath: String): Option[(Long, Long)] =
+    StateFiles.read(fsOf(spark, statePath), cursorPath(statePath)) { s =>
+      if (s.startsWith("{")) {
+        val n = jsonMapper.readTree(s)
+        val (c, r) = (n.get("chunks"), n.get("rows"))
+        if (c == null || r == null) None else Some((c.asLong(), r.asLong()))
+      } else {
+        val parts = s.split(",")
+        if (parts.length >= 4) Some((parts(2).toLong, parts(3).toLong)) else None
       }
-    readAt(new Path(statePath, CursorFile))
-      .orElse(readAt(new Path(statePath, CursorFile + ".tmp")))
-  }
+    }.flatten
 
   // ---------------- composite-key chunking (r16, the r15 verdict's #2) ---------
 
@@ -278,32 +221,19 @@ object IncrementalSnapshot {
 
   /** The composite cursor: (next chunk id, last completed key values,
     * serialized) — persisted as one JSON object
-    * `{"next":N,"key":["v1","v2",…]}` under the same TMP-then-rename +
-    * lenient-tmp protocol as [[cursor]]. A state directory is either
+    * `{"next":N,"key":["v1","v2",…]}` through [[graft.ops.StateFiles]]
+    * like [[cursor]]. A state directory is either
     * Long-keyed or composite-keyed for its whole life — the two
     * formats never mix.
     */
   def cursorCk(spark: org.apache.spark.sql.SparkSession,
-               statePath: String): Option[(Long, Seq[String])] = {
-    val fs = fsOf(spark, statePath)
-    def readAt(p: Path, lenient: Boolean): Option[(Long, Seq[String])] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-        def parse = {
-          val n = jsonMapper.readTree(s)
-          val ks = Seq.newBuilder[String]
-          n.get("key").elements().forEachRemaining(v => ks += v.asText())
-          (n.get("next").asLong(), ks.result())
-        }
-        if (lenient) scala.util.Try(parse).toOption else Some(parse)
-      }
-    readAt(new Path(statePath, CursorFile), lenient = false)
-      .orElse(readAt(new Path(statePath, CursorFile + ".tmp"), lenient = true))
-  }
+               statePath: String): Option[(Long, Seq[String])] =
+    StateFiles.read(fsOf(spark, statePath), cursorPath(statePath)) { s =>
+      val n = jsonMapper.readTree(s)
+      val ks = Seq.newBuilder[String]
+      n.get("key").elements().forEachRemaining(v => ks += v.asText())
+      (n.get("next").asLong(), ks.result())
+    }
 
   /** [[landChunk]] for composite keys: rows land BEFORE the cursor
     * moves (the same crash contract), the cursor records the chunk's
@@ -331,14 +261,8 @@ object IncrementalSnapshot {
       node.put("rows", priorRows + lastKey.getLong(1))
       val arr = node.putArray("key")
       keyCols.indices.foreach(i => arr.add(String.valueOf(vals.get(i))))
-      val fs = fsOf(spark, statePath)
-      val tmp = new Path(statePath, CursorFile + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(jsonMapper.writeValueAsString(node).getBytes("UTF-8"))
-      finally out.close()
-      val main = new Path(statePath, CursorFile)
-      if (fs.exists(main)) fs.delete(main, false)
-      fs.rename(tmp, main)
+      StateFiles.replace(fsOf(spark, statePath), cursorPath(statePath),
+        jsonMapper.writeValueAsBytes(node))
     }
   }
 

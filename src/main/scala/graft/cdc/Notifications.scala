@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.ops.StateFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -16,11 +17,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Layout and protocol are [[SchemaHistory]]'s, applied to a second
   * event family: `<root>/_notifications/<seq>.json`, ONE file per event,
-  * seq claimed by an atomic CREATE-EXCLUSIVE `<seq>.claim` marker and
-  * the body landed tmp-then-rename — concurrent emitters can never lose
-  * or overwrite an event, a crashed emitter burns a number (a gap, never
-  * a torn row), and the one-file-per-event shape makes the log a natural
-  * Structured Streaming file source ([[stream]]).
+  * landed by [[graft.ops.StateFiles.appendNumbered]] — concurrent
+  * emitters can never lose or overwrite an event, a crashed emitter
+  * burns a number (a gap, never a torn row), and the one-file-per-event
+  * shape makes the log a natural Structured Streaming file source
+  * ([[stream]]).
   *
   * Event vocabulary (emitted by [[Signals]], each carrying the
   * collection and its landed (chunks, rows) where meaningful):
@@ -75,10 +76,8 @@ object Notifications {
     val fs = fsOf(spark, root)
     val dir = new Path(root, Dir)
     fs.mkdirs(dir)
-    // fail FAST when the channel path is unusable (e.g. a file squatting
-    // on the directory name): without this, every claim create below
-    // fails with the IOException the loop reads as "rival owns the seq"
-    // and the append spins forever instead of surfacing the fault
+    // fail FAST, with a clear message, when the channel path is unusable
+    // (e.g. a file squatting on the directory name)
     if (!fs.getFileStatus(dir).isDirectory)
       throw new java.io.IOException(
         s"notification channel path $dir exists and is not a directory")
@@ -91,33 +90,19 @@ object Notifications {
       rows.foreach(node.put("rows_landed", _))
       node
     }
-    var seq = nextSeq(fs, dir)
-    var written = -1L
-    while (written < 0) {
-      val claim = new Path(dir, f"$seq%010d.claim")
-      val claimed =
-        try { fs.create(claim, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (!claimed) seq += 1
-      else {
-        content.put("seq", seq)
-        val name = f"$seq%010d.json"
-        val tmp = new Path(dir, name + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write(mapper.writeValueAsString(content).getBytes("UTF-8"))
-        finally out.close()
-        fs.rename(tmp, new Path(dir, name))
-        // the claim stays until a prune's watermark passes it — see
-        // SchemaHistory.append's clobber note and [[prune]]'s safety note
-        written = seq
-      }
+    StateFiles.appendNumbered(fs, dir, nextSeq(fs, dir)) { seq =>
+      content.put("seq", seq)
+      mapper.writeValueAsBytes(content)
     }
-    written
   }
 
   private val PrunedPrefix = "_pruned_"
 
-  private def nextSeq(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Long = {
+  /** The next seq to try in a pruned channel dir — shared with the
+    * signal file channel ([[Signals.dropSignal]]), whose retention is
+    * this channel's too.
+    */
+  private[cdc] def nextSeq(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Long = {
     if (!fs.exists(dir)) 0L
     else {
       // the prune watermark counts: after retention deletes old events,
@@ -160,11 +145,12 @@ object Notifications {
     * Watermark first: monotone (only ever raised), claim-idempotent, and
     * only regular FILES count as markers — a directory squatting on a
     * marker name must read as "no watermark", never as a valid floor.
-    * The create's catch ASSUMES a rival made the marker; a transient
-    * non-already-exists failure would otherwise let the deletes run with
-    * NO watermark, so the next append's seq would restart at 0 and alias
-    * retired seqs, breaking consumers' seq-watermark dedup (r18 advice)
-    * — hence the re-list verification, aborting BEFORE any delete.
+    * A failed create-exclusive ASSUMES a rival made the marker, and a
+    * squatting directory fails it the same way; the deletes would then
+    * run with NO watermark, so the next append's seq would restart at 0
+    * and alias retired seqs, breaking consumers' seq-watermark dedup
+    * (r18 advice) — hence the re-list verification, aborting BEFORE any
+    * delete.
     * Then `.json` events at or below the watermark retire WITH their
     * `.claim` markers (r18 verdict #8 — this bounds each append's
     * listing to O(retained + claims-since-prune) instead of channel
@@ -189,8 +175,8 @@ object Notifications {
       .flatMap(n => scala.util.Try(n.stripPrefix(PrunedPrefix).toLong).toOption)
     val mark = markers().sorted.lastOption.getOrElse(-1L)
     if (upto > mark) {
-      try fs.create(new Path(dir, s"$PrunedPrefix$upto"), false).close()
-      catch { case _: java.io.IOException => () } // rival pruned the same seq
+      // false: a rival pruned the same seq (verified just below)
+      StateFiles.createExclusive(fs, new Path(dir, s"$PrunedPrefix$upto"))
       val after = markers()
       val newMark = if (after.isEmpty) -1L else after.max
       if (newMark < upto)

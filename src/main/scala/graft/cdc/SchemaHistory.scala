@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.ops.StateFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
@@ -18,9 +19,8 @@ import org.apache.spark.sql.types.StructType
   * a DataFrame.
   *
   * Layout: `<root>/_schema_history/<seq>.json`, ONE file per event,
-  * written tmp-then-rename — an append either completes or leaves only
-  * a `.tmp` the reader ignores, so the readable log never contains a
-  * torn event (crash-window spec-pinned). Schemas are serialized in a
+  * landed by [[graft.ops.StateFiles.appendNumbered]] — the readable log
+  * never contains a torn event (crash-window spec-pinned). Schemas are serialized in a
   * CANONICAL form (fields sorted by name, `name type` pairs) so the
   * log is comparable and hash-stable regardless of projection order.
   *
@@ -58,20 +58,14 @@ object SchemaHistory {
     * triggering batch's row count where the call site knows it (the
     * data-dependent half of the event).
     *
-    * Seq-claim protocol (r18 — the r17 verdict's append race): the old
-    * exists-then-rename was check-then-act, so two concurrent appenders
-    * could claim the same seq and one event silently clobbered the other
-    * (RawLocalFileSystem renames OVER existing files). Now the slot is
-    * claimed with an atomic CREATE-EXCLUSIVE marker (`<seq>.claim`, the
-    * [[Signals.acquireWriter]] idiom): exactly one appender wins each
-    * number, losers retry at seq+1 with nothing contested to clean up.
-    * The event body still lands tmp-then-rename AFTER the claim — the
-    * readable log never contains a torn event, and the rename target
-    * cannot pre-exist because the claim holder is unique. A claim whose
-    * writer crashed before the rename burns its number (readers and
-    * [[nextSeq]] ignore bare claims; the next appender fails the
-    * create-exclusive and moves past it) — a gap in the log, never a
-    * lost or overwritten event.
+    * The event lands through the claimed append of
+    * [[graft.ops.StateFiles]]: concurrent appenders land distinct seqs,
+    * and a crashed one leaves a gap, never a lost or overwritten event.
+    * Its claims are never deleted here or by [[compact]]: a deleted
+    * claim could be re-claimed by a stale appender at a seq the
+    * checkpoint already hides (the best-effort channels — Notifications,
+    * the signal file channel — do fold claims under their prune
+    * watermark, where losing a racing event is within their contract).
     *
     * `epoch`: pass the driver's [[Signals.acquireWriter]] token to fence
     * zombie appenders on roots that use writer epochs; a holder of an
@@ -95,7 +89,6 @@ object SchemaHistory {
     }
     val fs = fsOf(spark, root)
     val dir = new Path(root, Dir)
-    fs.mkdirs(dir)
     val content = {
       val node = mapper.createObjectNode()
       node.put("ts_ms", tsMs)
@@ -105,37 +98,10 @@ object SchemaHistory {
       nRows.foreach(n => node.put("n_rows", n))
       node
     }
-    var seq = nextSeq(spark, root)
-    var written = -1L
-    while (written < 0) {
-      val claim = new Path(dir, f"$seq%010d.claim")
-      val claimed =
-        try { fs.create(claim, false).close(); true } // atomic create-exclusive
-        catch { case _: java.io.IOException => false } // rival owns this seq
-      if (!claimed) seq += 1
-      else {
-        content.put("seq", seq)
-        val name = f"$seq%010d.json"
-        val tmp = new Path(dir, name + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write(mapper.writeValueAsString(content).getBytes("UTF-8"))
-        finally out.close()
-        fs.rename(tmp, new Path(dir, name))
-        // the claim is PERMANENT (never deleted — by append OR by
-        // compact, whose own note explains why a deleted claim could be
-        // re-claimed by a stale appender and land an event the
-        // checkpoint already hides): deleting it after the rename would
-        // let a rival that computed the same seq before our rename
-        // re-claim the number and rename over the landed event — the
-        // exact clobber this protocol closes. Claims are empty DDL-rate
-        // files; keeping them forever is the price of an at-least-once
-        // history (the BEST-EFFORT channels — Notifications, the signal
-        // file channel — do fold claims under their prune watermark,
-        // where losing a racing event is within their contract).
-        written = seq
-      }
+    StateFiles.appendNumbered(fs, dir, nextSeq(spark, root)) { seq =>
+      content.put("seq", seq)
+      mapper.writeValueAsBytes(content)
     }
-    written
   }
 
   private def nextSeq(spark: org.apache.spark.sql.SparkSession,
@@ -257,7 +223,7 @@ object SchemaHistory {
     *
     * Crash-ordering (generation-swap shape, matching the repo's
     * index-maintenance idiom): the checkpoint file LANDS FIRST
-    * (claim + tmp-then-rename, like [[append]]); the deletions follow.
+    * (claimed, like [[append]]); the deletions follow.
     * A crash between the two leaves folded files the reader already
     * hides (seq ≤ checkpoint), re-deletable by the next compaction. Two
     * racing compactions at the same watermark produce the identical
@@ -295,24 +261,12 @@ object SchemaHistory {
       val rows = fold.flatMap(_.nRows)
       if (rows.nonEmpty) node.put("n_rows", rows.sum)
       val name = f"$CkptPrefix$maxSeq%010d.json"
-      val claim = new Path(dir, name + ".claim")
-      val claimed =
-        try { fs.create(claim, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (claimed) {
-        val tmp = new Path(dir, name + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-        finally out.close()
-        fs.rename(tmp, new Path(dir, name))
-      } // an unclaimed name means a rival landed the identical checkpoint
+      // an unclaimed name means a rival landed the identical checkpoint
+      StateFiles.claimAndWrite(fs, new Path(dir, name + ".claim"),
+        new Path(dir, name))(mapper.writeValueAsBytes(node))
       // retire the folded EVENT files ≤ maxSeq and any older checkpoint
       // (its content is subsumed). The `.claim` markers are NEVER
-      // deleted (r18 review): a deleted claim could be re-claimed by a
-      // stale appender that computed its seq before this compaction, and
-      // its event would land at a number the checkpoint already hides —
-      // a silently lost history row. Claims are empty DDL-rate files;
-      // keeping them is the price of the no-clobber guarantee.
+      // deleted (r18 review) — see [[append]].
       fs.listStatus(dir).map(_.getPath).foreach { p =>
         val n = p.getName
         def seqOf(s: String) = scala.util.Try(

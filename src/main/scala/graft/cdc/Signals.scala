@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.ops.StateFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -156,20 +157,10 @@ object Signals {
   def acquireWriter(spark: org.apache.spark.sql.SparkSession,
                     root: String): Long = {
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root, EpochDir))
     var e = currentEpoch(spark, root) + 1
-    var claimed = -1L
-    while (claimed < 0) {
-      val marker = new Path(new Path(root, EpochDir), e.toString)
-      try {
-        // overwrite=false: atomic create-exclusive — the claim either
-        // succeeds uniquely or throws because a rival took this number
-        val out = fs.create(marker, false)
-        out.close()
-        claimed = e
-      } catch { case _: java.io.IOException => e += 1 }
-    }
-    claimed
+    while (!StateFiles.createExclusive(fs, new Path(new Path(root, EpochDir), e.toString)))
+      e += 1 // a rival took this number
+    e
   }
 
   private def checkEpoch(spark: org.apache.spark.sql.SparkSession,
@@ -184,46 +175,30 @@ object Signals {
             "(acquireWriter). Stop this writer; do not retry.")
     }
 
-  /** Read the protocol state through the same TMP-then-rename +
-    * lenient-tmp protocol as the B15 cursor (a crash during the very
-    * first state write leaves only a truncated tmp — that degrades to
-    * the empty state, and the lost signals re-apply when their batch
-    * replays; the MAIN file stays strict).
+  /** Read the protocol state, persisted through [[graft.ops.StateFiles]]
+    * (a crash during the very first state write degrades to the empty
+    * state, and the lost signals re-apply when their batch replays).
     */
-  def state(spark: org.apache.spark.sql.SparkSession, root: String): State = {
-    val fs = fsOf(spark, root)
-    def readAt(p: Path, lenient: Boolean): Option[State] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-        def parse = {
-          val n = mapper.readTree(s)
-          def arr(f: String): Seq[String] = {
-            val b = Seq.newBuilder[String]
-            val node = n.get(f)
-            if (node != null)
-              node.elements().forEachRemaining(v => b += v.asText())
-            b.result()
-          }
-          val conds = {
-            val b = Map.newBuilder[String, String]
-            val node = n.get("conditions")
-            if (node != null)
-              node.fieldNames().forEachRemaining(k => b += k -> node.get(k).asText())
-            b.result()
-          }
-          State(arr("queue"), n.get("paused").asBoolean(), arr("done"),
-            arr("blocking"), conds)
-        }
-        if (lenient) scala.util.Try(parse).toOption else Some(parse)
+  def state(spark: org.apache.spark.sql.SparkSession, root: String): State =
+    StateFiles.read(fsOf(spark, root), new Path(root, StateFile)) { s =>
+      val n = mapper.readTree(s)
+      def arr(f: String): Seq[String] = {
+        val b = Seq.newBuilder[String]
+        val node = n.get(f)
+        if (node != null)
+          node.elements().forEachRemaining(v => b += v.asText())
+        b.result()
       }
-    readAt(new Path(root, StateFile), lenient = false)
-      .orElse(readAt(new Path(root, StateFile + ".tmp"), lenient = true))
-      .getOrElse(Empty)
-  }
+      val conds = {
+        val b = Map.newBuilder[String, String]
+        val node = n.get("conditions")
+        if (node != null)
+          node.fieldNames().forEachRemaining(k => b += k -> node.get(k).asText())
+        b.result()
+      }
+      State(arr("queue"), n.get("paused").asBoolean(), arr("done"),
+        arr("blocking"), conds)
+    }.getOrElse(Empty)
 
   private def writeState(spark: org.apache.spark.sql.SparkSession,
                          root: String, st: State): Unit = {
@@ -234,15 +209,8 @@ object Signals {
     val bl = node.putArray("blocking"); st.blocking.foreach(bl.add)
     val cn = node.putObject("conditions")
     st.conditions.toSeq.sortBy(_._1).foreach { case (k, v) => cn.put(k, v) }
-    val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
-    val tmp = new Path(root, StateFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-    finally out.close()
-    val main = new Path(root, StateFile)
-    if (fs.exists(main)) fs.delete(main, false)
-    fs.rename(tmp, main)
+    StateFiles.replace(fsOf(spark, root), new Path(root, StateFile),
+      mapper.writeValueAsBytes(node))
   }
 
   private def collections(data: String): Seq[String] =
@@ -285,8 +253,8 @@ object Signals {
     * operator drops as JSON, no database write access needed]. A signal
     * is one JSON file `{"id","type","data","lsn"}` under
     * `<root>/_signal_channel/`; the lsn IS the claimed file sequence
-    * ([[dropSignal]] uses the notification channel's create-exclusive
-    * claim idiom), so arrival order is total and survives concurrent
+    * ([[dropSignal]] lands it by the notification channel's claimed
+    * append), so arrival order is total and survives concurrent
     * droppers. [[fileChannel]] exposes the channel as a streaming frame
     * shaped exactly like [[fromEnvelope]]'s output — wire it to
     * [[applySignals]] (lenient) in a foreachBatch, same as the
@@ -299,39 +267,16 @@ object Signals {
                  id: String, typ: String, data: String): Long = gated(root) {
     val fs = fsOf(spark, root)
     val dir = new Path(root, ChannelDir)
-    fs.mkdirs(dir)
     val node = mapper.createObjectNode()
     node.put("id", id)
     node.put("type", typ)
     if (data != null) node.put("data", data)
-    var seq = {
-      // the prune watermark counts: lsn numbering continues past a
-      // retired range (see [[pruneChannel]])
-      val ns = fs.listStatus(dir).map(_.getPath.getName)
-        .filter(n => n.endsWith(".json") || n.startsWith("_pruned_"))
-        .flatMap(n => scala.util.Try(
-          n.stripPrefix("_pruned_").stripSuffix(".json").toLong).toOption)
-      if (ns.isEmpty) 0L else ns.max + 1L
+    // the prune watermark counts: lsn numbering continues past a retired
+    // range (see [[pruneChannel]])
+    StateFiles.appendNumbered(fs, dir, Notifications.nextSeq(fs, dir)) { lsn =>
+      node.put("lsn", lsn)
+      mapper.writeValueAsBytes(node)
     }
-    var written = -1L
-    while (written < 0) {
-      val claim = new Path(dir, f"$seq%010d.claim")
-      val claimed =
-        try { fs.create(claim, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (!claimed) seq += 1
-      else {
-        node.put("lsn", seq)
-        val name = f"$seq%010d.json"
-        val tmp = new Path(dir, name + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-        finally out.close()
-        fs.rename(tmp, new Path(dir, name))
-        written = seq
-      }
-    }
-    written
   }
 
   /** Channel retention (the notification channel's Kafka-shaped prune):
@@ -601,9 +546,7 @@ object Signals {
         if (!fs.exists(startedMark)) {
           Notifications.append(spark, root, "started", Some(head),
             Some(0L), Some(0L))
-          fs.mkdirs(new Path(headPath))
-          try fs.create(startedMark, false).close()
-          catch { case _: java.io.IOException => () } // a rival marked it
+          StateFiles.createExclusive(fs, startedMark) // false: a rival marked it
         }
         // the epoch is re-verified PER CHUNK (r18 advice), not only at
         // turn entry: loLsnOf runs inside the chunk loop immediately
@@ -667,8 +610,7 @@ object Signals {
               Some(statsAfter.map(_._2).getOrElse(0L)))
             if (rest.isEmpty)
               Notifications.append(spark, root, "completed", None, None, None)
-            try fs.create(scanMark, false).close()
-            catch { case _: java.io.IOException => () } // a rival marked it
+            StateFiles.createExclusive(fs, scanMark) // false: a rival marked it
           }
           writeState(spark, root, now.copy(
             queue = rest,

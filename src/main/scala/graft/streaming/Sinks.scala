@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import graft.ops.StateFiles
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
 
 /** A8 — `foreachBatch` upsert sink: the standard way a CDC consumer applies
   * a change stream to a queryable target table (the reference's whole
@@ -34,30 +36,28 @@ object Sinks {
   private val RowsPerBucket = 65536L
   private val MaxAutoBuckets = 65536
 
+  private def fsOf(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every sink sidecar is a small text file beside the table's `__kb=`
+    * dirs, written and read through [[graft.ops.StateFiles]] (replace by
+    * tmp-then-rename; a torn first write reads as absent).
+    */
+  private def readSidecar[T](fs: FileSystem, dir: String,
+                             name: String)(parse: String => T): Option[T] =
+    StateFiles.read(fs, new Path(dir, name))(parse)
+
+  private def writeSidecar(fs: FileSystem, dir: String,
+                           name: String, text: String): Unit =
+    StateFiles.replace(fs, new Path(dir, name), text.getBytes("UTF-8"))
+
   /** The bucket count is part of the TABLE layout, not the batch: if two
     * batches bucketed a key differently, the merge would read the wrong
     * bucket and resurrect stale rows. First write pins the choice in a
     * sidecar file; every later batch (and any caller-supplied value) must
     * match it.
     */
-  private def metaPath(targetDir: String) = new Path(targetDir, "_graft_buckets")
-
-  private def readPinnedBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                                targetDir: String): Option[Int] = {
-    val p = metaPath(targetDir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
-    }
-  }
-
-  private def writePinnedBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                                 targetDir: String, n: Int): Unit = {
-    val out = fs.create(metaPath(targetDir), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private val BucketsFile = "_graft_buckets"
 
   /** Resolve the table's bucket count: pinned value wins (a mismatched
     * explicit ask is an error); otherwise pin the caller's value or
@@ -71,19 +71,16 @@ object Sinks {
     * resurrect stale rows. That case REFUSES auto-sizing: the caller must
     * pass the table's real bucket count explicitly (which is then pinned).
     */
-  private def resolvePinnedBuckets(fs: org.apache.hadoop.fs.FileSystem,
+  private def resolvePinnedBuckets(fs: FileSystem,
                                    targetDir: String, nBuckets: Int,
                                    rows: => Long): Int =
-    readPinnedBuckets(fs, targetDir) match {
+    readSidecar(fs, targetDir, BucketsFile)(_.toInt) match {
       case Some(p) =>
         require(nBuckets == 0 || nBuckets == p,
           s"table at $targetDir is bucketed with $p buckets; got nBuckets=$nBuckets")
         p
       case None =>
-        val tdir = new Path(targetDir)
-        val hasBucketDirs = fs.exists(tdir) &&
-          fs.listStatus(tdir).exists(_.getPath.getName.startsWith("__kb="))
-        require(!hasBucketDirs || nBuckets > 0,
+        require(!hasBucketDirs(fs, targetDir) || nBuckets > 0,
           s"table at $targetDir has existing __kb= bucket directories but no " +
             "_graft_buckets sidecar; refusing to auto-size a fresh bucket count " +
             "over an unknown layout — pass nBuckets matching the existing layout " +
@@ -92,7 +89,7 @@ object Sinks {
           if (nBuckets > 0) nBuckets
           else math.min(math.max(16L, rows / RowsPerBucket + 1),
             MaxAutoBuckets.toLong).toInt
-        writePinnedBuckets(fs, targetDir, chosen)
+        writeSidecar(fs, targetDir, BucketsFile, chosen.toString)
         chosen
     }
 
@@ -109,70 +106,19 @@ object Sinks {
     * table whose buckets straddle a widening never depends on which
     * parquet footer Spark happens to sample.
     */
-  private def schemaPath(targetDir: String) = new Path(targetDir, "_graft_schema")
-  private def schemaTmpPath(targetDir: String) = new Path(targetDir, "_graft_schema.tmp")
+  private val SchemaFile = "_graft_schema"
 
-  /** The pin is re-read through a TMP-then-rename protocol (r15 review):
-    * a kill during an in-place overwrite would leave a truncated file
-    * that bricks every later read of the table. The writer stages the
-    * full content at `.tmp`, deletes the old pin, renames — at every
-    * crash point either the old pin, the staged tmp (complete by
-    * construction once the rename window opens), or the new pin is
-    * readable.
-    *
-    * The TMP read is LENIENT (r16 advice): a crash mid-write of the
-    * FIRST schema pin (no main yet) leaves a partial tmp, and a strict
-    * `DataType.fromJson` would then fail every later
-    * applyUpsertBatch/currentState call. A malformed tmp degrades to
-    * "no pin" — the first-write path simply re-pins from the batch (or
-    * the footer schema). The MAIN file stays strict: it only appears
-    * via rename of a complete tmp, so a parse failure there is real
-    * corruption worth a loud error.
+  private def readPinnedSchema(fs: FileSystem,
+                               targetDir: String): Option[StructType] =
+    readSidecar(fs, targetDir, SchemaFile)(
+      DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** Nullability is normalized RECURSIVELY (r15 review): a footer-
+    * inferred array/struct column carries containsNull/field-nullable
+    * flags an encoder-produced batch may not, and a strict DataType
+    * comparison would misreport the identical schema as a type change.
     */
-  private def readPinnedSchema(fs: org.apache.hadoop.fs.FileSystem,
-                               targetDir: String): Option[org.apache.spark.sql.types.StructType] = {
-    def readAt(p: Path, lenient: Boolean): Option[org.apache.spark.sql.types.StructType] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def parse = org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        if (lenient) scala.util.Try(parse).toOption else Some(parse)
-      }
-    // main wins; the tmp fallback covers the delete-before-rename window
-    readAt(schemaPath(targetDir), lenient = false)
-      .orElse(readAt(schemaTmpPath(targetDir), lenient = true))
-  }
-
-  private def writePinnedSchema(fs: org.apache.hadoop.fs.FileSystem,
-                                targetDir: String,
-                                st: org.apache.spark.sql.types.StructType): Unit = {
-    val tmp = schemaTmpPath(targetDir)
-    val out = fs.create(tmp, true)
-    try out.write(st.json.getBytes("UTF-8")) finally out.close()
-    val main = schemaPath(targetDir)
-    if (fs.exists(main)) fs.delete(main, false)
-    fs.rename(tmp, main)
-  }
-
-  /** Enforce the schema contract for one upsert batch against the table:
-    * returns the (possibly widened) table schema to read existing
-    * buckets with, and whether the pin must be rewritten after the data
-    * write. Nullability is forced — every stored column is nullable once
-    * a widening can backfill nulls.
-    */
-  private def resolveSchema(fs: org.apache.hadoop.fs.FileSystem,
-                            targetDir: String, tableExists: Boolean,
-                            batchSchema: org.apache.spark.sql.types.StructType,
-                            existingSchema: => org.apache.spark.sql.types.StructType)
-  : (org.apache.spark.sql.types.StructType, Boolean) = {
-    import org.apache.spark.sql.types._
-    // nullability is normalized RECURSIVELY (r15 review): a footer-
-    // inferred array/struct column carries containsNull/field-nullable
-    // flags an encoder-produced batch may not, and a strict DataType
-    // comparison would misreport the identical schema as a type change
+  private def nullable(st: StructType): StructType = {
     def nullify(dt: DataType): DataType = dt match {
       case ArrayType(e, _)      => ArrayType(nullify(e), containsNull = true)
       case MapType(k, v, _)     => MapType(nullify(k), nullify(v), valueContainsNull = true)
@@ -180,12 +126,20 @@ object Sinks {
         f.copy(dataType = nullify(f.dataType), nullable = true)))
       case other                => other
     }
-    def nullable(st: StructType): StructType =
-      nullify(st).asInstanceOf[StructType]
+    nullify(st).asInstanceOf[StructType]
+  }
+
+  /** Enforce the schema contract for one upsert batch against the
+    * table's schema `table` (the pin, else the nullable footer schema;
+    * None on a fresh table): returns the (possibly widened) table schema
+    * to read existing buckets with, and whether the pin must be
+    * rewritten after the data write. Nullability is forced — every
+    * stored column is nullable once a widening can backfill nulls.
+    */
+  private def resolveSchema(targetDir: String, batchSchema: StructType,
+                            table: Option[StructType]): (StructType, Boolean) = {
     val b = nullable(batchSchema)
-    readPinnedSchema(fs, targetDir)
-      .orElse(if (tableExists) Some(nullable(StructType(
-        existingSchema.fields.filterNot(_.name == "__kb")))) else None) match {
+    table match {
       case None => (b, true) // first write pins the batch schema
       case Some(ts) =>
         val bByName = b.fields.map(f => f.name -> f).toMap
@@ -214,24 +168,7 @@ object Sinks {
     * short-circuits the common case without reading any bucket. (The
     * upsert sink needs neither — its merge is idempotent.)
     */
-  private def lastBatchPath(targetDir: String) = new Path(targetDir, "_graft_last_batch")
-
-  private def readLastBatch(fs: org.apache.hadoop.fs.FileSystem,
-                            targetDir: String): Option[Long] = {
-    val p = lastBatchPath(targetDir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def writeLastBatch(fs: org.apache.hadoop.fs.FileSystem,
-                             targetDir: String, id: Long): Unit = {
-    val out = fs.create(lastBatchPath(targetDir), true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private val LastBatchFile = "_graft_last_batch"
 
   /** The layout-column sidecar (r18): `__kb` hashes `bucketCols`, which
     * default to the merge key but may be a SUBSET of it — the
@@ -243,10 +180,9 @@ object Sinks {
     * resurrect stale rows, so the first write pins the choice and every
     * later batch must match.
     */
-  private def bucketColsPath(targetDir: String) =
-    new Path(targetDir, "_graft_bucket_cols")
+  private val BucketColsFile = "_graft_bucket_cols"
 
-  private def resolveBucketCols(fs: org.apache.hadoop.fs.FileSystem,
+  private def resolveBucketCols(fs: FileSystem,
                                 targetDir: String, keyCols: Seq[String],
                                 bucketCols: Seq[String]): Seq[String] = {
     val want = if (bucketCols.isEmpty) keyCols else bucketCols
@@ -254,36 +190,35 @@ object Sinks {
       s"bucketCols (${want.mkString(",")}) must be a subset of keyCols " +
         s"(${keyCols.mkString(",")}): the layout hash must be a pure " +
         "function of the merge key or a key's versions land in different buckets")
-    val p = bucketColsPath(targetDir)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val pinned = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim.split(",").toSeq
-      finally in.close()
-      require(pinned == want,
-        s"table at $targetDir is bucketed on ${pinned.mkString(",")}; " +
-          s"got bucketCols=${want.mkString(",")}")
-      pinned
-    } else {
-      // pinned only when it differs from the default — legacy tables
-      // (no sidecar) stay readable as keyCols-bucketed. A NON-default
-      // choice may only be pinned on a FRESH table (r18 review): data
-      // already bucketed under the keyCols hash re-hashed on a subset
-      // would prune the wrong buckets and resurrect stale rows, exactly
-      // the drift resolvePinnedBuckets refuses for the bucket COUNT.
-      if (want != keyCols) {
-        val tdir = new Path(targetDir)
-        val hasBucketDirs = fs.exists(tdir) &&
-          fs.listStatus(tdir).exists(_.getPath.getName.startsWith("__kb="))
-        require(!hasBucketDirs,
-          s"table at $targetDir already holds data bucketed on its merge " +
-            s"key; refusing to pin bucketCols=${want.mkString(",")} over " +
-            "the existing layout — rebuild the table to re-cluster it")
-        val out = fs.create(p, true)
-        try out.write(want.mkString(",").getBytes("UTF-8")) finally out.close()
-      }
-      want
+    readSidecar(fs, targetDir, BucketColsFile)(_.split(",").toSeq) match {
+      case Some(pinned) =>
+        require(pinned == want,
+          s"table at $targetDir is bucketed on ${pinned.mkString(",")}; " +
+            s"got bucketCols=${want.mkString(",")}")
+        pinned
+      case None =>
+        // pinned only when it differs from the default — legacy tables
+        // (no sidecar) stay readable as keyCols-bucketed. A NON-default
+        // choice may only be pinned on a FRESH table (r18 review): data
+        // already bucketed under the keyCols hash re-hashed on a subset
+        // would prune the wrong buckets and resurrect stale rows, exactly
+        // the drift resolvePinnedBuckets refuses for the bucket COUNT.
+        if (want != keyCols) {
+          require(!hasBucketDirs(fs, targetDir),
+            s"table at $targetDir already holds data bucketed on its merge " +
+              s"key; refusing to pin bucketCols=${want.mkString(",")} over " +
+              "the existing layout — rebuild the table to re-cluster it")
+          writeSidecar(fs, targetDir, BucketColsFile, want.mkString(","))
+        }
+        want
     }
+  }
+
+  /** Whether bucketed data (`__kb=` dirs) already exists under the table. */
+  private def hasBucketDirs(fs: FileSystem,
+                            targetDir: String): Boolean = {
+    val tdir = new Path(targetDir)
+    fs.exists(tdir) && fs.listStatus(tdir).exists(_.getPath.getName.startsWith("__kb="))
   }
 
   /** Merge one batch of flattened change events into the target.
@@ -312,7 +247,7 @@ object Sinks {
                        versionCol: String, nBuckets: Int = 0,
                        bucketCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, targetDir)
     // LAZY (r18): the count is one full batch pass, but it's only needed
     // when auto-sizing fires (first write with nBuckets=0) or a schema
     // event records its triggering volume — the steady path (pinned
@@ -321,23 +256,22 @@ object Sinks {
     val layoutCols = resolveBucketCols(fs, targetDir, keyCols, bucketCols)
     val n = resolvePinnedBuckets(fs, targetDir, nBuckets, batchRows)
     val tableExists =
-      fs.exists(new Path(targetDir, "_SUCCESS")) || (fs.exists(new Path(targetDir)) &&
-        fs.listStatus(new Path(targetDir))
-          .exists(_.getPath.getName.startsWith("__kb=")))
+      fs.exists(new Path(targetDir, "_SUCCESS")) || hasBucketDirs(fs, targetDir)
     // what the table believed before this batch — the B17 history event's
-    // old side (pin sidecar, else the footer schema of the live table)
-    val priorSchema: Option[org.apache.spark.sql.types.StructType] =
-      readPinnedSchema(fs, targetDir).orElse(
-        if (tableExists) Some(org.apache.spark.sql.types.StructType(
-          spark.read.parquet(targetDir).schema.fields.filterNot(_.name == "__kb")))
-        else None)
+    // old side (pin sidecar, else the footer schema of the live table);
+    // the pin is read once per batch
+    val pinned = readPinnedSchema(fs, targetDir)
+    val footer =
+      if (pinned.isEmpty && tableExists) Some(StructType(
+        spark.read.parquet(targetDir).schema.fields.filterNot(_.name == "__kb")))
+      else None
+    val priorSchema = pinned.orElse(footer)
     // schema contract: widen in place on added columns, refuse narrowing
     // and type changes (restart-level DDL) — see the schema-pin scaladoc.
     // A refusal is a B17 schema-history event BEFORE it throws: the
     // rejected DDL is exactly what an operator reads the log for.
     val (tableSchema, repin) =
-      try resolveSchema(fs, targetDir, tableExists,
-        batch.schema, spark.read.parquet(targetDir).schema)
+      try resolveSchema(targetDir, batch.schema, pinned.orElse(footer.map(nullable)))
       catch {
         case e: IllegalArgumentException =>
           graft.cdc.SchemaHistory.append(spark, targetDir, "refuse",
@@ -354,7 +288,7 @@ object Sinks {
       graft.cdc.SchemaHistory.append(spark, targetDir,
         if (priorSchema.isEmpty) "pin" else "widen",
         priorSchema, Some(tableSchema), Some(batchRows))
-      writePinnedSchema(fs, targetDir, tableSchema)
+      writeSidecar(fs, targetDir, SchemaFile, tableSchema.json)
     }
     if (touched.isEmpty) { if (repin) recordPin(); return }
     val existing =
@@ -362,8 +296,7 @@ object Sinks {
         // partition-pruned: only the touched buckets are read. The
         // EXPLICIT widened schema (not footer sampling) makes buckets
         // written before a widening read their missing columns as null.
-        Some(spark.read.schema(tableSchema
-            .add("__kb", org.apache.spark.sql.types.IntegerType))
+        Some(spark.read.schema(tableSchema.add("__kb", IntegerType))
           .parquet(targetDir).where(col("__kb").isin(touched: _*)))
       else None
     val all = existing.map(_.unionByName(b, allowMissingColumns = true)).getOrElse(b)
@@ -408,7 +341,7 @@ object Sinks {
     * before the next write). The root `_SUCCESS` marker advances after
     * the swap, keeping parity with the Spark-committed path.
     */
-  private def swapBucketDirsIntoTable(fs: org.apache.hadoop.fs.FileSystem,
+  private def swapBucketDirsIntoTable(fs: FileSystem,
                                       targetDir: String, df: DataFrame): Unit = {
     val stage = new Path(targetDir, "_graft_stage")
     if (fs.exists(stage)) fs.delete(stage, true)
@@ -465,14 +398,20 @@ object Sinks {
                          nBuckets: Int = 0,
                          trigger: Trigger = Trigger.AvailableNow(),
                          bucketCols: Seq[String] = Nil): StreamingQuery =
+    startSink(changes, checkpointDir, trigger) { (batch, _) =>
+      applyUpsertBatch(batch, targetDir, keyCols, versionCol, nBuckets, bucketCols)
+    }
+
+  /** The `writeStream … foreachBatch … start()` scaffold every sink here
+    * attaches through: append mode, the caller's trigger and checkpoint.
+    */
+  private def startSink(changes: DataFrame, checkpointDir: String, trigger: Trigger)
+                       (apply: (DataFrame, Long) => Unit): StreamingQuery =
     changes.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatch(batch, targetDir, keyCols, versionCol, nBuckets,
-          bucketCols)
-      }
+      .foreachBatch { (batch: DataFrame, id: Long) => apply(batch, id) }
       .start()
 
   /** A8e/B19 (r19) — the upsert sink with TRUNCATE support. [PK:
@@ -506,23 +445,21 @@ object Sinks {
   def applyUpsertBatchWithTruncates(batch: DataFrame, targetDir: String,
                                     keyCols: Seq[String], versionCol: String,
                                     opCol: String = "op",
-                                    truncateOp: String = "t",
                                     nBuckets: Int = 0,
                                     bucketCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, targetDir)
     // the FLOOR is part of the table, not the batch: a batch arriving
     // AFTER the truncate's batch but carrying straggler rows versioned
     // BEFORE it must not resurrect the cleared key-space. The sidecar
     // persists the highest truncate version ever applied; every batch
     // drops its rows at or below it before merging.
-    val floor: Option[Long] = readTruncateFloor(fs, targetDir)
-    val cut = batch.where(col(opCol) === truncateOp)
+    val floor: Option[Long] = readSidecar(fs, targetDir, TruncateFile)(_.toLong)
+    val cut = batch.where(col(opCol) === TruncateOp)
       .agg(max(col(versionCol).cast("long"))).head() // one driver row
     val batchT: Option[Long] = if (cut.isNullAt(0)) None else Some(cut.getLong(0))
     val effT: Option[Long] = (floor.toSeq ++ batchT.toSeq).maxOption
-    val rows = batch.where(col(opCol) =!= truncateOp || col(opCol).isNull)
+    val rows = batch.where(col(opCol) =!= TruncateOp || col(opCol).isNull)
     val live = effT.map(t => rows.where(col(versionCol) > lit(t))).getOrElse(rows)
     applyUpsertBatch(live, targetDir, keyCols, versionCol, nBuckets, bucketCols)
     // a truncate NEWER than the floor clears the stored pre-truncate
@@ -531,10 +468,7 @@ object Sinks {
     // recomputes identically)
     if (batchT.exists(bt => floor.forall(_ < bt))) {
       val t = lit(effT.get)
-      val hasParts = fs.exists(new Path(targetDir)) &&
-        fs.listStatus(new Path(targetDir))
-          .exists(_.getPath.getName.startsWith("__kb="))
-      if (hasParts) {
+      if (hasBucketDirs(fs, targetDir)) {
         val cur = readPinned(spark, targetDir)
         val spans = cur.groupBy(col("__kb"))
           .agg(coalesce(min(col(versionCol)) <= t, lit(false)).as("__hasDead"),
@@ -555,54 +489,17 @@ object Sinks {
         spans.collect { case (kb, _, true) => kb }
           .foreach(kb => fs.delete(new Path(targetDir, s"__kb=$kb"), true))
       }
-      writeTruncateFloor(fs, targetDir, effT.get)
+      writeSidecar(fs, targetDir, TruncateFile, effT.get.toString)
     }
   }
 
-  /** THE long-valued sidecar idiom, shared by the truncate floor and the
-    * offset ledger (one implementation — a fix here fixes every sidecar,
-    * they cannot drift). Writes are tmp-then-rename like the schema pin.
-    * Reads fall back to the `.tmp` when the final file is MISSING: the
-    * writer's delete→rename window would otherwise read as "no value",
-    * silently LOWERING a floor after a crash between the delete and the
-    * rename (the tmp is always fully written and closed before the
-    * delete runs, so in that window it is the authoritative value; when
-    * BOTH files exist the final one wins — a tmp from a crash mid-write
-    * may be torn). A torn read parses as None, never a wrong number.
+  /** The truncate sinks' op value and floor sidecar: the highest
+    * truncate version (a source LSN) ever applied. The floor is read
+    * through [[graft.ops.StateFiles]], so a crash inside its replace
+    * window never silently lowers the cutoff.
     */
-  private def readLongSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: String, name: String): Option[Long] = {
-    def readAt(p: Path): Option[Long] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        scala.util.Try(txt.toLong).toOption
-      }
-    readAt(new Path(dir, name)).orElse(readAt(new Path(dir, s"$name.tmp")))
-  }
-
-  private def writeLongSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String, name: String, v: Long): Unit = {
-    val tmp = new Path(dir, s"$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(dir, name), false)
-    fs.rename(tmp, new Path(dir, name))
-  }
-
-  /** The truncate floor sidecar (a torn floor must not brick or silently
-    * lower the cutoff). Versions are read as Long: the floor is a source
-    * LSN.
-    */
-  private def readTruncateFloor(fs: org.apache.hadoop.fs.FileSystem,
-                                targetDir: String): Option[Long] =
-    readLongSidecar(fs, targetDir, "_graft_truncate")
-
-  private def writeTruncateFloor(fs: org.apache.hadoop.fs.FileSystem,
-                                 targetDir: String, t: Long): Unit =
-    writeLongSidecar(fs, targetDir, "_graft_truncate", t)
+  private val TruncateOp = "t"
+  private val TruncateFile = "_graft_truncate"
 
   /** A8e — attach the truncate-aware upsert sink to a change stream. */
   def foreachBatchUpsertTruncates(changes: DataFrame, targetDir: String,
@@ -611,15 +508,10 @@ object Sinks {
                                   nBuckets: Int = 0,
                                   trigger: Trigger = Trigger.AvailableNow(),
                                   bucketCols: Seq[String] = Nil): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatchWithTruncates(batch, targetDir, keyCols, versionCol,
-          opCol, "t", nBuckets, bucketCols)
-      }
-      .start()
+    startSink(changes, checkpointDir, trigger) { (batch, _) =>
+      applyUpsertBatchWithTruncates(batch, targetDir, keyCols, versionCol,
+        opCol, nBuckets, bucketCols)
+    }
 
   /** B20 (r19) — HEARTBEATS and the consumer OFFSET LEDGER. [PK:
     * Debezium emits periodic heartbeat records (`heartbeat.interval.ms`,
@@ -644,19 +536,21 @@ object Sinks {
   def applyUpsertBatchWithHeartbeats(batch: DataFrame, targetDir: String,
                                      keyCols: Seq[String], versionCol: String,
                                      opCol: String = "op",
-                                     heartbeatOp: String = "h",
                                      nBuckets: Int = 0,
                                      bucketCols: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val data = batch.where(col(opCol) =!= heartbeatOp || col(opCol).isNull)
+    val data = batch.where(col(opCol) =!= HeartbeatOp || col(opCol).isNull)
     applyUpsertBatch(data, targetDir, keyCols, versionCol, nBuckets, bucketCols)
     val hi = batch.agg(max(col(versionCol).cast("long"))).head()
     if (!hi.isNullAt(0)) {
-      val fs = new Path(targetDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      advanceOffsetLedger(fs, targetDir, hi.getLong(0))
+      val fs = fsOf(batch.sparkSession, targetDir)
+      // monotone: replays never lower the floor
+      if (readSidecar(fs, targetDir, OffsetFile)(_.toLong).forall(_ < hi.getLong(0)))
+        writeSidecar(fs, targetDir, OffsetFile, hi.getLong(0).toString)
     }
   }
+
+  private val HeartbeatOp = "h"
+  private val OffsetFile = "_graft_offset"
 
   /** B20 — attach the heartbeat-aware upsert sink to a change stream. */
   def foreachBatchUpsertHeartbeats(changes: DataFrame, targetDir: String,
@@ -665,33 +559,18 @@ object Sinks {
                                    nBuckets: Int = 0,
                                    trigger: Trigger = Trigger.AvailableNow(),
                                    bucketCols: Seq[String] = Nil): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatchWithHeartbeats(batch, targetDir, keyCols, versionCol,
-          opCol, "h", nBuckets, bucketCols)
-      }
-      .start()
+    startSink(changes, checkpointDir, trigger) { (batch, _) =>
+      applyUpsertBatchWithHeartbeats(batch, targetDir, keyCols, versionCol,
+        opCol, nBuckets, bucketCols)
+    }
 
   /** The sink's durably-consumed position (None before anything landed).
     * This is the channel-retention floor: pruning a signal/notification
     * channel at or below it can never drop something this consumer has
     * not applied.
     */
-  def readOffsetLedger(spark: SparkSession, targetDir: String): Option[Long] = {
-    val fs = new Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readLongSidecar(fs, targetDir, "_graft_offset")
-  }
-
-  private def advanceOffsetLedger(fs: org.apache.hadoop.fs.FileSystem,
-                                  targetDir: String, lsn: Long): Unit = {
-    val cur = readLongSidecar(fs, targetDir, "_graft_offset")
-    if (cur.forall(_ < lsn)) // monotone: replays never lower the floor
-      writeLongSidecar(fs, targetDir, "_graft_offset", lsn)
-  }
+  def readOffsetLedger(spark: SparkSession, targetDir: String): Option[Long] =
+    readSidecar(fsOf(spark, targetDir), targetDir, OffsetFile)(_.toLong)
 
   /** Incrementally maintained aggregate rollup: each micro-batch folds its
     * per-key (count, decimal sum) PARTIALS into the bucket-partitioned
@@ -719,8 +598,11 @@ object Sinks {
                        valueCol: String, nBuckets: Int = 0,
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId.exists(id => readLastBatch(fs, targetDir).exists(_ >= id))) return
+    val fs = fsOf(spark, targetDir)
+    def recordBatch(): Unit =
+      batchId.foreach(id => writeSidecar(fs, targetDir, LastBatchFile, id.toString))
+    if (batchId.exists(id =>
+        readSidecar(fs, targetDir, LastBatchFile)(_.toLong).exists(_ >= id))) return
     val partial = batch.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"),
         sum(col(valueCol).cast("decimal(18,6)")).as("sum_val"))
@@ -728,9 +610,9 @@ object Sinks {
     val b = partial.withColumn("__kb", pmod(hash(keyCols.map(col): _*), lit(n)))
       .withColumn("__bid", lit(batchId.getOrElse(-1L)))
     val touched = b.select(col("__kb")).distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) { batchId.foreach(writeLastBatch(fs, targetDir, _)); return }
+    if (touched.isEmpty) { recordBatch(); return }
     val existing =
-      if (fs.listStatus(new Path(targetDir)).exists(_.getPath.getName.startsWith("__kb=")))
+      if (hasBucketDirs(fs, targetDir))
         Some {
           val ex = spark.read.parquet(targetDir).where(col("__kb").isin(touched: _*))
           // tables written before the __bid column existed merge as "never
@@ -752,7 +634,7 @@ object Sinks {
         case _ => Set.empty
       }
       val live = touched.filterNot(applied)
-      if (live.isEmpty) { batchId.foreach(writeLastBatch(fs, targetDir, _)); return }
+      if (live.isEmpty) { recordBatch(); return }
       // already-applied buckets are excluded from BOTH sides: their dirs are
       // simply not in the output, and dynamic overwrite leaves them untouched
       val bLive = b.where(col("__kb").isin(live: _*))
@@ -777,7 +659,7 @@ object Sinks {
         merged.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("__kb").parquet(targetDir)
-      batchId.foreach(writeLastBatch(fs, targetDir, _))
+      recordBatch()
     } finally existing.foreach(_.unpersist(false))
   }
 
@@ -786,14 +668,9 @@ object Sinks {
                          keyCols: Seq[String], valueCol: String,
                          nBuckets: Int = 0,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyRollupBatch(batch, targetDir, keyCols, valueCol, nBuckets, Some(id))
-      }
-      .start()
+    startSink(events, checkpointDir, trigger) { (batch, id) =>
+      applyRollupBatch(batch, targetDir, keyCols, valueCol, nBuckets, Some(id))
+    }
 
   /** The maintained rollup (layout + replay-guard columns dropped). */
   def currentRollup(spark: SparkSession, targetDir: String): DataFrame =
@@ -812,28 +689,21 @@ object Sinks {
     * never a mix, because the checkpoint severs the
     * read-before-overwrite hazard the same way the batch path does.
     */
-  def compact(spark: SparkSession, targetDir: String): Unit = {
-    val fs = new Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def compact(spark: SparkSession, targetDir: String): Unit =
     // stage-and-swap: one pass (read + re-cluster + encode) instead of a
     // checkpointed materialization followed by a cache re-read (r20)
-    swapBucketDirsIntoTable(fs, targetDir,
+    swapBucketDirsIntoTable(fsOf(spark, targetDir), targetDir,
       readPinned(spark, targetDir).repartition(col("__kb")))
-  }
 
   /** Read the table through its pinned schema when one exists — buckets
     * written before a widening then read their missing columns as null
     * instead of depending on which footer Spark samples.
     */
-  private def readPinned(spark: SparkSession, targetDir: String): DataFrame = {
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readPinnedSchema(fs, targetDir) match {
-      case Some(st) =>
-        spark.read.schema(st.add("__kb", org.apache.spark.sql.types.IntegerType))
-          .parquet(targetDir)
-      case None => spark.read.parquet(targetDir)
+  private def readPinned(spark: SparkSession, targetDir: String): DataFrame =
+    readPinnedSchema(fsOf(spark, targetDir), targetDir) match {
+      case Some(st) => spark.read.schema(st.add("__kb", IntegerType)).parquet(targetDir)
+      case None     => spark.read.parquet(targetDir)
     }
-  }
 
   /** Live rows of the materialized table (tombstones filtered, layout
     * column dropped), resolved through the pinned schema.
@@ -918,7 +788,7 @@ object Sinks {
           .getOrElse("?")}; got ${keyCols.mkString(",")}")
       // the catalog is the pinned schema: widen on added columns,
       // refuse narrowing/type changes — each decision a B17 event
-      val ts = org.apache.spark.sql.types.StructType(
+      val ts = StructType(
         spark.table(table).schema.fields.filterNot(_.name == "__kb"))
       val bByName = batch.schema.fields.map(f => f.name -> f).toMap
       def refuse(msg: String): Nothing = {
@@ -947,7 +817,7 @@ object Sinks {
         spark.sql(s"ALTER TABLE $table ADD COLUMNS ($adds)")
         graft.cdc.SchemaHistory.append(spark, tableLocation(spark, table),
           "widen", Some(ts),
-          Some(org.apache.spark.sql.types.StructType(ts.fields ++ newCols)),
+          Some(StructType(ts.fields ++ newCols)),
           Some(batchRows))
       }
     }
@@ -1031,20 +901,18 @@ object Sinks {
                                              versionCol: String,
                                              bucketCols: Seq[String],
                                              opCol: String = "op",
-                                             truncateOp: String = "t",
                                              nBuckets: Int = 8,
                                              nKbParts: Int = 16): Unit = {
     val spark = batch.sparkSession
-    val rows = batch.where(col(opCol) =!= truncateOp || col(opCol).isNull)
-    val cut = batch.where(col(opCol) === truncateOp)
+    val rows = batch.where(col(opCol) =!= TruncateOp || col(opCol).isNull)
+    val cut = batch.where(col(opCol) === TruncateOp)
       .agg(max(col(versionCol).cast("long"))).head()
     val batchT: Option[Long] = if (cut.isNullAt(0)) None else Some(cut.getLong(0))
     val floor: Option[Long] =
       if (!spark.catalog.tableExists(table)) None
       else {
-        val fs = new Path(tableLocation(spark, table))
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        readTruncateFloor(fs, tableLocation(spark, table))
+        val loc = tableLocation(spark, table)
+        readSidecar(fsOf(spark, loc), loc, TruncateFile)(_.toLong)
       }
     val effT: Option[Long] = (floor.toSeq ++ batchT.toSeq).maxOption
     val live = effT.map(t => rows.where(col(versionCol) > lit(t))).getOrElse(rows)
@@ -1071,9 +939,8 @@ object Sinks {
       spans.collect { case (kb, _, true) => kb }.foreach { kb =>
         spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (__kb=$kb)")
       }
-      val fs = new Path(tableLocation(spark, table))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      writeTruncateFloor(fs, tableLocation(spark, table), effT.get)
+      val loc = tableLocation(spark, table)
+      writeSidecar(fsOf(spark, loc), loc, TruncateFile, effT.get.toString)
     }
   }
 

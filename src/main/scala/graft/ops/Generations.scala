@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** Crash-atomic directory swap via generation directories + commit
   * markers — the mechanism behind index compaction (IVF `vectors/`, LSH
@@ -18,8 +18,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     original `<base>/` written by the index build — so pre-generation
   *     indexes resolve unchanged);
   *   - a generation becomes current the instant its IMMUTABLE commit
-  *     marker `_<base>_commit_N` is created (one atomic create of a
-  *     one-block file — nothing is ever deleted or renamed on the commit
+  *     marker `_<base>_commit_N` is created (one atomic create of an
+  *     empty file — nothing is ever deleted or renamed on the commit
   *     path);
   *   - readers resolve "current" as the highest committed N whose
   *     directory exists; no markers → the plain `<base>/` layout.
@@ -96,13 +96,16 @@ object Generations {
     (dir, next)
   }
 
-  /** Make generation `gen` current: one atomic create of its immutable
-    * commit marker. The staged directory MUST be fully written first.
+  /** Make generation `gen` current: one atomic create of its immutable,
+    * empty commit marker ([[StateFiles.createExclusive]]; [[committed]]
+    * reads only marker names). The staged directory MUST be fully
+    * written first. Throws if the marker already exists — a rival
+    * committed this generation.
     */
   def commit(fs: FileSystem, root: Path, base: String, gen: Long): Unit = {
-    val out = fs.create(new Path(root, markerName(base, gen)), false)
-    try out.write(genDir(root, base, gen).getName.getBytes("UTF-8"))
-    finally out.close()
+    val marker = new Path(root, markerName(base, gen))
+    if (!StateFiles.createExclusive(fs, marker))
+      throw new FileAlreadyExistsException(s"generation $gen of $base is already committed: $marker")
   }
 
   /** Drop generations older than the PREVIOUS one (current and previous

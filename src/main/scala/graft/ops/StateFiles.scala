@@ -47,6 +47,15 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSy
   * The main file only ever appears by renaming a closed tmp, so a main
   * that does not parse is real corruption and [[read]] throws.
   *
+  * The directory sinks' bucket commit (`Sinks.commitBuckets` /
+  * `finishCommit`) is the directory form of replace: the staged
+  * `__kb=` dirs under `_graft_stage` are the tmp, the stage's
+  * `_SUCCESS` says it is complete, and promoting a bucket deletes the
+  * live dir and renames the staged one into place (primitive 2, applied
+  * to a directory; delete is recursive). A complete stage with a
+  * missing live bucket means the stage wins, so the next sink call
+  * finishes the promotion; a stage without `_SUCCESS` is dropped.
+  *
   * ==Claimed append==
   * [[claimAndWrite]] takes a name with [[createExclusive]] on a claim
   * file, then writes the body through [[replace]]. The claim makes the

@@ -148,15 +148,10 @@ object Ingest {
   def foreachBatchIvfAppend(embeddings: DataFrame, indexPath: String,
                             checkpointDir: String, vecCol: String, idCol: String,
                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embeddings.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Similarity.ivfAppendBatch(batch.sparkSession, indexPath, batch,
-          vecCol, idCol, batchId = id + 1)
-      }
-      .start()
+    Sinks.startSink(embeddings, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Similarity.ivfAppendBatch(batch.sparkSession, indexPath, batch,
+        vecCol, idCol, batchId = id + 1)
+    }
 
   /** [[foreachBatchIvfAppend]] for an IVF-PQ index: every micro-batch is
     * appended to the vectors AND append-encoded into the code table with
@@ -175,18 +170,12 @@ object Ingest {
   def foreachBatchIvfPqAppend(embeddings: DataFrame, indexPath: String,
                               checkpointDir: String, vecCol: String, idCol: String,
                               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embeddings.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        graft.llm.Similarity.ivfAppendBatch(s, indexPath, batch,
-          vecCol, idCol, batchId = id + 1)
-        graft.llm.Quantization.ivfPqAppendCodes(s, indexPath, batchId = id + 1)
-        ()
-      }
-      .start()
+    Sinks.startSink(embeddings, checkpointDir, trigger) { (batch, id) =>
+      val s = batch.sparkSession
+      graft.llm.Similarity.ivfAppendBatch(s, indexPath, batch,
+        vecCol, idCol, batchId = id + 1)
+      graft.llm.Quantization.ivfPqAppendCodes(s, indexPath, batchId = id + 1)
+    }
 
   /** Attach incremental simhash-index appends to a streaming frame of
     * documents — the third member of the streaming index-maintenance
@@ -202,15 +191,10 @@ object Ingest {
                                 checkpointDir: String, textCol: String, idCol: String,
                                 maxBucketSize: Int = Dedup.DefaultMaxBucketSize,
                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Dedup.simhashAppendBatch(batch.sparkSession, indexPath, id + 1,
-          batch, textCol, idCol, maxBucketSize)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      Dedup.simhashAppendBatch(batch.sparkSession, indexPath, id + 1,
+        batch, textCol, idCol, maxBucketSize)
+    }
 
   /** Attach incremental BM25-index appends to a streaming frame of
     * documents — the fourth member of the streaming index-maintenance
@@ -227,15 +211,10 @@ object Ingest {
   def foreachBatchBm25Append(docs: DataFrame, indexPath: String,
                              checkpointDir: String, textCol: String, idCol: String,
                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Search.bm25AppendBatch(batch.sparkSession, indexPath, batch,
-          textCol, idCol, batchId = id + 1)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Search.bm25AppendBatch(batch.sparkSession, indexPath, batch,
+        textCol, idCol, batchId = id + 1)
+    }
 
   /** Attach incremental LM-model appends to a streaming frame of
     * documents — the language-model member of the streaming
@@ -252,15 +231,10 @@ object Ingest {
   def foreachBatchLmAppend(docs: DataFrame, modelPath: String,
                            checkpointDir: String, textCol: String, idCol: String,
                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.LanguageModel.lmAppendBatch(batch.sparkSession, modelPath,
-          batch, textCol, idCol, batchId = id + 1)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.LanguageModel.lmAppendBatch(batch.sparkSession, modelPath,
+        batch, textCol, idCol, batchId = id + 1)
+    }
 
   /** Attach incremental Naive-Bayes model appends to a streaming frame
     * of LABELED documents — the classifier member of the streaming
@@ -275,15 +249,10 @@ object Ingest {
   def foreachBatchNbAppend(docs: DataFrame, modelPath: String,
                            checkpointDir: String, textCol: String, labelCol: String,
                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Classifier.nbAppendBatch(batch.sparkSession, modelPath,
-          batch, textCol, labelCol, batchId = id + 1)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Classifier.nbAppendBatch(batch.sparkSession, modelPath,
+        batch, textCol, labelCol, batchId = id + 1)
+    }
 
   /** Attach incremental NOVELTY scoring to a streaming frame of
     * documents — the freshness-signal member of the streaming
@@ -301,15 +270,10 @@ object Ingest {
                                 checkpointDir: String, textCol: String, idCol: String,
                                 n: Int = 3,
                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.TextAnalysis.noveltyAppendBatch(batch.sparkSession, indexPath,
-          batch, textCol, idCol, batchId = id + 1, n = n)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.TextAnalysis.noveltyAppendBatch(batch.sparkSession, indexPath,
+        batch, textCol, idCol, batchId = id + 1, n = n)
+    }
 
   /** Attach an INGEST-TIME QUALITY GATE to a streaming frame of
     * documents — the production use of the K15 classifier: every
@@ -336,23 +300,18 @@ object Ingest {
                                  keepLabels: Seq[String],
                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(keepLabels.nonEmpty, "an empty keep set admits nothing — pass the labels to keep")
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val kept = graft.llm.Classifier
-          .nbClassifyIndexed(spark, modelPath, batch, textCol, idCol)
-          .where(col("predicted").isin(keepLabels: _*))
-          .withColumnRenamed("doc", "__doc")
-        batch.join(kept, batch(idCol) === kept("__doc"), "inner")
-          .drop("__doc")
-          .withColumn("__batch", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(corpusDataDir(spark, admittedDir))
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      val spark = batch.sparkSession
+      val kept = graft.llm.Classifier
+        .nbClassifyIndexed(spark, modelPath, batch, textCol, idCol)
+        .where(col("predicted").isin(keepLabels: _*))
+        .withColumnRenamed("doc", "__doc")
+      batch.join(kept, batch(idCol) === kept("__doc"), "inner")
+        .drop("__doc")
+        .withColumn("__batch", lit(id))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch").parquet(corpusDataDir(spark, admittedDir))
+    }
   }
 
   /** Attach a DATA-SKIPPING-MAINTAINED corpus append to a streaming
@@ -374,19 +333,14 @@ object Ingest {
                                checkpointDir: String, statsCols: Seq[String],
                                bloomCols: Seq[String] = Nil,
                                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        batch.withColumn("__batch", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(tablePath)
-        graft.ops.Manifest.refresh(spark, tablePath, statsCols)
-        bloomCols.foreach(c => graft.ops.Manifest.refreshBloom(spark, tablePath, c))
-      }
-      .start()
+    Sinks.startSink(rows, checkpointDir, trigger) { (batch, id) =>
+      val spark = batch.sparkSession
+      batch.withColumn("__batch", lit(id))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch").parquet(tablePath)
+      graft.ops.Manifest.refresh(spark, tablePath, statsCols)
+      bloomCols.foreach(c => graft.ops.Manifest.refreshBloom(spark, tablePath, c))
+    }
 
   /** Attach incremental dedup RESOLUTION to a streaming frame of
     * near-dup pairs — the dedup endgame's streaming twin (round 10 built
@@ -409,15 +363,10 @@ object Ingest {
                           checkpointDir: String, aCol: String, bCol: String,
                           maxIter: Int = 50,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    pairs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Graph.foldBatch(batch.sparkSession, assignmentPath, batch,
-          aCol, bCol, maxIter, batchId = id)
-      }
-      .start()
+    Sinks.startSink(pairs, checkpointDir, trigger) { (batch, id) =>
+      graft.ops.Graph.foldBatch(batch.sparkSession, assignmentPath, batch,
+        aCol, bCol, maxIter, batchId = id)
+    }
 
   /** Attach the ingestion-dedup loop to a streaming frame of documents. */
   def foreachBatchIngestDedup(docs: DataFrame, indexPath: String, admittedDir: String,
@@ -429,16 +378,11 @@ object Ingest {
                               scorer: String = "jaccard",
                               containmentThreshold: Double = 0.9,
                               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestBatch(batch, indexPath, admittedDir, id, textCol, idCol,
-          shingleN, k, bands, threshold, maxBucketSize, exactGuard,
-          scorer, containmentThreshold)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      ingestBatch(batch, indexPath, admittedDir, id, textCol, idCol,
+        shingleN, k, bands, threshold, maxBucketSize, exactGuard,
+        scorer, containmentThreshold)
+    }
 
   /** ONE COMPOSED INGEST TURN — the production intake shape: each
     * micro-batch runs quality gate → LSH near-dedup (vs-index +
@@ -631,18 +575,13 @@ object Ingest {
                                  scorer: String = "jaccard",
                                  containmentThreshold: Double = 0.9,
                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        curateBatch(batch, id, modelPath, keepLabels, indexPath, admittedDir,
-          noveltyPath, textCol, idCol, shingleN, k, bands, threshold,
-          maxBucketSize, statsCols, bloomCols, mixStatePath, sourceCol,
-          tokenBudget, sourceCap, cardPath, driftTarget,
-          scorer, containmentThreshold)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      curateBatch(batch, id, modelPath, keepLabels, indexPath, admittedDir,
+        noveltyPath, textCol, idCol, shingleN, k, bands, threshold,
+        maxBucketSize, statsCols, bloomCols, mixStatePath, sourceCol,
+        tokenBudget, sourceCap, cardPath, driftTarget,
+        scorer, containmentThreshold)
+    }
 
   /** Attach the K12 STREAMING ADMISSION GATE to a document stream —
     * per-batch token-budget / per-source-cap admission against
@@ -659,15 +598,10 @@ object Ingest {
                           textCol: String, idCol: String, sourceCol: String,
                           tokenBudget: Long, sourceCap: Long,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Mixing.mixGateBatch(batch.sparkSession, statePath, batch,
-          textCol, idCol, sourceCol, id, tokenBudget, sourceCap, admittedDir)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Mixing.mixGateBatch(batch.sparkSession, statePath, batch,
+        textCol, idCol, sourceCol, id, tokenBudget, sourceCap, admittedDir)
+    }
 
   /** Attach the DRIFT MONITOR to a streaming frame of documents (round
     * 13): each micro-batch folds its O(groups × bins) bin-count summary
@@ -686,15 +620,10 @@ object Ingest {
                                   binCol: org.apache.spark.sql.Column,
                                   nBins: Int = 10,
                                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Drift.accumulate(batch.sparkSession, statePath, batch,
-          groupCol, binCol, nBins, batchId = id)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Drift.accumulate(batch.sparkSession, statePath, batch,
+        groupCol, binCol, nBins, batchId = id)
+    }
 
   /** [[foreachBatchDriftAccumulate]] for a PINNED-EDGE quantile drift
     * state (round 14): each micro-batch bins `valueCol` with the edges
@@ -709,15 +638,10 @@ object Ingest {
                                 checkpointDir: String, groupCol: String,
                                 valueCol: org.apache.spark.sql.Column,
                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Drift.quantileAccumulate(batch.sparkSession, statePath,
-          batch, groupCol, valueCol, batchId = id)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Drift.quantileAccumulate(batch.sparkSession, statePath,
+        batch, groupCol, valueCol, batchId = id)
+    }
 
   /** Attach the WEIGHTED RESERVOIR to a streaming frame (round 13): each
     * micro-batch folds its local A-res top-k into the generation-swapped
@@ -730,15 +654,10 @@ object Ingest {
                             checkpointDir: String, idCol: String,
                             weight: org.apache.spark.sql.Column, k: Int,
                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.TextAnalysis.reservoirFold(batch.sparkSession, statePath,
-          batch, idCol, weight, k)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, _) =>
+      graft.llm.TextAnalysis.reservoirFold(batch.sparkSession, statePath,
+        batch, idCol, weight, k)
+    }
 
   /** Attach the PER-STRATUM weighted reservoir to a streaming frame
     * (round 14): each micro-batch folds its per-stratum A-res top-k
@@ -753,15 +672,10 @@ object Ingest {
                                       stratumCol: String,
                                       weight: org.apache.spark.sql.Column, k: Int,
                                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.TextAnalysis.stratifiedReservoirFold(batch.sparkSession,
-          statePath, batch, idCol, stratumCol, weight, k)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, _) =>
+      graft.llm.TextAnalysis.stratifiedReservoirFold(batch.sparkSession,
+        statePath, batch, idCol, stratumCol, weight, k)
+    }
 
   /** Attach LIVE RETRACTION to a stream of removal ids — the delete
     * side of the ingest lifecycle (the natural upstream is a CDC delete
@@ -777,15 +691,10 @@ object Ingest {
   def foreachBatchIndexRetract(removedIds: DataFrame, indexPath: String,
                                checkpointDir: String, idCol: String,
                                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    removedIds.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Dedup.retractFromIndex(batch.sparkSession, indexPath,
-          batch, idCol, retractionId = id)
-      }
-      .start()
+    Sinks.startSink(removedIds, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Dedup.retractFromIndex(batch.sparkSession, indexPath,
+        batch, idCol, retractionId = id)
+    }
 
   /** Where a composed delete turn fans out — every index, model, and
     * store a [[curateBatch]]-style intake maintains, each optional so
@@ -1002,15 +911,10 @@ object Ingest {
                                   idCol: String, labelCol: String = null,
                                   shingleN: Int = 3,
                                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    removedDocs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        retractEverywhere(batch.sparkSession, batch, retractionId = id + 1,
-          targets, textCol, idCol, labelCol, shingleN)
-      }
-      .start()
+    Sinks.startSink(removedDocs, checkpointDir, trigger) { (batch, id) =>
+      retractEverywhere(batch.sparkSession, batch, retractionId = id + 1,
+        targets, textCol, idCol, labelCol, shingleN)
+    }
 
   /** Where a composed MAINTENANCE turn fans out — every state a
     * [[curateBatch]]-style intake accumulates and a
@@ -1324,17 +1228,12 @@ object Ingest {
                                 n: Int = 3, threshold: Double = 0.5,
                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val benchGrams = graft.llm.Decontaminate.benchGramSet(bench, textCol, idCol, n)
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.llm.Decontaminate
-          .cleanAgainstGrams(batch, benchGrams, textCol, idCol, n, threshold)
-          .withColumn("__batch", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(outDir)
-      }
-      .start()
+    Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
+      graft.llm.Decontaminate
+        .cleanAgainstGrams(batch, benchGrams, textCol, idCol, n, threshold)
+        .withColumn("__batch", lit(id))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch").parquet(outDir)
+    }
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, St
   *
   * Target layout: parquet partitioned by a hash bucket of the key
   * (`__kb`), so each micro-batch rewrites ONLY the buckets it touches
-  * (dynamic partition overwrite) and reads back only those buckets
+  * (one staged bucket commit) and reads back only those buckets
   * (partition-pruned scan) — at 100 TB the per-batch cost is proportional
   * to the touched working set, not the table. On a lakehouse table format
   * this whole function is a single MERGE INTO; plain parquet needs the
@@ -130,8 +130,9 @@ object Sinks {
   }
 
   /** Enforce the schema contract for one upsert batch against the
-    * table's schema `table` (the pin, else the nullable footer schema;
-    * None on a fresh table): returns the (possibly widened) table schema
+    * table's schema `table` (the pin, else the nullable footer schema,
+    * or the clustered sink's nullable catalog schema; None on a fresh
+    * table): returns the (possibly widened) table schema
     * to read existing buckets with, and whether the pin must be
     * rewritten after the data write. Nullability is forced — every
     * stored column is nullable once a widening can backfill nulls.
@@ -248,6 +249,7 @@ object Sinks {
                        bucketCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val fs = fsOf(spark, targetDir)
+    finishCommit(fs, targetDir)
     // LAZY (r18): the count is one full batch pass, but it's only needed
     // when auto-sizing fires (first write with nBuckets=0) or a schema
     // event records its triggering volume — the steady path (pinned
@@ -255,8 +257,7 @@ object Sinks {
     lazy val batchRows = batch.count()
     val layoutCols = resolveBucketCols(fs, targetDir, keyCols, bucketCols)
     val n = resolvePinnedBuckets(fs, targetDir, nBuckets, batchRows)
-    val tableExists =
-      fs.exists(new Path(targetDir, "_SUCCESS")) || hasBucketDirs(fs, targetDir)
+    val tableExists = hasBucketDirs(fs, targetDir)
     // what the table believed before this batch — the B17 history event's
     // old side (pin sidecar, else the footer schema of the live table);
     // the pin is read once per batch
@@ -300,61 +301,58 @@ object Sinks {
           .parquet(targetDir).where(col("__kb").isin(touched: _*)))
       else None
     val all = existing.map(_.unionByName(b, allowMissingColumns = true)).getOrElse(b)
-    val merged = latestByKeyAligned(all, keyCols, versionCol)
-    if (existing.isDefined)
-      // r20 (guide §5/§2.4): stage-and-swap instead of
-      // localCheckpoint + same-dir dynamic overwrite. The checkpoint
-      // existed only to sever the self-overwrite hazard, but it cost a
-      // whole extra pass per micro-batch: one job computing the merge
-      // into the block cache, a second job re-reading the cache to
-      // encode parquet. Writing the merge to a staging dir (a different
-      // path — no hazard, nothing to sever) computes and encodes it in
-      // ONE job; the driver then swaps each staged bucket dir into
-      // place, metadata-only renames on the same FS.
-      swapBucketDirsIntoTable(fs, targetDir, merged)
-    else
-      merged.write.mode("overwrite")
-        // per-write option, NOT a session conf: scoping it here means other
-        // overwrite-partitionBy writes on the same session keep Spark's
-        // static default (truncate untouched partitions) instead of
-        // silently inheriting dynamic mode
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__kb").parquet(targetDir)
+    commitBuckets(fs, targetDir, latestByKeyAligned(all, keyCols, versionCol))
     // the pin moves AFTER the data lands: a crash in between re-detects
     // the same widening next batch and rewrites the same content
     if (repin) recordPin()
   }
 
-  /** Overwrite exactly the `__kb=` bucket dirs present in `df` — the
-    * dynamic-partition-overwrite contract — WITHOUT materializing `df`
-    * first (r20, guide §5): the rows land in one Spark write job under
-    * the underscore-prefixed `_graft_stage` dir (invisible to every
-    * parquet scan of the table, like `_SUCCESS` and the sidecars), then
-    * each staged bucket dir is renamed into place. Reading the table
-    * while writing elsewhere carries no self-overwrite hazard, so the
-    * eager localCheckpoint this replaces (one extra whole-table-working-
-    * set materialization per micro-batch: cache write + cache read) is
-    * not needed. Crash windows are the same class as Spark's own
-    * dynamic-overwrite job commit: a kill mid-swap leaves some buckets
-    * new and some old, and the replayed batch's latest-wins merge
-    * re-applies idempotently (a leftover stage dir is cleared here
-    * before the next write). The root `_SUCCESS` marker advances after
-    * the swap, keeping parity with the Spark-committed path.
+  private val StageDir = "_graft_stage"
+
+  /** The directory sinks' one bucket commit: overwrite exactly the
+    * `__kb=` bucket dirs present in `rows`. Every bucket write — the
+    * upsert and rollup merges (first writes included), the truncate
+    * rewrite and [[compact]] — goes through here. Spark writes `rows` in
+    * one job under the underscore-prefixed `_graft_stage` dir (invisible
+    * to every parquet scan of the table, like the sidecars), so reading
+    * the table while writing carries no self-overwrite hazard; its job
+    * commit writes the stage's `_SUCCESS`, which marks the stage
+    * complete. [[finishCommit]] then promotes the staged buckets.
     */
-  private def swapBucketDirsIntoTable(fs: FileSystem,
-                                      targetDir: String, df: DataFrame): Unit = {
-    val stage = new Path(targetDir, "_graft_stage")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    df.write.mode("overwrite").partitionBy("__kb").parquet(stage.toString)
-    fs.listStatus(stage).filter(_.getPath.getName.startsWith("__kb="))
-      .foreach { st =>
+  private def commitBuckets(fs: FileSystem, targetDir: String, rows: DataFrame): Unit = {
+    val stage = new Path(targetDir, StageDir)
+    rows.write.mode("overwrite").partitionBy("__kb").parquet(stage.toString)
+    // a session in dynamic partition-overwrite mode, or a committer that
+    // writes no success marker, leaves a stage finishCommit can only drop
+    if (!finishCommit(fs, targetDir))
+      throw new IllegalStateException(s"the write into $stage left no _SUCCESS marker: " +
+        "the bucket commit needs static partition overwrite and the committer's marker")
+  }
+
+  /** Finish whatever bucket commit the stage holds. A complete stage
+    * (its `_SUCCESS` present) wins: each staged `__kb=` dir replaces the
+    * live one (delete, then rename into place), then the stage goes. A
+    * stage without `_SUCCESS` was never complete and is simply deleted.
+    * This is [[graft.ops.StateFiles]]' replace applied to directories,
+    * and it is idempotent, so a crash anywhere in a commit is rolled
+    * forward by the next sink call — which runs this before its first
+    * read of the table, so a replayed batch never reads a bucket the
+    * crash left missing. Readers that race a promote can still see a
+    * bucket missing for the length of one rename. Returns whether the
+    * stage was complete.
+    */
+  private def finishCommit(fs: FileSystem, targetDir: String): Boolean = {
+    val stage = new Path(targetDir, StageDir)
+    val complete = fs.exists(new Path(stage, "_SUCCESS"))
+    if (complete)
+      fs.listStatus(stage).filter(_.getPath.getName.startsWith("__kb=")).foreach { st =>
         val dest = new Path(targetDir, st.getPath.getName)
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.rename(st.getPath, dest)
+        fs.delete(dest, true)
+        if (!fs.rename(st.getPath, dest))
+          throw new java.io.IOException(s"could not promote ${st.getPath} to $dest")
       }
     fs.delete(stage, true)
-    val ok = fs.create(new Path(targetDir, "_SUCCESS"), true)
-    ok.close()
+    complete
   }
 
   /** The upsert merge, keyed for the table LAYOUT (r19 optimization
@@ -367,7 +365,7 @@ object Sinks {
     * HashPartitioning(__kb) satisfies the window's
     * ClusteredDistribution(__kb :: keyCols) (partitioning ⊆ clustering),
     * so Catalyst plans exactly ONE exchange — and every task then holds
-    * whole buckets, so the dynamic overwrite lands ~one file per touched
+    * whole buckets, so the bucket commit lands ~one file per touched
     * bucket instead of one per (merge-shuffle task × bucket): before
     * this, a lineitem-style layout (bucketCols ⊂ keyCols, hashes
     * unaligned) fragmented every micro-batch rewrite into up to
@@ -402,10 +400,11 @@ object Sinks {
       applyUpsertBatch(batch, targetDir, keyCols, versionCol, nBuckets, bucketCols)
     }
 
-  /** The `writeStream … foreachBatch … start()` scaffold every sink here
-    * attaches through: append mode, the caller's trigger and checkpoint.
+  /** The `writeStream … foreachBatch … start()` scaffold every sink in
+    * this package attaches through: append mode, the caller's trigger
+    * and checkpoint.
     */
-  private def startSink(changes: DataFrame, checkpointDir: String, trigger: Trigger)
+  private[streaming] def startSink(changes: DataFrame, checkpointDir: String, trigger: Trigger)
                        (apply: (DataFrame, Long) => Unit): StreamingQuery =
     changes.writeStream
       .outputMode("append")
@@ -432,8 +431,8 @@ object Sinks {
     * bound it: a per-partition (min, max) version scan (one column-pruned
     * pass, collected bounded by the layout's partition count) classifies
     * each `__kb` dir as untouched (min outlives the cutoff), wholly dead
-    * (max doesn't — the dir is deleted outright; dynamic overwrite cannot
-    * delete a partition absent from its output), or mixed (rewritten
+    * (max doesn't — the dir is deleted outright; the bucket commit
+    * cannot delete a bucket absent from its output), or mixed (rewritten
     * without its dead rows). A replayed batch (foreachBatch is
     * at-least-once) recomputes the same survivor set — both steps are
     * idempotent.
@@ -476,16 +475,13 @@ object Sinks {
           .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getBoolean(2)))
         val toRewrite = spans.collect { case (kb, true, false) => kb }
         if (toRewrite.nonEmpty) {
-          // stage-and-swap severs the read-before-overwrite hazard like
-          // every rewrite here, without the extra materialization pass
-          val kept = cur
+          commitBuckets(fs, targetDir, cur
             .where(col("__kb").isin(toRewrite.toIndexedSeq: _*) &&
               col(versionCol) > t)
-            .repartition(col("__kb"))
-          swapBucketDirsIntoTable(fs, targetDir, kept)
+            .repartition(col("__kb")))
         }
-        // fully-dead partitions: dynamic overwrite cannot DELETE a
-        // partition absent from its output — remove their dirs outright
+        // fully-dead partitions: the bucket commit only replaces buckets
+        // present in its output — remove their dirs outright
         spans.collect { case (kb, _, true) => kb }
           .foreach(kb => fs.delete(new Path(targetDir, s"__kb=$kb"), true))
       }
@@ -589,16 +585,18 @@ object Sinks {
     * data write and the sidecar write re-applied the batch permanently
     * and undetectably) — the sidecar remains only as a read-free fast
     * path for the common already-applied case. The bucket writes
-    * themselves go through Spark's job commit, so a crash MID-write
-    * leaves each touched bucket either old (guard misses → replay
-    * re-merges it) or new (guard hits → replay skips it); either way the
-    * replayed batch folds into each bucket exactly once.
+    * themselves go through [[commitBuckets]], whose interrupted commit
+    * the replay finishes before reading, so each touched bucket is
+    * either old (guard misses → replay re-merges it) or new (guard hits
+    * → replay skips it); either way the replayed batch folds into each
+    * bucket exactly once.
     */
   def applyRollupBatch(batch: DataFrame, targetDir: String, keyCols: Seq[String],
                        valueCol: String, nBuckets: Int = 0,
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     val fs = fsOf(spark, targetDir)
+    finishCommit(fs, targetDir)
     def recordBatch(): Unit =
       batchId.foreach(id => writeSidecar(fs, targetDir, LastBatchFile, id.toString))
     if (batchId.exists(id =>
@@ -636,7 +634,7 @@ object Sinks {
       val live = touched.filterNot(applied)
       if (live.isEmpty) { recordBatch(); return }
       // already-applied buckets are excluded from BOTH sides: their dirs are
-      // simply not in the output, and dynamic overwrite leaves them untouched
+      // simply not in the output, and the bucket commit leaves them untouched
       val bLive = b.where(col("__kb").isin(live: _*))
       val exLive = existing.map(_.where(col("__kb").isin(live: _*)))
       val all = exLive.map(_.unionByName(bLive)).getOrElse(bLive)
@@ -651,14 +649,7 @@ object Sinks {
         .agg(sum(col("cnt")).as("cnt"),
           sum(col("sum_val")).cast("decimal(18,6)").as("sum_val"),
           max(col("__bid")).as("__bid"))
-      if (existing.isDefined)
-        // stage-and-swap severs the self-overwrite hazard without the
-        // checkpointed extra materialization pass (see the upsert path)
-        swapBucketDirsIntoTable(fs, targetDir, merged)
-      else
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__kb").parquet(targetDir)
+      commitBuckets(fs, targetDir, merged)
       recordBatch()
     } finally existing.foreach(_.unpersist(false))
   }
@@ -683,17 +674,15 @@ object Sinks {
     * the recovery path for buckets fragmented by OTHER writers (or by
     * pre-r19 binaries, whose merges emitted one file per shuffle task ×
     * bucket). Compacting rewrites each bucket as ONE file (the shuffle
-    * key is the bucket column, so a task holds whole buckets). Dynamic
-    * overwrite replaces only `__kb=*` directories — the `_graft_buckets`
-    * layout pin survives; readers see either the old or the new files,
-    * never a mix, because the checkpoint severs the
-    * read-before-overwrite hazard the same way the batch path does.
+    * key is the bucket column, so a task holds whole buckets) through
+    * [[commitBuckets]], which replaces only `__kb=*` directories — the
+    * `_graft_buckets` layout pin survives.
     */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    // stage-and-swap: one pass (read + re-cluster + encode) instead of a
-    // checkpointed materialization followed by a cache re-read (r20)
-    swapBucketDirsIntoTable(fsOf(spark, targetDir), targetDir,
-      readPinned(spark, targetDir).repartition(col("__kb")))
+  def compact(spark: SparkSession, targetDir: String): Unit = {
+    val fs = fsOf(spark, targetDir)
+    finishCommit(fs, targetDir)
+    commitBuckets(fs, targetDir, readPinned(spark, targetDir).repartition(col("__kb")))
+  }
 
   /** Read the table through its pinned schema when one exists — buckets
     * written before a widening then read their missing columns as null
@@ -786,39 +775,25 @@ object Sinks {
       require(props.get("graft.keyCols").contains(keyCols.mkString(",")),
         s"table $table merges on keyCols=${props.get("graft.keyCols")
           .getOrElse("?")}; got ${keyCols.mkString(",")}")
-      // the catalog is the pinned schema: widen on added columns,
-      // refuse narrowing/type changes — each decision a B17 event
+      // the catalog is the pinned schema: the dir sink's contract
+      // (widen on added columns, refuse narrowing/type changes), each
+      // decision a B17 event
       val ts = StructType(
         spark.table(table).schema.fields.filterNot(_.name == "__kb"))
-      val bByName = batch.schema.fields.map(f => f.name -> f).toMap
-      def refuse(msg: String): Nothing = {
-        graft.cdc.SchemaHistory.append(spark, tableLocation(spark, table),
-          "refuse", Some(ts), Some(batch.schema), Some(batchRows))
-        throw new IllegalArgumentException(msg)
-      }
-      val missing = ts.fields.map(_.name).filterNot(bByName.contains)
-      if (missing.nonEmpty)
-        refuse(s"clustered upsert batch is missing table columns " +
-          s"${missing.mkString(", ")} at $table — NARROWING is " +
-          "restart-level DDL")
-      val clashes = ts.fields.flatMap { f =>
-        bByName.get(f.name).filter(_.dataType != f.dataType)
-          .map(bf => s"${f.name}: table ${f.dataType.simpleString} vs " +
-            s"batch ${bf.dataType.simpleString}")
-      }
-      if (clashes.nonEmpty)
-        refuse(s"clustered upsert batch changes column types at $table — " +
-          s"${clashes.mkString("; ")}: type changes are restart-level DDL")
-      val newCols = batch.schema.fields
-        .filterNot(f => ts.fieldNames.contains(f.name))
-      if (newCols.nonEmpty) {
-        val adds = newCols.map(f => s"${f.name} ${f.dataType.sql}")
-          .mkString(", ")
+      val (widened, widen) =
+        try resolveSchema(table, batch.schema, Some(nullable(ts)))
+        catch {
+          case e: IllegalArgumentException =>
+            graft.cdc.SchemaHistory.append(spark, tableLocation(spark, table),
+              "refuse", Some(ts), Some(batch.schema), Some(batchRows))
+            throw e
+        }
+      if (widen) {
+        val adds = widened.fields.drop(ts.length)
+          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
         spark.sql(s"ALTER TABLE $table ADD COLUMNS ($adds)")
         graft.cdc.SchemaHistory.append(spark, tableLocation(spark, table),
-          "widen", Some(ts),
-          Some(StructType(ts.fields ++ newCols)),
-          Some(batchRows))
+          "widen", Some(ts), Some(widened), Some(batchRows))
       }
     }
     val b = batch.withColumn("__kb",
@@ -832,8 +807,8 @@ object Sinks {
     // writes ~one file per (touched __kb dir × bucket) instead of one
     // per (merge-shuffle task × dir × bucket)
     val merged0 = latestByKeyAligned(existing.unionByName(b), keyCols, versionCol)
-    // sever the read-before-overwrite hazard exactly as the dir sink
-    // does — except on the batch that just CREATED the (empty) table,
+    // sever the read-before-overwrite hazard (the dir sink writes to a
+    // stage instead) — except on the batch that just CREATED the (empty) table,
     // whose scan matches zero files (r19: skip the extra pass)
     val merged = (if (freshTable) merged0 else merged0.localCheckpoint(true))
       .select(tableCols.map(col): _*) // insertInto matches positionally
@@ -972,7 +947,7 @@ object Sinks {
     * (partition, bucket) — the catalog's bucket spec is metadata and
     * survives untouched, so the exchange-free join contract holds
     * before and after. The checkpoint severs the read-before-overwrite
-    * hazard exactly like the batch path and the dir sink's [[compact]].
+    * hazard exactly like the batch path.
     */
   def compactClustered(spark: SparkSession, table: String): Unit = {
     val tableCols = spark.table(table).columns

@@ -318,4 +318,23 @@ class ClusteredSinkSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
+
+  test("an encoder-built array<int> batch lands twice: nullability is not a type change") {
+    val t = freshTable()
+    // the encoder builds array<int> with containsNull = false; the
+    // catalog stores the column as containsNull = true
+    def tagged(v: Long) = Seq((1L, 10L, Seq(1, 2), "u", v), (2L, 20L, Seq(3), "u", v))
+      .toDF("k", "sub", "tags", "op", "__v")
+    Sinks.applyUpsertBatchClustered(tagged(1L), t, Seq("k", "sub"), "__v",
+      Seq("k"), nBuckets = 4, nKbParts = 2)
+    Sinks.applyUpsertBatchClustered(tagged(2L), t, Seq("k", "sub"), "__v",
+      Seq("k"), nBuckets = 4, nKbParts = 2)
+    assert(Sinks.currentStateClustered(spark, t).select("k", "tags", "__v")
+      .as[(Long, Seq[Int], Long)].collect().toSet ===
+      Set((1L, Seq(1, 2), 2L), (2L, Seq(3), 2L)))
+    val ev = graft.cdc.SchemaHistory.read(spark, Sinks.tableLocation(spark, t))
+      .select("action").collect().map(_.getString(0)).toSeq
+    assert(ev === Seq("pin"), "the second batch neither widens nor refuses")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
 }

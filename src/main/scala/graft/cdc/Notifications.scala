@@ -249,15 +249,13 @@ object Notifications {
         }
         .sortBy(_.getName)
         .map { p =>
-          val in = fs.open(p)
-          val txt = try new String(
-            org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-          finally in.close()
-          val n = mapper.readTree(txt)
-          def str(f: String) = Option(n.get(f)).map(_.asText()).orNull
-          def lng(f: String) = Option(n.get(f)).map(_.asLong())
-          (n.get("seq").asLong(), n.get("ts_ms").asLong(), str("type"),
-            str("collection"), lng("chunks_landed"), lng("rows_landed"))
+          StateFiles.read(fs, p) { txt =>
+            val n = mapper.readTree(txt)
+            def str(f: String) = Option(n.get(f)).map(_.asText()).orNull
+            def lng(f: String) = Option(n.get(f)).map(_.asLong())
+            (n.get("seq").asLong(), n.get("ts_ms").asLong(), str("type"),
+              str("collection"), lng("chunks_landed"), lng("rows_landed"))
+          }.getOrElse(throw new java.io.FileNotFoundException(s"listed event file is gone: $p"))
         }.toSeq
     events.toDF("seq", "ts_ms", "type", "collection",
       "chunks_landed", "rows_landed")

@@ -156,17 +156,14 @@ object SchemaHistory {
                            nRows: Option[Long])
 
   private def parseEvent(fs: org.apache.hadoop.fs.FileSystem,
-                         p: Path): Event = {
-    val in = fs.open(p)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    finally in.close()
-    val n = mapper.readTree(txt)
-    def str(f: String) = Option(n.get(f)).map(_.asText()).orNull
-    Event(n.get("seq").asLong(), n.get("ts_ms").asLong(), str("action"),
-      str("old_schema"), str("new_schema"),
-      Option(n.get("n_rows")).map(_.asLong()))
-  }
+                         p: Path): Event =
+    StateFiles.read(fs, p) { txt =>
+      val n = mapper.readTree(txt)
+      def str(f: String) = Option(n.get(f)).map(_.asText()).orNull
+      Event(n.get("seq").asLong(), n.get("ts_ms").asLong(), str("action"),
+        str("old_schema"), str("new_schema"),
+        Option(n.get("n_rows")).map(_.asLong()))
+    }.getOrElse(throw new java.io.FileNotFoundException(s"listed event file is gone: $p"))
 
   /** The log's current VISIBLE rows: the newest checkpoint (if any)
     * followed by the per-event files with seq past it. Per-event files

@@ -356,14 +356,13 @@ object Classifier {
     val root = new Path(path)
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, CountsBase)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, CountsBase)
-    spark.read.parquet(cur.toString)
-      .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
-      .where(col("c") =!= 0L) // retraction-cancelled rows bake away
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, CountsBase, gen)
-    graft.ops.Generations.gcOld(fs, root, CountsBase)
+    graft.ops.Generations.swap(fs, root, CountsBase) { staged =>
+      spark.read.parquet(cur.toString)
+        .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
+        .where(col("c") =!= 0L) // retraction-cancelled rows bake away
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+    }
   }
 
   /** RETRAIN the persisted model from scratch on `docs` under ONE
@@ -381,12 +380,11 @@ object Classifier {
     require(fs.exists(new Path(countsDir(spark, path))),
       s"no NB model at $path — nbRetrain replaces an existing model; " +
         "use nbWrite for the initial build")
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, CountsBase)
-    nbTrain(docs, textCol, labelCol)
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, CountsBase, gen)
-    graft.ops.Generations.gcOld(fs, root, CountsBase)
+    graft.ops.Generations.swap(fs, root, CountsBase) { staged =>
+      nbTrain(docs, textCol, labelCol)
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+    }
   }
 
   /** The maintenance-policy shape for the NB model — fragmentation-only,
@@ -413,9 +411,6 @@ object Classifier {
     val fs = fsOf(spark, path)
     val root = new Path(countsDir(spark, path))
     require(fs.exists(root), s"no NB model at $path — run nbWrite first")
-    fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("__batch="))
-      .map(_.stripPrefix("__batch=").toLong)
-      .distinct.sorted.toSeq
+    graft.ops.Generations.batchIds(fs, root)
   }
 }

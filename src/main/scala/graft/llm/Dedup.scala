@@ -500,10 +500,8 @@ object Dedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def hasData(dir: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir)
-      fs.exists(p) && fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        n.startsWith("__batch=") || n.endsWith(".parquet")
-      }
+      graft.ops.Generations.batchIds(fs, p).nonEmpty ||
+        fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
     }
     // enforce the layout precondition rather than corrupt: appending
     // __batch= partitions into a static (root-file) index would leave a
@@ -512,7 +510,7 @@ object Dedup {
       def static(dir: String): Boolean = {
         val p = new org.apache.hadoop.fs.Path(dir)
         fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")) &&
-          !fs.listStatus(p).exists(_.getPath.getName.startsWith("__batch="))
+          graft.ops.Generations.batchIds(fs, p).isEmpty
       }
       // check BOTH halves: a fully-capped static write leaves sigs/ with
       // root files while buckets/ is empty — appending would still corrupt
@@ -659,36 +657,24 @@ object Dedup {
       .agg(count(lit(1)).as("__bw")).where(col("__bw") > maxBucketSize)
       .select(col("band"), col("key"))
     val kept = b.join(wide, Seq("band", "key"), "left_anti")
-    swapGeneration(fs, root, "buckets",
-      if (kept.columns.contains("__batch")) kept.withColumn("__batch", lit(0L)) else kept)
+    // a batch-partitioned frame folds into `__batch=0`; a flat one stays flat
+    def fold(out: DataFrame)(staged: org.apache.hadoop.fs.Path): Unit =
+      (if (out.columns.contains("__batch"))
+        out.withColumn("__batch", lit(0L)).write.mode("overwrite").partitionBy("__batch")
+      else out.write.mode("overwrite")).parquet(staged.toString)
+    graft.ops.Generations.swap(fs, root, "buckets")(fold(kept))
     // MinHash sigs: fold the per-batch fragments too (no width pass —
     // sigs are verification payload, the cap is a bucket concern)
     val sigsCur = graft.ops.Generations.currentDir(fs, root, "sigs")
     if (fs.exists(sigsCur)) {
       val s = dropRemoved(spark.read.parquet(sigsCur.toString), removed, "id")
-      if (s.columns.contains("__batch"))
-        swapGeneration(fs, root, "sigs", s.withColumn("__batch", lit(0L)))
-      else if (removed.isDefined)
-        swapGeneration(fs, root, "sigs", s)
+      if (s.columns.contains("__batch") || removed.isDefined)
+        graft.ops.Generations.swap(fs, root, "sigs")(fold(s))
     }
     // tombstones are now baked into the committed generations — clear
     // them (a crash mid-delete leaves no-op tombstones for ids that are
     // already gone; readers stay correct at every point)
     if (removed.isDefined) graft.ops.Tombstones.clear(spark, path)
-  }
-
-  /** Stage → write → commit → GC one generation swap (the write is
-    * partitioned by `__batch` when the frame carries it).
-    */
-  private def swapGeneration(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path, base: String,
-                             out: DataFrame): Unit = {
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, base)
-    val w = out.write.mode("overwrite")
-    (if (out.columns.contains("__batch")) w.partitionBy("__batch") else w)
-      .parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, base, gen)
-    graft.ops.Generations.gcOld(fs, root, base)
   }
 
   /** ONE maintenance entry point for the text-similarity indexes (LSH
@@ -711,8 +697,7 @@ object Dedup {
     require(fs.exists(root), s"no index at $path — build it first")
     // __batch partition-directory names — an FS listing, no Spark job
     // (a flat pre-batch layout counts as one batch)
-    val live = fs.listStatus(root).map(_.getPath.getName)
-      .count(_.startsWith("__batch=")).max(1)
+    val live = graft.ops.Generations.batchIds(fs, root).size.max(1)
     // pending tombstones are the second degradation (round 13): every
     // read anti-joins them until a compaction bakes them physically —
     // and baking them is what re-opens their ids for ingest
@@ -1187,7 +1172,7 @@ object Dedup {
     val bRoot = new org.apache.hadoop.fs.Path(bucketsDir(spark, path))
     val fs = bRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(bRoot), s"no simhash index at $path — run simhashIndexWrite first")
-    require(fs.listStatus(bRoot).exists(_.getPath.getName.startsWith("__batch=")),
+    require(graft.ops.Generations.batchIds(fs, bRoot).nonEmpty,
       s"$bRoot is not the batch-partitioned layout: rebuild with simhashIndexWrite " +
         "before appending")
     val banded = simhashBandedRows(newDf, textCol, idCol, bits, maxHamming).persist()

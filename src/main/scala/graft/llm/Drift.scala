@@ -119,24 +119,14 @@ object Drift {
     graft.ops.Generations.currentDir(fsOf(spark, path),
       new org.apache.hadoop.fs.Path(path), CurBase).toString
 
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-
   /** Highest `__batch` id [[driftCompact]] has folded into the current
     * generation's `__batch=0` — None if never compacted. Lives inside
     * the generation dir, so it rides the same crash-atomic swap.
     */
   private def compactWatermark(spark: org.apache.spark.sql.SparkSession,
                                path: String): Option[Long] =
-    readMarker(fsOf(spark, path), new org.apache.hadoop.fs.Path(
-      curDir(spark, path), CompactWatermarkFile)).map(_.toLong)
+    graft.ops.StateFiles.read(fsOf(spark, path), new org.apache.hadoop.fs.Path(
+      curDir(spark, path), CompactWatermarkFile))(_.toLong)
 
   /** Retraction ids [[driftCompact]] already netted into the folded
     * counts — excluded at read until the (post-commit) tombstone clear
@@ -144,9 +134,8 @@ object Drift {
     */
   private def foldedRetIds(spark: org.apache.spark.sql.SparkSession,
                            path: String): Set[Long] =
-    readMarker(fsOf(spark, path), new org.apache.hadoop.fs.Path(
-      curDir(spark, path), FoldedRetFile))
-      .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
+    graft.ops.StateFiles.read(fsOf(spark, path), new org.apache.hadoop.fs.Path(
+      curDir(spark, path), FoldedRetFile))(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
       .getOrElse(Set.empty)
 
   /** The CURRENT reference directory — generation-resolved (round 14):
@@ -159,11 +148,9 @@ object Drift {
       new org.apache.hadoop.fs.Path(path), RefBase).toString
 
   private[graft] def hasAccumulated(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(curDir(spark, path))
-    val fs = fsOf(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("__batch="))
-  }
+                                    path: String): Boolean =
+    graft.ops.Generations.batchIds(fsOf(spark, path),
+      new org.apache.hadoop.fs.Path(curDir(spark, path))).nonEmpty
 
   /** Pin the reference distribution: the bin counts of the slice the
     * gates were tuned on. Overwrite-idempotent; a FRESH pin — any
@@ -488,10 +475,9 @@ object Drift {
     val live = liveCounts(spark, path)
     val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, RefBase)
-    live.write.mode("overwrite").parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, RefBase, gen)
-    graft.ops.Generations.gcOld(fs, root, RefBase)
+    graft.ops.Generations.swap(fs, root, RefBase) { staged =>
+      live.write.mode("overwrite").parquet(staged.toString)
+    }
   }
 
   /** The live accumulated (g, b, c) counts — cur + retractions summed,
@@ -555,33 +541,24 @@ object Drift {
     val root = new org.apache.hadoop.fs.Path(path)
     // highest live batch id BEFORE the fold — the new watermark
     val curP = new org.apache.hadoop.fs.Path(curDir(spark, path))
-    val topBatch = fs.listStatus(curP).map(_.getPath.getName)
-      .filter(_.startsWith("__batch="))
-      .map(_.stripPrefix("__batch=").toLong)
-      .max
+    val topBatch = graft.ops.Generations.batchIds(fs, curP).max
     val wm = math.max(topBatch, compactWatermark(spark, path).getOrElse(0L))
     val retP = new org.apache.hadoop.fs.Path(retDir(path))
-    val retIds: Seq[Long] =
-      if (!fs.exists(retP)) Nil
-      else fs.listStatus(retP).map(_.getPath.getName).toSeq
-        .filter(_.startsWith("__batch="))
-        .map(_.stripPrefix("__batch=").toLong).sorted
+    val retIds = graft.ops.Generations.batchIds(fs, retP)
     val live = liveCounts(spark, path) // cur + unfolded ret, netted, guarded
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, CurBase)
-    live.withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
-    def marker(name: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(staged, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
+    graft.ops.Generations.swap(fs, root, CurBase) { staged =>
+      live.withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.StateFiles.replace(fs,
+        new org.apache.hadoop.fs.Path(staged, CompactWatermarkFile), wm.toString.getBytes("UTF-8"))
+      if (retIds.nonEmpty)
+        graft.ops.StateFiles.replace(fs,
+          new org.apache.hadoop.fs.Path(staged, FoldedRetFile), retIds.mkString(",").getBytes("UTF-8"))
     }
-    marker(CompactWatermarkFile, wm.toString)
-    if (retIds.nonEmpty) marker(FoldedRetFile, retIds.mkString(","))
-    graft.ops.Generations.commit(fs, root, CurBase, gen)
     // tombstones are netted into the committed generation — clear LAST
     // (a crash before this leaves them excluded-by-marker, never
     // double-applied)
     if (fs.exists(retP)) fs.delete(retP, true)
-    graft.ops.Generations.gcOld(fs, root, CurBase)
   }
 
   /** Threshold-gated maintenance for the drift state — the engine's
@@ -593,11 +570,8 @@ object Drift {
   def driftMaintain(spark: org.apache.spark.sql.SparkSession, path: String,
                     maxLiveBatches: Int = 8): String = {
     val fs = fsOf(spark, path)
-    def frag(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(_.getPath.getName.startsWith("__batch="))
-    }
+    def frag(dir: String): Int =
+      graft.ops.Generations.batchIds(fs, new org.apache.hadoop.fs.Path(dir)).size
     if (frag(curDir(spark, path)) + frag(retDir(path)) > maxLiveBatches) {
       driftCompact(spark, path); "compact"
     } else "none"

@@ -359,14 +359,13 @@ object LanguageModel {
     val root = new Path(path)
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, BigramsBase)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, BigramsBase)
-    spark.read.parquet(cur.toString)
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c"))
-      .where(col("c") =!= 0L) // retraction-cancelled rows bake away
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, BigramsBase, gen)
-    graft.ops.Generations.gcOld(fs, root, BigramsBase)
+    graft.ops.Generations.swap(fs, root, BigramsBase) { staged =>
+      spark.read.parquet(cur.toString)
+        .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c"))
+        .where(col("c") =!= 0L) // retraction-cancelled rows bake away
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+    }
   }
 
   /** The [[graft.llm.Similarity.ivfMaintain]] policy shape for the LM
@@ -394,9 +393,6 @@ object LanguageModel {
     val fs = fsOf(spark, path)
     val root = new Path(bigramsDir(spark, path))
     require(fs.exists(root), s"no LM model at $path — run lmWrite first")
-    fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("__batch="))
-      .map(_.stripPrefix("__batch=").toLong)
-      .distinct.sorted.toSeq
+    graft.ops.Generations.batchIds(fs, root)
   }
 }

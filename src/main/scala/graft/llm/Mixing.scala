@@ -360,10 +360,8 @@ object Mixing {
     val totalsDir = s"$statePath/totals"
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState = {
-      val p = new org.apache.hadoop.fs.Path(totalsDir)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("__batch="))
-    }
+    val hasState =
+      graft.ops.Generations.batchIds(fs, new org.apache.hadoop.fs.Path(totalsDir)).nonEmpty
     val b = batch
       .withColumn("__nt",
         size(graft.functions.TextFunctions.tokens(col(textCol))).cast("long"))

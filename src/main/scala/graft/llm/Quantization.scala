@@ -434,7 +434,7 @@ object Quantization {
     require(fs.exists(codesRoot), s"no code table at $path — run ivfPqWriteCodes first")
     val flatCell = fs.listStatus(codesRoot).map(_.getPath)
       .filter(_.getName.startsWith("cell="))
-      .exists(c => !fs.listStatus(c).exists(_.getPath.getName.startsWith("__batch=")))
+      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
     require(!flatCell,
       s"$codesRoot is not the batch-partitioned layout (pre-append code table): " +
         "re-derive it with ivfPqWriteCodes before appending")

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *     so O(batch) appends never rescan the corpus to refresh the global
   *     statistics: avgdl = Σ sum_dl / Σ n_docs_dl is exact long
   *     arithmetic, equal to AVG over the doc-length table by
-  *     construction.
+  *     construction. Generation-resolved like the postings (`stats/`
+  *     until the first compaction, `stats_gen=N/` after).
   *   - `meta/` — one row pinning `n_buckets` (the simhash `meta/`
   *     precedent: the bucketing that built the index is the bucketing
   *     every later read and append must use).
@@ -51,10 +52,11 @@ import org.apache.spark.sql.functions._
   * oracle.
   *
   * Compaction: [[bm25Compact]] folds the accumulated `__batch` fragments
-  * back into one `__batch=0` per bucket through the shared crash-atomic
-  * [[graft.ops.Generations]] swap (readers always resolve a complete
-  * postings directory; the superseded generation survives until the next
-  * compact / [[bm25Vacuum]]). Same retired-lineage rule as LSH/IVF
+  * back into one `__batch=0` per bucket, and the stats into one row,
+  * each through the shared crash-atomic [[graft.ops.Generations]] swap
+  * (readers always resolve complete postings and stats directories; the
+  * superseded generations survive until the next compact /
+  * [[bm25Vacuum]]). Same retired-lineage rule as LSH/IVF
   * compaction: batch provenance collapses, so compact only after the
   * appending stream's checkpoint is dropped.
   *
@@ -77,6 +79,7 @@ object Search {
   val DefaultTermBuckets = 64
 
   private val PostingsBase = "postings"
+  private val StatsBase = "stats"
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -88,6 +91,11 @@ object Search {
   private[graft] def postingsDir(spark: SparkSession, path: String): String =
     graft.ops.Generations.currentDir(fsOf(spark, path), new Path(path),
       PostingsBase).toString
+
+  /** The CURRENT stats directory — generation-resolved like the postings. */
+  private def statsDir(spark: SparkSession, path: String): String =
+    graft.ops.Generations.currentDir(fsOf(spark, path), new Path(path),
+      StatsBase).toString
 
   private def termBucket(nBuckets: Int) =
     pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
@@ -152,6 +160,7 @@ object Search {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.ops.Generations.reset(fsOf(spark, path), new Path(path), PostingsBase)
+    graft.ops.Generations.reset(fsOf(spark, path), new Path(path), StatsBase)
     postingsOf(docs, textCol, idCol, nBuckets)
       .withColumn("__batch", lit(0L))
       // layout-aligned write (r19, guide §6): without this the tf
@@ -165,7 +174,7 @@ object Search {
       .parquet(s"$path/$PostingsBase")
     statsOf(docs, textCol)
       .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(s"$path/stats")
+      .write.mode("overwrite").partitionBy("__batch").parquet(s"$path/$StatsBase")
     Seq(nBuckets).toDF("n_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -188,21 +197,16 @@ object Search {
     require(fs.exists(root), s"no BM25 index at $path — run bm25IndexWrite first")
     fs.listStatus(root).map(_.getPath)
       .filter(_.getName.startsWith("tb="))
-      .flatMap(c => fs.listStatus(c).map(_.getPath.getName)
-        .filter(_.startsWith("__batch="))
-        .map(_.stripPrefix("__batch=").toLong))
+      .flatMap(graft.ops.Generations.batchIds(fs, _))
       .distinct.sorted.toSeq
   }
 
   /** The stats sidecar's `__batch` set — same dir-name listing. */
   private def statsBatches(spark: SparkSession, path: String): Seq[Long] = {
     val fs = fsOf(spark, path)
-    val root = new Path(s"$path/stats")
+    val root = new Path(statsDir(spark, path))
     require(fs.exists(root), s"no stats sidecar at $path — run bm25IndexWrite first")
-    fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("__batch="))
-      .map(_.stripPrefix("__batch=").toLong)
-      .distinct.sorted.toSeq
+    graft.ops.Generations.batchIds(fs, root)
   }
 
   /** Append ONE document batch: its postings land under their own
@@ -224,7 +228,7 @@ object Search {
     // ivfAppendBatch mixed-depth guard; listing is nBuckets-bounded)
     val flatBucket = fs.listStatus(root).map(_.getPath)
       .filter(_.getName.startsWith("tb="))
-      .exists(b => !fs.listStatus(b).exists(_.getPath.getName.startsWith("__batch=")))
+      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
     require(!flatBucket,
       s"$root is not the batch-partitioned layout — rebuild with bm25IndexWrite")
     postingsOf(batch, textCol, idCol, nBuckets)
@@ -235,7 +239,7 @@ object Search {
     statsOf(batch, textCol)
       .withColumn("__batch", lit(batchId))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$path/stats")
+      .partitionBy("__batch").parquet(statsDir(spark, path))
   }
 
   /** BM25 scored search THROUGH the index — same scores, same exactness
@@ -304,7 +308,7 @@ object Search {
         (-col("sum_dl")).as("sum_dl"))
       .withColumn("__batch", lit(-(retractionId + 1L)))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$path/stats")
+      .partitionBy("__batch").parquet(statsDir(spark, path))
   }
 
   def bm25Indexed(spark: SparkSession, path: String, query: Seq[String],
@@ -329,7 +333,7 @@ object Search {
         "replay the retraction to heal")
     // global statistics from the nBatches-bounded sidecar: exact long
     // sums, so n and avgdl equal the corpus-scan COUNT/AVG bit-for-bit
-    val st = spark.read.parquet(s"$path/stats")
+    val st = spark.read.parquet(statsDir(spark, path))
       .agg(sum(col("n_docs")).as("n"), sum(col("n_docs_dl")).as("nd"),
         sum(col("sum_dl")).as("sd")).head()
     val n = st.getLong(0).toDouble
@@ -380,9 +384,9 @@ object Search {
     * becomes current the instant its commit marker lands; the
     * superseded generation survives until the next compact as the
     * in-flight-reader grace period). Stats collapse to one batch-0 row
-    * of the same sums — N/avgdl are invariant, and the tiny rewrite is
-    * checkpointed before overwriting the directory it reads (the
-    * Manifest.refresh rule). Compact only retired lineages: batch
+    * of the same sums through their own swap — N/avgdl are invariant,
+    * and a crash before the stats commit leaves the uncollapsed stats,
+    * whose sums are the same. Compact only retired lineages: batch
     * provenance collapses, so a still-checkpointed appending stream
     * would re-append its replayed batches under their old ids.
     */
@@ -390,7 +394,6 @@ object Search {
     val root = new Path(path)
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, PostingsBase)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, PostingsBase)
     // tombstones bake into the folded postings; the negated stats
     // deltas fold into the collapsed stats row below, so the compacted
     // index IS the survivor index
@@ -399,25 +402,27 @@ object Search {
       case None => spark.read.parquet(cur.toString)
       case Some(r) => spark.read.parquet(cur.toString).join(r, Seq("doc"), "left_anti")
     }
-    folded
-      .select(col("term"), col("doc"), col("tf"), col("dl"), col("tb"))
-      .repartition(col("tb"))
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("tb", "__batch")
-      .parquet(staged.toString)
-    graft.ops.Generations.commit(fs, root, PostingsBase, gen)
-    graft.ops.Generations.gcOld(fs, root, PostingsBase)
+    graft.ops.Generations.swap(fs, root, PostingsBase) { staged =>
+      folded
+        .select(col("term"), col("doc"), col("tf"), col("dl"), col("tb"))
+        .repartition(col("tb"))
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("tb", "__batch")
+        .parquet(staged.toString)
+    }
     // clear tombstones BEFORE collapsing stats: after this point they
     // are no-ops (the ids are out of the committed postings), and the
     // pairing guard must not see a tombstone set whose delta row the
     // collapse absorbed (the deltas stay until the very next step)
     if (removed.isDefined) graft.ops.Tombstones.clear(spark, path)
-    val collapsed = spark.read.parquet(s"$path/stats")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_docs_dl")).as("n_docs_dl"),
-        sum(col("sum_dl")).as("sum_dl"))
-      .withColumn("__batch", lit(0L))
-      .localCheckpoint(true) // materialize before overwriting its own input
-    collapsed.write.mode("overwrite").partitionBy("__batch").parquet(s"$path/stats")
+    val stats = statsDir(spark, path)
+    graft.ops.Generations.swap(fs, root, StatsBase) { staged =>
+      spark.read.parquet(stats)
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_docs_dl")).as("n_docs_dl"),
+          sum(col("sum_dl")).as("sum_dl"))
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+    }
   }
 
   /** The [[graft.llm.Similarity.ivfMaintain]] policy shape for the BM25
@@ -435,9 +440,10 @@ object Search {
       bm25Compact(spark, path); "compact"
     } else "none"
 
-  /** Reclaim every superseded postings generation — run when no reader
-    * can be older than the last [[bm25Compact]] commit.
+  /** Reclaim every superseded postings and stats generation — run when
+    * no reader can be older than the last [[bm25Compact]] commit.
     */
   def bm25Vacuum(spark: SparkSession, path: String): Unit =
-    graft.ops.Generations.vacuum(fsOf(spark, path), new Path(path), PostingsBase)
+    Seq(PostingsBase, StatsBase).foreach(
+      graft.ops.Generations.vacuum(fsOf(spark, path), new Path(path), _))
 }

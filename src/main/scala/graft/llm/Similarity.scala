@@ -311,7 +311,7 @@ object Similarity {
     require(fs.exists(vecRoot), s"no IVF index at $path — run ivfWriteIndex first")
     val flatCell = fs.listStatus(vecRoot).map(_.getPath)
       .filter(_.getName.startsWith("cell="))
-      .exists(c => !fs.listStatus(c).exists(_.getPath.getName.startsWith("__batch=")))
+      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
     require(!flatCell,
       s"$vecRoot is not the batch-partitioned layout (pre-append index): " +
         "rebuild it with ivfWriteIndex before appending")
@@ -375,23 +375,22 @@ object Similarity {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = ivfFs(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, "vectors")
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, "vectors")
     // tombstones bake into the folded generation ([[ivfRetract]]'s
     // deferred half); cleared below once the commit marker lands
     val removed = ivfRemovedSet(spark, path)
-    ivfDropRemoved(spark.read.parquet(cur.toString), removed)
-      .select(col("id"), col("v"), col("cell"))
-      .repartition(col("cell"))
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "__batch")
-      .parquet(staged.toString)
-    // centroids travel WITH the generation (r11): once a rebuild has
-    // stored them in-generation, a later compaction must carry them
-    // forward or GC of the rebuilt generation would orphan the geometry
-    ivfCentroids(spark, path).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
-    graft.ops.Generations.commit(fs, root, "vectors", gen)
-    graft.ops.Generations.gcOld(fs, root, "vectors")
+    graft.ops.Generations.swap(fs, root, "vectors") { staged =>
+      ivfDropRemoved(spark.read.parquet(cur.toString), removed)
+        .select(col("id"), col("v"), col("cell"))
+        .repartition(col("cell"))
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("cell", "__batch")
+        .parquet(staged.toString)
+      // centroids travel WITH the generation (r11): once a rebuild has
+      // stored them in-generation, a later compaction must carry them
+      // forward or GC of the rebuilt generation would orphan the geometry
+      ivfCentroids(spark, path).write.mode("overwrite")
+        .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
+    }
     // a composed PQ code table is stale the moment the swap commits —
     // and when the PRE-compaction batch set was already {0} the
     // ivfPqKnn liveness guard cannot even detect it (the recorded set
@@ -473,14 +472,13 @@ object Similarity {
     val cells = if (nCells > 0) nCells else ivfCentroids(spark, path).count().toInt
     val corpus = ivfVectors(spark, path).select(col("id"), col("v"))
     val (indexed, centroids) = ivfIndex(corpus, "v", "id", cells, lloydRounds)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, "vectors")
-    indexed.withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "__batch")
-      .parquet(staged.toString)
-    centroids.write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
-    graft.ops.Generations.commit(fs, root, "vectors", gen)
-    graft.ops.Generations.gcOld(fs, root, "vectors")
+    graft.ops.Generations.swap(fs, root, "vectors") { staged =>
+      indexed.withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("cell", "__batch")
+        .parquet(staged.toString)
+      centroids.write.mode("overwrite")
+        .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
+    }
     // the rebuild read the corpus THROUGH the tombstone filter
     // (ivfVectors), so the committed generation is retraction-applied
     if (ivfRemovedSet(spark, path).isDefined)
@@ -603,9 +601,7 @@ object Similarity {
     val root = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path))
     val batches = fs.listStatus(root).map(_.getPath)
       .filter(_.getName.startsWith("cell="))
-      .flatMap(c => fs.listStatus(c).map(_.getPath.getName)
-        .filter(_.startsWith("__batch="))
-        .map(_.stripPrefix("__batch=").toLong))
+      .flatMap(graft.ops.Generations.batchIds(fs, _))
       .distinct.sorted.toSeq
     require(batches.nonEmpty,
       s"$root holds no __batch= partitions (pre-append flat layout?) — " +

@@ -505,13 +505,13 @@ object TextAnalysis {
           graft.ops.Generations.currentDir(fs, root, ResBase).toString)
         prior.unionByName(localTop.select(prior.columns.map(col).toIndexedSeq: _*))
       }
-    val next = unioned.dropDuplicates(idCol)
-      .orderBy(col("__skey").desc, col(idCol)).limit(k)
-      .localCheckpoint(true) // sever lineage from the dir being swapped
-    val (dir, g) = graft.ops.Generations.stage(fs, root, ResBase)
-    next.write.mode("overwrite").parquet(dir.toString)
-    graft.ops.Generations.commit(fs, root, ResBase, g)
-    graft.ops.Generations.gcOld(fs, root, ResBase)
+    // the staged generation is a fresh dir and gcOld keeps the one read
+    // here, so the write streams straight from this plan
+    graft.ops.Generations.swap(fs, root, ResBase) { dir =>
+      unioned.dropDuplicates(idCol)
+        .orderBy(col("__skey").desc, col(idCol)).limit(k)
+        .write.mode("overwrite").parquet(dir.toString)
+    }
   }
 
   /** The reservoir's current k rows (batch columns + __wt/__skey). */
@@ -562,12 +562,10 @@ object TextAnalysis {
           graft.ops.Generations.currentDir(fs, root, StratResBase).toString)
         prior.unionByName(localTop.select(prior.columns.map(col).toIndexedSeq: _*))
       }
-    val next = topKPerStratum(unioned.dropDuplicates(idCol))
-      .localCheckpoint(true) // sever lineage from the dir being swapped
-    val (dir, g) = graft.ops.Generations.stage(fs, root, StratResBase)
-    next.write.mode("overwrite").parquet(dir.toString)
-    graft.ops.Generations.commit(fs, root, StratResBase, g)
-    graft.ops.Generations.gcOld(fs, root, StratResBase)
+    graft.ops.Generations.swap(fs, root, StratResBase) { dir =>
+      topKPerStratum(unioned.dropDuplicates(idCol))
+        .write.mode("overwrite").parquet(dir.toString)
+    }
   }
 
   /** The stratified reservoir's current rows (≤ k per stratum). */
@@ -791,19 +789,6 @@ object TextAnalysis {
   private val WatermarkFile = "_compact_watermark"
   private val FoldedRetsFile = "_folded_rets"
 
-  private def readLongMarker(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, name: String): Long = {
-    val fs = fsOfPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.toLong
-      finally in.close()
-    }
-  }
-
   /** Highest batch id folded away by [[noveltyCompact]] — 0 if never
     * compacted. Lives INSIDE the gram-set generation dir (underscore
     * prefix → invisible to the parquet scan), so it rides the same
@@ -811,7 +796,9 @@ object TextAnalysis {
     */
   def noveltyCompactWatermark(spark: org.apache.spark.sql.SparkSession,
                               path: String): Long =
-    readLongMarker(spark, gramSetDir(spark, path), WatermarkFile)
+    graft.ops.StateFiles.read(fsOfPath(spark, path),
+      new org.apache.hadoop.fs.Path(gramSetDir(spark, path), WatermarkFile))(_.toLong)
+      .getOrElse(0L)
 
   /** Highest retraction id whose deltas a [[noveltyCompact]] has baked
     * into the scores table — 0 if none. Rides the scores generation
@@ -821,7 +808,9 @@ object TextAnalysis {
     */
   def noveltyRetractWatermark(spark: org.apache.spark.sql.SparkSession,
                               path: String): Long =
-    readLongMarker(spark, scoresDir(spark, path), FoldedRetsFile)
+    graft.ops.StateFiles.read(fsOfPath(spark, path),
+      new org.apache.hadoop.fs.Path(scoresDir(spark, path), FoldedRetsFile))(_.toLong)
+      .getOrElse(0L)
 
   /** Retraction ids that are COMMITTED (tombstones present — the last
     * artifact [[noveltyRetract]] writes) and not yet folded by a
@@ -1215,8 +1204,7 @@ object TextAnalysis {
     val gs = new org.apache.hadoop.fs.Path(gramSetDir(spark, path))
     val fs = fsOfPath(spark, path)
     require(fs.exists(gs), s"no novelty index at $path — run noveltyIndexWrite first")
-    val liveBatches = fs.listStatus(gs)
-      .count(_.getPath.getName.startsWith("__batch="))
+    val liveBatches = graft.ops.Generations.batchIds(fs, gs).size
     val pendingRets = graft.ops.Tombstones.retIds(spark, path).nonEmpty
     if (pendingRets || liveBatches > maxLiveBatches) {
       noveltyCompact(spark, path); "compact"
@@ -1259,13 +1247,11 @@ object TextAnalysis {
                 .as("novelty"),
               col("__batch"))
       }
-      val (stagedS, genS) = graft.ops.Generations.stage(fs, root, ScoresBase)
-      writeBatchPartitioned(foldedScores, stagedS.toString)
-      val outS = fs.create(
-        new org.apache.hadoop.fs.Path(stagedS, FoldedRetsFile), true)
-      try outS.write(retWm.toString.getBytes("UTF-8")) finally outS.close()
-      graft.ops.Generations.commit(fs, root, ScoresBase, genS)
-      graft.ops.Generations.gcOld(fs, root, ScoresBase)
+      graft.ops.Generations.swap(fs, root, ScoresBase) { staged =>
+        writeBatchPartitioned(foldedScores, staged.toString)
+        graft.ops.StateFiles.replace(fs,
+          new org.apache.hadoop.fs.Path(staged, FoldedRetsFile), retWm.toString.getBytes("UTF-8"))
+      }
     }
     // 2. gram set: fold batches to __batch=0, subtract dead grams,
     //    advance the batch-replay watermark with the swap
@@ -1277,31 +1263,29 @@ object TextAnalysis {
     val prior = noveltyCompactWatermark(spark, path)
     val folded = curSet.agg(max(col("__batch").cast("long"))).head().getLong(0)
     val wm = math.max(prior, folded)
-    val (staged, gen) = graft.ops.Generations.stage(fs, root, GramSetBase)
-    // watermark-aware dead filter: rows a later batch re-added after
-    // the kill survive the fold (the gram is revived, not retired)
-    writeBatchPartitioned(
-      dropDeadGrams(curSet.select(col("h"), col("__batch")), liveDead)
-        .select(col("h"))
-        .distinct()
-        .withColumn("__batch", lit(0L)),
-      staged.toString)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staged, WatermarkFile), true)
-    try out.write(wm.toString.getBytes("UTF-8")) finally out.close()
-    graft.ops.Generations.commit(fs, root, GramSetBase, gen)
-    graft.ops.Generations.gcOld(fs, root, GramSetBase)
+    graft.ops.Generations.swap(fs, root, GramSetBase) { staged =>
+      // watermark-aware dead filter: rows a later batch re-added after
+      // the kill survive the fold (the gram is revived, not retired)
+      writeBatchPartitioned(
+        dropDeadGrams(curSet.select(col("h"), col("__batch")), liveDead)
+          .select(col("h"))
+          .distinct()
+          .withColumn("__batch", lit(0L)),
+        staged.toString)
+      graft.ops.StateFiles.replace(fs,
+        new org.apache.hadoop.fs.Path(staged, WatermarkFile), wm.toString.getBytes("UTF-8"))
+    }
     // 3. occ postings: drop tombstoned docs' rows, fold to __batch=0
     //    (replay below the batch watermark is refused upstream)
     if (fs.exists(new org.apache.hadoop.fs.Path(occDir(spark, path)))) {
       val occ = spark.read.parquet(occDir(spark, path))
         .select(col("h"), col("id"))
-      val (stagedO, genO) = graft.ops.Generations.stage(fs, root, OccBase)
-      writeBatchPartitioned(
-        graft.ops.Tombstones.drop(occ, removed, "id")
-          .withColumn("__batch", lit(0L)),
-        stagedO.toString)
-      graft.ops.Generations.commit(fs, root, OccBase, genO)
-      graft.ops.Generations.gcOld(fs, root, OccBase)
+      graft.ops.Generations.swap(fs, root, OccBase) { staged =>
+        writeBatchPartitioned(
+          graft.ops.Tombstones.drop(occ, removed, "id")
+            .withColumn("__batch", lit(0L)),
+          staged.toString)
+      }
     }
     // 4. retraction GC: sidecars before tombstones (readers gate on the
     //    tombstone listing ∩ above-watermark, so each deletion is safe)

@@ -54,14 +54,11 @@ object CorpusVersions {
     */
   def publish(spark: SparkSession, path: String, df: DataFrame,
               statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, path)
-    val (staged, gen) = Generations.stage(fs, root, Base)
-    df.write.mode("overwrite").parquet(staged.toString)
-    if (statsCols.nonEmpty) Manifest.write(spark, staged.toString, statsCols)
-    bloomCols.foreach(c => Manifest.writeBloom(spark, staged.toString, c))
-    Generations.commit(fs, root, Base, gen)
-    gen
+    Generations.publish(fsOf(spark, path), new Path(path), Base) { staged =>
+      df.write.mode("overwrite").parquet(staged.toString)
+      if (statsCols.nonEmpty) Manifest.write(spark, staged.toString, statsCols)
+      bloomCols.foreach(c => Manifest.writeBloom(spark, staged.toString, c))
+    }
   }
 
   /** The current version's frame. */

@@ -3,8 +3,26 @@ package graft.ops
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** Crash-atomic directory swap via generation directories + commit
-  * markers — the mechanism behind index compaction (IVF `vectors/`, LSH
-  * `buckets/`).
+  * markers — the one mechanism every index, model and corpus state
+  * family compacts, retrains or re-pins through:
+  *   - the LSH/simhash index (`buckets`, `sigs`) and IVF (`vectors`,
+  *     carrying `_centroids`);
+  *   - BM25 (`postings`, `stats`);
+  *   - the NB and LM models (`nbcounts`, `bigrams`);
+  *   - novelty (`gramset`, `scores`, `occ`) and drift (`ref`, `cur`);
+  *   - the weighted reservoirs (`res`, `sres`);
+  *   - the K13 pair store and assignment (`pairs`, `assignment`);
+  *   - the admitted corpus (`_gen/data`) and corpus versions (`data`).
+  *
+  * Writers call [[swap]] (stage, write, commit, then [[gcOld]]) or, for
+  * [[CorpusVersions]], which keeps every published version, [[publish]]
+  * (no GC). Markers that describe a generation's data — novelty's
+  * `_compact_watermark` and `_folded_rets`, the pair store's
+  * `_compact_watermark`, drift's `_compact_watermark` and `_folded_ret`
+  * — are written inside the `write` closure through
+  * [[StateFiles.replace]], so they ride the same commit as the data and
+  * are read back through [[StateFiles.read]]. [[batchIds]] is the one
+  * listing of a layout dir's `__batch=` partitions.
   *
   * Problem: "rewrite a served directory in place" has no safe ordering.
   * `delete(dir); rename(tmp, dir)` leaves NOTHING served if the process
@@ -89,7 +107,7 @@ object Generations {
     * leftover UNCOMMITTED dir at that number (a previous crashed
     * attempt) is cleared — it was never visible to readers.
     */
-  def stage(fs: FileSystem, root: Path, base: String): (Path, Long) = {
+  private[graft] def stage(fs: FileSystem, root: Path, base: String): (Path, Long) = {
     val next = currentGen(fs, root, base) + 1
     val dir = genDir(root, base, next)
     if (fs.exists(dir)) fs.delete(dir, true)
@@ -102,11 +120,46 @@ object Generations {
     * written first. Throws if the marker already exists — a rival
     * committed this generation.
     */
-  def commit(fs: FileSystem, root: Path, base: String, gen: Long): Unit = {
+  private[graft] def commit(fs: FileSystem, root: Path, base: String, gen: Long): Unit = {
     val marker = new Path(root, markerName(base, gen))
     if (!StateFiles.createExclusive(fs, marker))
       throw new FileAlreadyExistsException(s"generation $gen of $base is already committed: $marker")
   }
+
+  /** Publish the next generation: stage it, run `write` into the staged
+    * directory (data and any in-generation markers), then commit its
+    * marker; returns the generation number. If `write` throws, nothing
+    * is committed and the staged dir is cleared by the next stage.
+    * Old generations are kept — [[CorpusVersions]] publishes its pinned
+    * versions this way.
+    */
+  def publish(fs: FileSystem, root: Path, base: String)(write: Path => Unit): Long = {
+    val (dir, gen) = stage(fs, root, base)
+    write(dir)
+    commit(fs, root, base, gen)
+    gen
+  }
+
+  /** [[publish]] followed by [[gcOld]] — the compaction swap of every
+    * index, model and corpus family.
+    */
+  def swap(fs: FileSystem, root: Path, base: String)(write: Path => Unit): Long = {
+    val gen = publish(fs, root, base)(write)
+    gcOld(fs, root, base)
+    gen
+  }
+
+  /** The `__batch=<id>` partition ids directly under `dir`, sorted and
+    * distinct; Nil when `dir` is absent. A nested layout (`tb=`,
+    * `cell=`) calls this once per layout directory. Listing only — no
+    * Spark job.
+    */
+  def batchIds(fs: FileSystem, dir: Path): Seq[Long] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("__batch="))
+      .map(_.stripPrefix("__batch=").toLong)
+      .distinct.sorted
 
   /** Drop generations older than the PREVIOUS one (current and previous
     * stay readable — the in-flight-reader grace period). Markers are

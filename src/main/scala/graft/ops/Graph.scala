@@ -270,10 +270,9 @@ object Graph extends org.apache.spark.internal.Logging {
           incrementalComponents(spark.read.parquet(cur.toString), "id", "component",
             edges, "s", "d", maxIter)
         else connectedComponents(edges, "s", "d", maxIter)
-      val (staged, gen) = Generations.stage(fs, root, AssignmentBase)
-      next.write.mode("overwrite").parquet(staged.toString)
-      Generations.commit(fs, root, AssignmentBase, gen)
-      Generations.gcOld(fs, root, AssignmentBase)
+      Generations.swap(fs, root, AssignmentBase) { staged =>
+        next.write.mode("overwrite").parquet(staged.toString)
+      }
     } finally free(edges)
   }
 
@@ -302,16 +301,8 @@ object Graph extends org.apache.spark.internal.Logging {
     * data it describes.
     */
   private def pairsCompactWatermark(fs: org.apache.hadoop.fs.FileSystem,
-                                    path: String): Option[Long] = {
-    val p = new Path(pairStoreDir(fs, path), PairsWatermarkFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.toLong)
-      finally in.close()
-    }
-  }
+                                    path: String): Option[Long] =
+    StateFiles.read(fs, new Path(pairStoreDir(fs, path), PairsWatermarkFile))(_.toLong)
 
   /** COMPACT the pair-evidence store: physically drop every pair
     * touching a tombstoned (retracted) id, fold all `__batch` fragments
@@ -343,8 +334,7 @@ object Graph extends org.apache.spark.internal.Logging {
     val store = new Path(pairStoreDir(fs, path))
     require(fs.exists(store),
       s"no pair-evidence store at $path — fold at least one batch first")
-    val liveBatches = fs.listStatus(store)
-      .count(_.getPath.getName.startsWith("__batch="))
+    val liveBatches = Generations.batchIds(fs, store).size
     val pendingRets = Tombstones.retIds(spark, path).nonEmpty
     if (pendingRets || liveBatches > maxLiveBatches) {
       pairsCompact(spark, path); "compact"
@@ -371,15 +361,13 @@ object Graph extends org.apache.spark.internal.Logging {
         cur.join(broadcast(ts.select(col("id").as("src"))), Seq("src"), "left_anti")
           .join(broadcast(ts.select(col("id").as("dst"))), Seq("dst"), "left_anti")
     }
-    val (staged, gen) = Generations.stage(fs, root, PairsBase)
-    pruned.select(col("src"), col("dst"), col("__cb")).distinct()
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch", "__cb")
-      .parquet(staged.toString)
-    val out = fs.create(new Path(staged, PairsWatermarkFile), true)
-    try out.write(wm.toString.getBytes("UTF-8")) finally out.close()
-    Generations.commit(fs, root, PairsBase, gen)
-    Generations.gcOld(fs, root, PairsBase)
+    Generations.swap(fs, root, PairsBase) { staged =>
+      pruned.select(col("src"), col("dst"), col("__cb")).distinct()
+        .withColumn("__batch", lit(0L))
+        .write.mode("overwrite").partitionBy("__batch", "__cb")
+        .parquet(staged.toString)
+      StateFiles.replace(fs, new Path(staged, PairsWatermarkFile), wm.toString.getBytes("UTF-8"))
+    }
     Tombstones.clear(spark, path)
   }
 
@@ -491,10 +479,9 @@ object Graph extends org.apache.spark.internal.Logging {
     val rebuilt = members.join(reclosed, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     val next = untouched.select(col("id"), col("component")).unionByName(rebuilt)
-    val (staged, gen) = Generations.stage(fs, root, AssignmentBase)
-    next.write.mode("overwrite").parquet(staged.toString)
-    Generations.commit(fs, root, AssignmentBase, gen)
-    Generations.gcOld(fs, root, AssignmentBase)
+    Generations.swap(fs, root, AssignmentBase) { staged =>
+      next.write.mode("overwrite").parquet(staged.toString)
+    }
     // Tombstone the removed ids AFTER the assignment commit: the
     // assignment is physically pruned (the tombstones are not a read
     // filter here) — they (a) make [[foldBatch]] refuse a premature

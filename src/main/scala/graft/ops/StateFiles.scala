@@ -9,8 +9,13 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSy
   * sidecars (`_graft_buckets`, `_graft_schema`, `_graft_bucket_cols`,
   * `_graft_last_batch`, `_graft_truncate`, `_graft_offset`), the B15
   * snapshot cursor and chunk-schema pin, the B16 signal state, the
-  * writer epochs and lifecycle markers, and the numbered event logs
-  * (schema history, notifications, the signal file channel). Callers
+  * writer epochs and lifecycle markers, the numbered event logs
+  * (schema history, notifications, the signal file channel), and the
+  * in-generation markers written inside a staged [[Generations]]
+  * directory (novelty's `_compact_watermark` and `_folded_rets`, the
+  * pair store's `_compact_watermark`, drift's `_compact_watermark` and
+  * `_folded_ret`), which become visible only with their generation's
+  * commit marker. Callers
   * keep their own names, formats, numbering and fencing; only the write
   * and read protocol lives here, so a fix here fixes every one of them.
   *

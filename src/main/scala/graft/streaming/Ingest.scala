@@ -67,10 +67,8 @@ object Ingest {
     // a dir is only a readable table once a batch actually wrote rows into
     // it — a batch of shingle-less docs writes zero partitions, leaving a
     // dir whose schema parquet cannot infer
-    def hasData(dir: String): Boolean = {
-      val p = new Path(dir)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("__batch="))
-    }
+    def hasData(dir: String): Boolean =
+      graft.ops.Generations.batchIds(fs, new Path(dir)).nonEmpty
     // Optional exact-content stage: a doc with fewer than `shingleN`
     // tokens produces NO shingles and therefore sails through LSH — an
     // exact duplicate of it would be re-admitted every batch forever.
@@ -796,33 +794,34 @@ object Ingest {
     val cur = corpusDataDir(spark, admittedDir)
     val curPath = new Path(cur)
     require(fs.exists(curPath), s"no admitted corpus at $admittedDir")
-    val liveBatches = fs.listStatus(curPath)
-      .count(_.getPath.getName.startsWith("__batch="))
+    val liveBatches = graft.ops.Generations.batchIds(fs, curPath).size
     if (removed.isEmpty && liveBatches <= maxLiveBatches) return "none"
     val live = graft.ops.Tombstones.drop(
       spark.read.parquet(cur), removed, idCol)
-    val (staged, gen) = graft.ops.Generations.stage(fs, genRoot, "data")
     // fold target is __batch = -1, NOT 0: corpus writers use the stream
     // batch id DIRECTLY (unlike the index families' id+1 convention), so
     // a retired-lineage re-attach restarts at 0 and its dynamic
     // overwrite of __batch=0 would silently DESTROY a fold parked there;
     // no stream ever produces a negative id (the LM retraction's
     // negative-partition trick)
-    live.withColumn("__batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
-    graft.ops.Generations.commit(fs, genRoot, "data", gen)
+    graft.ops.Generations.swap(fs, genRoot, "data") { staged =>
+      live.withColumn("__batch", lit(-1L))
+        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+    }
     if (removed.isDefined)
       graft.ops.Tombstones.clear(spark, corpusRetRoot(admittedDir))
-    graft.ops.Generations.gcOld(fs, genRoot, "data")
     // the shared GC reclaims _gen/data_gen= dirs but knows nothing about
     // the legacy root layout — apply the same current+previous grace to
     // gen 0's root `__batch=` partitions once two generations exist
     if (graft.ops.Generations.currentGen(fs, genRoot, "data") >= 2L)
-      fs.listStatus(new Path(admittedDir)).map(_.getPath)
-        .filter(_.getName.startsWith("__batch="))
-        .foreach(fs.delete(_, true))
+      dropRootBatches(fs, admittedDir)
     "compact"
   }
+
+  /** Delete the legacy root-layout `__batch=` partitions of the corpus. */
+  private def dropRootBatches(fs: org.apache.hadoop.fs.FileSystem, admittedDir: String): Unit =
+    graft.ops.Generations.batchIds(fs, new Path(admittedDir))
+      .foreach(b => fs.delete(new Path(admittedDir, s"__batch=$b"), true))
 
   /** ONE COMPOSED DELETE TURN — the mirror of [[curateBatch]]: fan one
     * batch of removed DOCUMENTS to every registered per-family
@@ -1188,9 +1187,7 @@ object Ingest {
     val fs = genRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.ops.Generations.vacuum(fs, genRoot, "data")
     if (graft.ops.Generations.currentGen(fs, genRoot, "data") >= 1L)
-      fs.listStatus(new Path(admittedDir)).map(_.getPath)
-        .filter(_.getName.startsWith("__batch="))
-        .foreach(fs.delete(_, true))
+      dropRootBatches(fs, admittedDir)
   }
 
   /** The admitted corpus (layout column dropped, tombstoned docs — a

@@ -32,12 +32,12 @@ import org.apache.spark.sql.functions._
   * scored document explodes to its token OCCURRENCES (never a tf
   * compression — a decimal × integer product re-introduces the
   * cross-engine type-widening question the per-occurrence sum avoids);
-  * occurrences cross the bounded class list (one broadcast — classes
+  * occurrences cross the bounded class list (a literal — classes
   * are a classifier parameter, not corpus-derived), LEFT-join the model
   * on (label, word), and each occurrence contributes
   * ln((c + 1) / (ctx + V)) rounded to 6dp and summed as decimal. The
-  * class prior ln(dc / N), rounded to the same 6dp decimal, joins once
-  * per (doc, label) after the aggregate. The published score is
+  * class prior ln(dc / N), rounded to the same 6dp decimal, is added
+  * once per (doc, label) after the aggregate. The published score is
   * ROUND(CAST(prior + Σ AS DOUBLE), 6) — the sum-not-mean shape
   * (round-after-divide is the one arithmetic the cross-engine contract
   * cannot pin). Unseen (label, word) coalesces to c = 0: a fully-OOV
@@ -51,15 +51,23 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: training is one tokenize pass + one (label, word)
   * count shuffle (map-side combined; the table is vocab × classes,
-  * ≪ corpus) + one label-keyed doc count. Scoring is one explode, one
-  * bounded class broadcast, one model join (broadcast-gated at
-  * `maxBroadcastModel` — the model is corpus-derived and unbounded at
-  * 100 TB), one (doc, label)-keyed aggregation. Driver state: class
-  * count and two 1-row aggregates.
+  * ≪ corpus) + one label-keyed doc count. Scoring is one class-bounded
+  * `rollup(label)` collect of the model's statistics (per-class ctx
+  * and dc; V, N and the model's row count), then one query: one
+  * explode over the literal class list, one model join
+  * (broadcast-gated at `maxBroadcastModel` — the model is
+  * corpus-derived and unbounded at 100 TB), one (doc, label)-keyed
+  * aggregation. Driver state: one row per class plus the grand total.
   */
 object Classifier {
 
   private val CountsBase = "nbcounts"
+
+  /** The schema every counts write produces ([[nbTrain]] and its sums);
+    * reads pass it so no Spark job infers it from the footers. The
+    * `__batch` partition column still comes from the directory names.
+    */
+  private val CountsSchema = "label STRING, word STRING, c BIGINT"
 
   /** The `word` value of per-class document-count rows. Real tokens are
     * never empty, so the sentinel cannot collide with a count row.
@@ -103,46 +111,59 @@ object Classifier {
     * [[nbSelfClassify]] so a smoothing/prior fix can never fork the
     * 'one oracle, four paths' invariant. `occ` is the (doc, word)
     * occurrence frame (one row per token occurrence); `model` the
-    * one-table counts.
+    * one-table counts (one document-count row per label, as [[nbTrain]]
+    * and [[nbModel]] produce).
+    *
+    * The statistics derived from the model are bounded by the class
+    * count, so ONE `rollup(label)` collect brings them to the driver:
+    * per-label ctx and dc, and on the grand-total row V, N and the
+    * model's row count (the broadcast gate). They enter the tree as
+    * literals — the class list as `explode(typedLit(labels))`, ctx and
+    * dc as `element_at(typedLit(map), label)` — so the scoring query
+    * reads the model once, for the (label, word) join. The arithmetic
+    * stays Spark expressions evaluated per row, so the DuckDB oracle
+    * still matches bit for bit. The classes are the non-null labels
+    * with a document-count row (a null label never matched its prior);
+    * V and N span every model row.
     */
   private def scoreOccurrences(occ: DataFrame, model: DataFrame,
                                maxBroadcastModel: Long): DataFrame = {
-    // model feeds four consumers (ctx, V, priors, the score join): a
-    // (vocab × classes)-bounded table, materialized once — the
-    // SCALING.md fan-out rule
-    val m = model.localCheckpoint(true)
-    val nModel = m.count()
-    val words = m.where(col("word") =!= lit(DocCountWord))
-    val dcs = m.where(col("word") === lit(DocCountWord))
-      .select(col("label"), col("c").as("dc"))
-    val ctx = words.groupBy(col("label")).agg(sum(col("c")).as("ctx"))
-    val v = words.agg(countDistinct(col("word")).cast("double").as("__v"))
-    val n = dcs.agg(sum(col("dc")).cast("double").as("__n"))
-    // prior ln(dc/N): IEEE division (bit-stable across engines), then the
-    // shared 6dp-decimal rounding; the class list is broadcast-bounded by
-    // definition (it is the classifier's label set, not corpus-derived)
-    val priors = dcs.join(broadcast(n))
-      .select(col("label"),
-        round(log(col("dc").cast("double") / col("__n")), 6)
-          .cast("decimal(28,6)").as("__prior"))
-    val gate = nModel <= maxBroadcastModel
-    val wSide = if (gate) broadcast(words) else words
-    val ctxSide = if (gate) broadcast(ctx) else ctx
+    val isDoc = col("word") === lit(DocCountWord)
+    val stats = model.rollup(col("label"))
+      .agg(grouping(col("label")).cast("int").as("__total"),
+        sum(when(!isDoc, col("c"))).as("ctx"),
+        sum(when(isDoc, col("c"))).as("dc"),
+        countDistinct(when(!isDoc, col("word"))).as("v"),
+        count(lit(1)).as("rows"))
+      .collect()
+    val (total, perLabel) = stats.partition(_.getInt(1) == 1)
+    val classes = perLabel.filter(r => !r.isNullAt(0) && !r.isNullAt(3))
+    val labels = classes.map(_.getString(0)).toSeq
+    val ctxOf = classes
+      .map(r => r.getString(0) -> (if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
+    val dcOf = classes.map(r => r.getString(0) -> r.getLong(3)).toMap
+    val grand = total.headOption
+    val v = grand.fold(0.0)(_.getLong(4).toDouble)
+    val n = grand.filterNot(_.isNullAt(3)).fold(0.0)(_.getLong(3).toDouble)
+    val nModel = grand.fold(0L)(_.getLong(5))
+    val words = model.where(col("word") =!= lit(DocCountWord))
+    val wSide = if (nModel <= maxBroadcastModel) broadcast(words) else words
+    val label = col("label")
     // ln((c + 1) / (ctx + V)) — expression tree mirrored token for token
     // by the DuckDB oracle (double arithmetic is order-sensitive)
     val lnp = log((coalesce(col("c"), lit(0L)).cast("double") + lit(1.0)) /
-      (coalesce(col("ctx"), lit(0L)).cast("double") + col("__v")))
-    occ.select(col("doc"), col("word"))
-      .crossJoin(broadcast(priors.select(col("label"))))
+      (coalesce(element_at(typedLit(ctxOf), label), lit(0L)).cast("double") + lit(v)))
+    // prior ln(dc/N): IEEE division (bit-stable across engines), then the
+    // shared 6dp-decimal rounding
+    val prior = round(log(element_at(typedLit(dcOf), label).cast("double") / lit(n)), 6)
+      .cast("decimal(28,6)")
+    occ.select(col("doc"), col("word"), explode(typedLit(labels)).as("label"))
       .join(wSide, Seq("label", "word"), "left")
-      .join(ctxSide, Seq("label"), "left")
-      .join(broadcast(v))
       .withColumn("__s", round(lnp, 6).cast("decimal(28,6)"))
-      .groupBy(col("doc"), col("label"))
+      .groupBy(col("doc"), label)
       .agg(count(lit(1)).as("n_tokens"), sum(col("__s")).as("__ws"))
-      .join(broadcast(priors), Seq("label"))
-      .select(col("doc"), col("label"), col("n_tokens"),
-        round((col("__ws") + col("__prior")).cast("double"), 6).as("score"))
+      .select(col("doc"), label, col("n_tokens"),
+        round((col("__ws") + prior).cast("double"), 6).as("score"))
   }
 
   /** Classify: argmax class per document — (doc, n_tokens, predicted,
@@ -239,7 +260,9 @@ object Classifier {
       val dc = docs.groupBy(col(labelCol).cast("string").as("label"))
         .agg(count(lit(1)).as("c"))
         .select(col("label"), lit(DocCountWord).as("word"), col("c"))
-      val model = words.unionByName(dc)
+      // corpus-derived here: materialized once for the statistics
+      // collect and the score join
+      val model = words.unionByName(dc).localCheckpoint(true)
       val scored = scoreOccurrences(occ.select(col("doc"), col("word")),
         model, TextAnalysis.DfreqBroadcastMaxVocab)
       pickBest(scored).localCheckpoint(true)
@@ -297,7 +320,7 @@ object Classifier {
     val root = new Path(countsDir(spark, path))
     require(fsOf(spark, path).exists(root),
       s"no NB model at $path — run nbWrite first")
-    spark.read.parquet(root.toString)
+    spark.read.schema(CountsSchema).parquet(root.toString)
       .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
       // retraction-cancelled rows drop: a retrained survivor model
       // never saw them, and V / ctx / the priors must shrink with them
@@ -357,7 +380,7 @@ object Classifier {
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, CountsBase)
     graft.ops.Generations.swap(fs, root, CountsBase) { staged =>
-      spark.read.parquet(cur.toString)
+      spark.read.schema(CountsSchema).parquet(cur.toString)
         .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
         .where(col("c") =!= 0L) // retraction-cancelled rows bake away
         .withColumn("__batch", lit(0L))

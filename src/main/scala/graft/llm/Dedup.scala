@@ -49,6 +49,37 @@ object Dedup {
     (capped, droppedBuckets)
   }
 
+  /** (id, band, key) bucket rows of a BATCH with the over-wide buckets
+    * dropped, persisted and materialized by ONE job: the width is a
+    * window count over (band, key), so the cached rows keep that
+    * partitioning for the batch's bucket joins, and an Observation on
+    * the same job counts the dropped buckets for the log. The batch-sized
+    * twin of [[capOverWideBuckets]] (which keeps the groupBy form for
+    * corpus-sized frames, where the window measured slower). The caller
+    * unpersists.
+    */
+  private def cappedBatchBuckets(base: DataFrame, k: Int, bands: Int,
+                                 maxBucketSize: Int, logCtx: String): DataFrame = {
+    val bucket = Window.partitionBy(col("band"), col("key"))
+    val dropped = org.apache.spark.sql.Observation()
+    val capped = bandBucketRows(base, k, bands)
+      .withColumn("__bw", count(lit(1)).over(bucket))
+      .withColumn("__lead", min(col("id")).over(bucket) === col("id"))
+      .observe(dropped, coalesce(
+        sum(when(col("__bw") > maxBucketSize && col("__lead"), 1L)), lit(0L)).as("buckets"))
+      .where(col("__bw") <= maxBucketSize)
+      .select(col("id"), col("band"), col("key"))
+      .persist()
+    capped.count()
+    dropped.future.foreach { r =>
+      if (r.getLong(0) > 0)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"$logCtx: dropped ${r.getLong(0)} over-wide LSH buckets " +
+            s"(> $maxBucketSize members) — near-dup-saturated; use exact dedup for those")
+    }(scala.concurrent.ExecutionContext.parasitic)
+    capped
+  }
+
   /** K1 — exact dedup after text normalization. Keeps the row with the
     * smallest `idCol` per normalized-hash group (deterministic winner,
     * unlike `dropDuplicates`). One shuffle on the 128-bit hash — at 100 TB
@@ -523,32 +554,38 @@ object Dedup {
     // `projection` lets a composed pipeline (Ingest.curateBatch) share
     // ONE shingle pass across dedup and novelty: it must be
     // shingleHashProjection(newDf, textCol, idCol, shingleN), already
-    // persisted — the caller owns its lifecycle
+    // persisted — the caller owns its lifecycle. Both are materialized
+    // by the first job that reads them (the bucket rows below).
     val ownProj = projection.isEmpty
     val projected = projection.getOrElse(
       shingleHashProjection(newDf, textCol, idCol, shingleN).persist())
-    if (ownProj) projected.count()
     val base = projected.where(size(col("hs")) > 0)
-    val bucketed = bandBucketRows(base, k, bands).persist()
-    bucketed.count()
-    val (capped, _) = capOverWideBuckets(bucketed, maxBucketSize,
+    val capped = cappedBatchBuckets(base, k, bands, maxBucketSize,
       s"ingestAgainstIndex(batch $batchId)")
+    // the index is read with the schema this function writes, so no job
+    // infers it from the footers (one stream lineage, one id type)
+    val bucketsSchema = capped.schema
+    val sigsSchema = base.schema
     val vsDup =
       if (!hasData(bucketsDir(spark, indexPath)))
         base.select(col("id")).where(lit(false)) // typed empty
       else {
-        // retracted corpus docs must not veto new arrivals (tombstones
-        // consulted at read — the retractFromIndex contract)
+        // the index sides are SCANS probed by broadcast batch-side sets
+        // (batch bucket rows, then the batch's candidate pairs with their
+        // hash sets) — the corpus-sized index is never shuffled. Retracted
+        // corpus docs must not veto new arrivals (tombstones consulted at
+        // read — the retractFromIndex contract)
         val liveBuckets = dropRemoved(
-          spark.read.parquet(bucketsDir(spark, indexPath)),
+          spark.read.schema(bucketsSchema).parquet(bucketsDir(spark, indexPath)),
           removedSet(spark, indexPath), "id")
-        val pairs = capped.as("n")
-          .join(liveBuckets.as("o"),
-            col("n.band") === col("o.band") && col("n.key") === col("o.key"))
-          .select(col("n.id").as("new_id"), col("o.id").as("corpus_id"))
+        val pairs = liveBuckets.select(col("id").as("corpus_id"), col("band"), col("key"))
+          .join(broadcast(capped.select(col("id").as("new_id"), col("band"), col("key"))),
+            Seq("band", "key"))
           .where(col("new_id") =!= col("corpus_id"))
-          .dropDuplicates("new_id", "corpus_id")
-        val idxSigs = spark.read.parquet(sigsDir(spark, indexPath))
+          .select(col("new_id"), col("corpus_id"))
+        val probe = base.select(col("id").as("new_id"), col("hs").as("hs_n"))
+          .join(broadcast(pairs), Seq("new_id"))
+        val idxSigs = spark.read.schema(sigsSchema).parquet(sigsDir(spark, indexPath))
           .select(col("id").as("corpus_id"), col("hs").as("hs_o"))
         val interVs = size(array_intersect(col("hs_n"), col("hs_o"))).cast("double")
         val jacHit = round(jaccard(col("hs_n"), col("hs_o")), 6) >= threshold
@@ -559,23 +596,28 @@ object Dedup {
           if (useJac && useCont) jacHit || contHit
           else if (useCont) contHit
           else jacHit
-        base.select(col("id").as("new_id"), col("hs").as("hs_n"))
-          .join(pairs, Seq("new_id"))
-          .join(idxSigs, Seq("corpus_id"))
+        // checkpointed: the drop list and both self-join sides below
+        // read it, and the checkpoint runs its three broadcasts once
+        idxSigs.join(broadcast(probe), Seq("corpus_id"))
           .where(vsCond)
-          .select(col("new_id").as("id")).distinct()
+          .select(col("new_id").as("id"))
+          .localCheckpoint(true)
       }
-    val survBuckets = capped.join(vsDup, Seq("id"), "left_anti")
-    val p2 = survBuckets.as("a").join(survBuckets.as("b"),
+    // intra-batch pairs among the vs-index survivors. Both self-join
+    // sides are the same plan, so they share one broadcast of `vsDup`;
+    // the cached rows keep the window's (band, key) partitioning, so the
+    // sort-merge self-join needs no exchange
+    val survBuckets = capped.join(broadcast(vsDup), Seq("id"), "left_anti")
+    val p2 = survBuckets.as("a").join(survBuckets.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // pairs-side broadcast, same shape as minhashCandidatePairs (bucket-
+    // pairs-side broadcasts, same shape as minhashCandidatePairs (bucket-
     // bounded intra-batch pair list; the batch pipeline itself is cached)
-    val scoredIntra = base.select(col("id").as("id_a"), col("hs").as("hs_a"))
+    val withA = base.select(col("id").as("id_a"), col("hs").as("hs_a"))
       .join(broadcast(p2), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
+    val scoredIntra = base.select(col("id").as("id_b"), col("hs").as("hs_b"))
+      .join(broadcast(withA), Seq("id_b"))
     val interIn = size(array_intersect(col("hs_a"), col("hs_b"))).cast("double")
     val contA = round(interIn / size(col("hs_a")), 6)
     val contB = round(interIn / size(col("hs_b")), 6)
@@ -597,25 +639,37 @@ object Dedup {
       .select(explode(array(
         when(dropA, col("id_a")), when(dropB, col("id_b")))).as("id"))
       .where(col("id").isNotNull)
-      .distinct()
     // materialize the (small) drop list once — it gates three consumers
-    // (two index writes + the admitted anti-join)
-    val dropIds = vsDup.union(intraLosers).distinct().localCheckpoint(true)
-    if (appendToIndex) {
-      base.join(dropIds, Seq("id"), "left_anti")
+    // (two index writes + the admitted anti-join), which are anti-joins,
+    // so a pair found in several bands may repeat an id: no step of the
+    // drop list pays a shuffle to deduplicate. Its column is renamed
+    // first: on an empty index `vsDup` is a projection of `base`, and a
+    // checkpoint that kept base's attribute would make `base ⋉ dropIds` a
+    // self-join the analyzer rejects without AQE ("Conflicting attributes")
+    val dropIds = vsDup.union(intraLosers)
+      .select(col("id").as("__drop")).localCheckpoint(true)
+    def survivors(df: DataFrame, key: String): DataFrame =
+      df.join(broadcast(dropIds), df(key) === dropIds("__drop"), "left_anti")
+    // the admitted checkpoint runs beside the index appends; sigs land
+    // before buckets (verification is an inner join, so a bucket row
+    // without its sig would hide a future duplicate)
+    val admit = () => Some(survivors(newDf, idCol)
+      .localCheckpoint(true)) // sever lineage before the caches release
+    val append = () => {
+      survivors(base, "id")
         .withColumn("__batch", lit(batchId))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch").parquet(sigsDir(spark, indexPath))
-      capped.join(dropIds, Seq("id"), "left_anti")
+      survivors(capped, "id")
         .withColumn("__batch", lit(batchId))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch").parquet(bucketsDir(spark, indexPath))
+      None
     }
-    val admitted = newDf
-      .join(dropIds.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint(true) // sever lineage before the caches release
+    val admitted = graft.ops.DriverPool.run(
+      if (appendToIndex) Seq(admit, append) else Seq(admit)).head.get
     if (ownProj) projected.unpersist(false)
-    bucketed.unpersist(false)
+    capped.unpersist(false)
     admitted
   }
 

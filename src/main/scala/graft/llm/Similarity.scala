@@ -272,7 +272,8 @@ object Similarity {
     // skew) + the batch-0 drift baseline (r9 verdict: "when to rebuild"
     // needs a measured number) — BOTH from one cached read of the
     // just-written files (round 15).
-    writeStatsSidecars(spark, path)
+    writeStatsSidecars(ivfVectors(spark, path), ivfCentroids(spark, path),
+      new org.apache.hadoop.fs.Path(path), "")
   }
 
   /** Incremental IVF append — the K9/K11 streaming follow-on that makes
@@ -334,7 +335,7 @@ object Similarity {
       assigned.groupBy(col("cell"), col("__batch"))
         .agg(count(lit(1)).as("n"))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$path/cell_stats")
+        .partitionBy("__batch").parquet(ivfStatsDir(spark, path, CellStats))
       // Per-batch centroid-drift metric (r9 verdict: rebuild-on-drift was
       // a policy knob with nothing measuring drift): the batch's own
       // distance-to-assigned-centroid distribution, landed next to
@@ -342,7 +343,7 @@ object Similarity {
       // over the already-persisted batch — zero additional source scans.
       driftStatsOf(assigned, centroids)
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$path/drift_stats")
+        .partitionBy("__batch").parquet(ivfStatsDir(spark, path, DriftStats))
     } finally assigned.unpersist(false)
   }
 
@@ -388,8 +389,12 @@ object Similarity {
       // centroids travel WITH the generation (r11): once a rebuild has
       // stored them in-generation, a later compaction must carry them
       // forward or GC of the rebuilt generation would orphan the geometry
-      ivfCentroids(spark, path).write.mode("overwrite")
+      val centroids = ivfCentroids(spark, path)
+      centroids.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
+      // cell stats + the drift baseline re-anchored on the compacted
+      // corpus (batch 0 is now "everything"), committed by the same marker
+      writeStatsSidecars(spark.read.parquet(staged.toString), centroids, staged, "_")
     }
     // a composed PQ code table is stale the moment the swap commits —
     // and when the PRE-compaction batch set was already {0} the
@@ -403,9 +408,6 @@ object Similarity {
     // replaying it under leftover tombstones is a harmless no-op.
     if (healCodes) healPqCodes(spark, path)
     if (removed.isDefined) graft.ops.Tombstones.clear(spark, path)
-    // cell stats + the drift baseline re-anchored on the compacted
-    // corpus (batch 0 is now "everything") — one cached read
-    writeStatsSidecars(spark, path)
   }
 
   /** Re-derive the composed PQ code table with its OWN recorded (m, k)
@@ -478,12 +480,12 @@ object Similarity {
         .parquet(staged.toString)
       centroids.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
+      writeStatsSidecars(spark.read.parquet(staged.toString), centroids, staged, "_")
     }
     // the rebuild read the corpus THROUGH the tombstone filter
     // (ivfVectors), so the committed generation is retraction-applied
     if (ivfRemovedSet(spark, path).isDefined)
       graft.ops.Tombstones.clear(spark, path)
-    writeStatsSidecars(spark, path)
     if (healCodes) healPqCodes(spark, path) // re-assigned cells = stale codes
   }
 
@@ -609,15 +611,35 @@ object Similarity {
     batches
   }
 
-  /** Both full-rewrite sidecars (cell stats + drift baseline) over ONE
-    * cached read of the persisted vectors (round 15): the cell agg and
-    * the drift distribution's count pass otherwise each rescan the
-    * just-written index — the build/compact/rebuild paths pay one scan
-    * instead of two (three with the exact-stats count pass).
+  private val CellStats = "cell_stats"
+  private val DriftStats = "drift_stats"
+
+  /** The CURRENT directory of an IVF stats sidecar (`cell_stats` or
+    * `drift_stats`). [[ivfCompact]] and [[ivfRebuild]] write both inside
+    * the vectors generation they commit (`_cell_stats/`,
+    * `_drift_stats/` — `_`-prefixed like `_centroids/`, and committed by
+    * the same marker), so a failed sidecar write leaves the previous
+    * generation current with its own sidecars. The base build, and an
+    * index last compacted before the sidecars moved in-generation, keep
+    * them at `$path/<name>`. Appends write where this resolves.
     */
-  private def writeStatsSidecars(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): Unit = {
-    val vecs = ivfVectors(spark, path)
+  private[graft] def ivfStatsDir(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, name: String): String = {
+    val inGen = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path), s"_$name")
+    if (ivfFs(spark, path).exists(inGen)) inGen.toString else s"$path/$name"
+  }
+
+  /** Both full-rewrite sidecars (cell stats + drift baseline) of
+    * `vectors` against `centroids`, written as `<prefix>cell_stats` and
+    * `<prefix>drift_stats` under `root`, over ONE cached read of the
+    * vectors (round 15): the cell agg and the drift distribution's count
+    * pass otherwise each rescan the just-written index — the
+    * build/compact/rebuild paths pay one scan instead of two (three with
+    * the exact-stats count pass).
+    */
+  private def writeStatsSidecars(vectors: DataFrame, centroids: DataFrame,
+                                 root: org.apache.hadoop.fs.Path, prefix: String): Unit = {
+    val vecs = vectors
       .select(col("cell"), col("__batch"), quantizeVec(col("v")).as("__qv"))
       .persist()
     try {
@@ -625,15 +647,16 @@ object Similarity {
       vecs.groupBy(col("cell"), col("__batch"))
         .agg(count(lit(1)).as("n"))
         .write.mode("overwrite")
-        .partitionBy("__batch").parquet(s"$path/cell_stats")
+        .partitionBy("__batch")
+        .parquet(new org.apache.hadoop.fs.Path(root, prefix + CellStats).toString)
       val d = vecs
-        .join(broadcast(ivfCentroids(spark, path)
-          .select(col("cell"), col("centroid"))), Seq("cell"))
+        .join(broadcast(centroids.select(col("cell"), col("centroid"))), Seq("cell"))
         .select(col("__batch"),
           squaredDistance(col("__qv"), col("centroid")).cast("long").as("__v"))
       exactGroupStats(d, "mean_d2", "p95_d2")
         .write.mode("overwrite")
-        .partitionBy("__batch").parquet(s"$path/drift_stats")
+        .partitionBy("__batch")
+        .parquet(new org.apache.hadoop.fs.Path(root, prefix + DriftStats).toString)
     } finally vecs.unpersist(false)
   }
 
@@ -718,10 +741,11 @@ object Similarity {
     // drift metric has no sidecar — and no measured baseline to compare
     // against. ivfCompact backfills it (writeStatsSidecars over the whole
     // compacted corpus) without a rebuild.
-    require(ivfFs(spark, path).exists(new org.apache.hadoop.fs.Path(s"$path/drift_stats")),
+    val driftDir = ivfStatsDir(spark, path, DriftStats)
+    require(ivfFs(spark, path).exists(new org.apache.hadoop.fs.Path(driftDir)),
       s"no drift_stats sidecar at $path (pre-drift index) — rebuild with " +
         "ivfWriteIndex or run ivfCompact once to establish the baseline")
-    val d = spark.read.parquet(s"$path/drift_stats")
+    val d = spark.read.parquet(driftDir)
       .select(col("__batch").cast("long").as("__batch"),
         col("n"), col("mean_d2"), col("p95_d2"))
     val base = d.orderBy(col("__batch")).limit(1).head()
@@ -742,7 +766,7 @@ object Similarity {
     */
   private[graft] def cellSizes(spark: org.apache.spark.sql.SparkSession,
                                path: String): DataFrame = {
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/cell_stats")
+    val statsPath = new org.apache.hadoop.fs.Path(ivfStatsDir(spark, path, CellStats))
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(statsPath))
       spark.read.parquet(statsPath.toString)

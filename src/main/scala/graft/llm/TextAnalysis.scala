@@ -767,6 +767,11 @@ object TextAnalysis {
   private val ScoresBase = "scores"
   private val OccBase = "occ"
 
+  /** The gram set's data schema (the `__batch` partition column comes
+    * from the directory names); reads pass it so no job infers it.
+    */
+  private val GramSetSchema = "h BIGINT"
+
   private def fsOfPath(spark: org.apache.spark.sql.SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -946,10 +951,19 @@ object TextAnalysis {
   }
 
   /** Score ONE arriving batch against the persisted gram set and fold
-    * it in — the batch's own gram projection, a membership probe
-    * against the index, one within-batch min-id pass for the genuinely
-    * new grams, and two dynamic overwrites (batch scores + the batch's
-    * distinct grams). Replay rewrites exactly itself.
+    * it in. The batch's gram projection feeds ONE checkpointed
+    * (h, min id) aggregate, which serves three consumers:
+    *   - the membership probe: its gram column is the batch's distinct
+    *     gram set;
+    *   - the first-occurrence table: the genuinely new grams are its rows
+    *     whose `h` the index has not seen (an anti-join on `h` commutes
+    *     with the group-by on `h`, so this equals grouping the unseen
+    *     occurrences);
+    *   - the gram-set append.
+    * Then three dynamic overwrites run side by side from the driver pool
+    * (batch scores, occurrence postings, the batch's distinct grams):
+    * the scores read only batches strictly below this one, so no write
+    * can change what another reads. Replay rewrites exactly itself.
     *
     * The membership probe is shaped so the INDEX IS SCANNED, NEVER
     * SHUFFLED: the batch's distinct gram set (batch-bounded) broadcasts
@@ -984,9 +998,11 @@ object TextAnalysis {
     val ownProj = projection.isEmpty
     val proj = projection.getOrElse(
       Dedup.shingleHashProjection(batch, textCol, idCol, n).persist())
-    if (ownProj) proj.count()
     try {
       val hd = proj.select(col("id"), explode(col("hs")).as("h"))
+      val grams = hd.groupBy(col("h")).agg(min(col("id")).as("__first"))
+        .localCheckpoint(true)
+      val gate = grams.count() <= maxBroadcastGrams
       // membership vs STRICTLY EARLIER batches (partition-pruned): on a
       // replay the batch's own grams are already indexed under its id,
       // and reading them back would score every replayed doc as 0-novel
@@ -1000,34 +1016,28 @@ object TextAnalysis {
       // gram-set row a LATER batch re-added after the kill is a revived
       // gram and stays seen (see [[pendingDeadGrams]]).
       val dead = pendingDeadGrams(spark, path)
-      val seen0 = spark.read.parquet(root.toString)
+      val seen0 = spark.read.schema(GramSetSchema).parquet(root.toString)
         .where(col("__batch") < batchId).select(col("h"), col("__batch"))
       val seen = dropDeadGrams(seen0, dead).select(col("h"))
-      val batchGrams = hd.select(col("h")).distinct().localCheckpoint(true)
-      val gate = batchGrams.count() <= maxBroadcastGrams
-      // grams of this batch the index has seen: index SCAN probing the
-      // broadcast batch set; duplicates across index batches collapse in
-      // the (small) distinct AFTER the semi-join
-      val stale =
-        if (gate) seen.join(broadcast(batchGrams), Seq("h"), "left_semi").distinct()
-        else seen.distinct()
-      // genuinely new grams: first occurrence is inside THIS batch
-      val fresh = hd.join(stale, Seq("h"), "left_anti")
-        .groupBy(col("h")).agg(min(col("id")).as("__first"))
+      // genuinely new grams (first occurrence inside THIS batch): the
+      // grams of this batch the index has seen are an index SCAN probing
+      // the broadcast batch set, and that batch-bounded result broadcasts
+      // into the anti-join as is (a gram several index batches hold
+      // repeats, which an anti-join ignores — no shuffle to dedupe it)
+      val fresh =
+        if (gate) grams.join(broadcast(
+          seen.join(broadcast(grams.select(col("h"))), Seq("h"), "left_semi")), Seq("h"), "left_anti")
+        else grams.join(seen.distinct(), Seq("h"), "left_anti")
+      def append(df: DataFrame, dir: String): () => Unit = () =>
+        df.withColumn("__batch", lit(batchId))
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("__batch").parquet(dir)
       // stats from the projection + the batch-bounded fresh table — the
       // old hd-rejoin re-shuffled every gram occurrence (noveltyStatsOf)
-      noveltyStatsOf(proj, fresh)
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(scoresDir(spark, path))
-      hd.select(col("h"), col("id"))
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(occDir(spark, path))
-      hd.select(col("h")).distinct()
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(root.toString)
+      graft.ops.DriverPool.run(Seq(
+        append(noveltyStatsOf(proj, fresh), scoresDir(spark, path)),
+        append(hd.select(col("h"), col("id")), occDir(spark, path)),
+        append(grams.select(col("h")), root.toString)))
     } finally if (ownProj) proj.unpersist(false)
   }
 
@@ -1177,22 +1187,6 @@ object TextAnalysis {
       removedDocs.select(col(idCol)), idCol, retractionId)
   }
 
-  /** Fold the novelty index's accumulated state — gram-set `__batch`
-    * fragments into one distinct `__batch=0`, and every LIVE retraction
-    * applied PHYSICALLY (the compaction-bakes rule shared with the LSH
-    * family): tombstoned docs leave the scores and occurrence tables,
-    * pending deltas bake into the survivors' `n_novel`, dead grams
-    * leave the gram set, and the sidecars + tombstones clear.
-    *
-    * Crash ordering (each swap is Generations-atomic; the windows
-    * between them are all read-safe): scores fold FIRST and carry the
-    * folded-retraction watermark in-generation, so a crash before the
-    * sidecar GC cannot double-apply a delta (readers skip ids at or
-    * below the mark); the gram-set and occ folds are subtractive, so
-    * replaying them over leftover sidecars is a no-op; tombstones clear
-    * LAST (an anti-join against already-removed rows is harmless).
-    * Re-running a crashed compact heals every window.
-    */
   /** Threshold-gated maintenance for the novelty index — the
     * bm25Maintain reporting shape: COMPACT when retractions are pending
     * (they fold physically and clear) or the gram set has fragmented
@@ -1211,6 +1205,22 @@ object TextAnalysis {
     } else "none"
   }
 
+  /** Fold the novelty index's accumulated state — gram-set `__batch`
+    * fragments into one distinct `__batch=0`, and every LIVE retraction
+    * applied PHYSICALLY (the compaction-bakes rule shared with the LSH
+    * family): tombstoned docs leave the scores and occurrence tables,
+    * pending deltas bake into the survivors' `n_novel`, dead grams
+    * leave the gram set, and the sidecars + tombstones clear.
+    *
+    * Crash ordering (each swap is Generations-atomic; the windows
+    * between them are all read-safe): scores fold FIRST and carry the
+    * folded-retraction watermark in-generation, so a crash before the
+    * sidecar GC cannot double-apply a delta (readers skip ids at or
+    * below the mark); the gram-set and occ folds are subtractive, so
+    * replaying them over leftover sidecars is a no-op; tombstones clear
+    * LAST (an anti-join against already-removed rows is harmless).
+    * Re-running a crashed compact heals every window.
+    */
   def noveltyCompact(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsOfPath(spark, path)

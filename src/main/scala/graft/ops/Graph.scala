@@ -304,23 +304,6 @@ object Graph extends org.apache.spark.internal.Logging {
                                     path: String): Option[Long] =
     StateFiles.read(fs, new Path(pairStoreDir(fs, path), PairsWatermarkFile))(_.toLong)
 
-  /** COMPACT the pair-evidence store: physically drop every pair
-    * touching a tombstoned (retracted) id, fold all `__batch` fragments
-    * (including the append-mode `__batch=-1` area, whose re-run
-    * duplicates collapse in the distinct) into one `__batch=0`, and
-    * clear the tombstones — the graph family's twin of the LSH / BM25 /
-    * novelty compactions, and the step that DISCHARGES the re-ingest
-    * precondition: after this, [[foldBatch]]'s tombstone guard passes
-    * for a previously retracted id because no stale evidence about it
-    * survives anywhere.
-    *
-    * Crash ordering: the rewrite rides a [[Generations]] swap (readers
-    * resolve a complete store at every instant); the folded-batch
-    * watermark commits with the swap, so a replayed streaming fold can
-    * never overwrite the folded partition; tombstones clear LAST — a
-    * crash before the clear re-runs the (idempotent) prune over the
-    * already-pruned store.
-    */
   /** Threshold-gated maintenance for the pair store — the engine's
     * standard reporting shape: COMPACT when retraction tombstones are
     * pending (stale evidence to prune — and the step that re-opens
@@ -341,6 +324,23 @@ object Graph extends org.apache.spark.internal.Logging {
     } else "none"
   }
 
+  /** COMPACT the pair-evidence store: physically drop every pair
+    * touching a tombstoned (retracted) id, fold all `__batch` fragments
+    * (including the append-mode `__batch=-1` area, whose re-run
+    * duplicates collapse in the distinct) into one `__batch=0`, and
+    * clear the tombstones — the graph family's twin of the LSH / BM25 /
+    * novelty compactions, and the step that DISCHARGES the re-ingest
+    * precondition: after this, [[foldBatch]]'s tombstone guard passes
+    * for a previously retracted id because no stale evidence about it
+    * survives anywhere.
+    *
+    * Crash ordering: the rewrite rides a [[Generations]] swap (readers
+    * resolve a complete store at every instant); the folded-batch
+    * watermark commits with the swap, so a replayed streaming fold can
+    * never overwrite the folded partition; tombstones clear LAST — a
+    * crash before the clear re-runs the (idempotent) prune over the
+    * already-pruned store.
+    */
   def pairsCompact(spark: SparkSession, path: String): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

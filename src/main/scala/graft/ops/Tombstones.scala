@@ -42,7 +42,7 @@ object Tombstones {
     */
   def set(spark: SparkSession, indexPath: String): Option[DataFrame] =
     if (retIds(spark, indexPath).isEmpty) None
-    else Some(spark.read.parquet(dir(indexPath)).select(col("id")))
+    else Some(spark.read.schema("id BIGINT").parquet(dir(indexPath)).select(col("id")))
 
   /** Write one retraction batch. Loudly refuses non-long-castable ids. */
   def write(spark: SparkSession, indexPath: String, removedIds: DataFrame,

@@ -464,8 +464,10 @@ object Ingest {
     // over the intake feeds the NB gate's occurrence frame AND the
     // shingle projection — before this, the gate re-tokenized the batch
     // the projection had already tokenized (the k21 verdict's remaining
-    // shared-pass win). Cached once; identical expressions keep both
-    // consumers bit-identical to their standalone paths.
+    // shared-pass win). Identical expressions keep both consumers
+    // bit-identical to their standalone paths. The three caches below
+    // are filled by the first job that reads them (the dedup stage's
+    // bucket rows) — an eager count per cache would only add jobs.
     val parallelism = spark.sparkContext.defaultParallelism
     val toks = intake
       .select(col(idCol).as("id"), col(textCol).as("__text"))
@@ -474,7 +476,6 @@ object Ingest {
         graft.functions.TextFunctions.tokens(
           graft.functions.TextFunctions.normalizeText(col("__text"))).as("__toks"))
       .persist()
-    toks.count()
     // stage 1 — quality gate against the frozen model; the gated frame
     // (with its audit columns) feeds every later stage, so cache it
     val scored = graft.llm.Classifier
@@ -484,15 +485,12 @@ object Ingest {
       .withColumnRenamed("doc", "__doc")
     val gated = intake.join(scored, intake(idCol) === scored("__doc"), "inner")
       .drop("__doc").persist()
-    gated.count()
     // the shingle projection rides the SAME token cache, restricted to
     // the gate's survivors
     val proj = Dedup.shingleHashProjectionFromTokens(
         toks.join(gated.select(col(idCol).cast(toks.schema("id").dataType).as("id")),
           Seq("id"), "left_semi"), shingleN)
       .persist()
-    proj.count()
-    toks.unpersist(false)
     try {
       // stage 2 — near-dedup vs index + intra-batch; survivors append
       // to the LSH index inside the call
@@ -546,7 +544,7 @@ object Ingest {
               sourceCol, "predicted", idCol, batchId, noveltyPath)
         })).flatten
       graft.ops.DriverPool.run(stageTasks.map(t => () => { t(); () }))
-    } finally { proj.unpersist(false); gated.unpersist(false) }
+    } finally { proj.unpersist(false); gated.unpersist(false); toks.unpersist(false) }
   }
 
   /** Attach [[curateBatch]] to a streaming frame of documents — the

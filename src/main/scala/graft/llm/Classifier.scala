@@ -288,10 +288,8 @@ object Classifier {
               path: String): Unit = {
     val spark = docs.sparkSession
     graft.ops.Generations.reset(fsOf(spark, path), new Path(path), CountsBase)
-    nbTrain(docs, textCol, labelCol)
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch")
-      .parquet(s"$path/$CountsBase")
+    graft.ops.Generations.writeBatch(nbTrain(docs, textCol, labelCol),
+      s"$path/$CountsBase", 0L)
   }
 
   /** Append ONE labeled batch's counts under its own `__batch` partition
@@ -306,10 +304,8 @@ object Classifier {
     val root = new Path(countsDir(spark, path))
     require(fsOf(spark, path).exists(root),
       s"no NB model at $path — run nbWrite first")
-    nbTrain(batch, textCol, labelCol)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(root.toString)
+    graft.ops.Generations.writeBatch(nbTrain(batch, textCol, labelCol),
+      root.toString, batchId)
   }
 
   /** The persisted model's summed count table — one bounded aggregation
@@ -344,11 +340,9 @@ object Classifier {
     val root = new Path(countsDir(spark, path))
     require(fsOf(spark, path).exists(root),
       s"no NB model at $path — run nbWrite first")
-    nbTrain(removedDocs, textCol, labelCol)
-      .select(col("label"), col("word"), (-col("c")).as("c"))
-      .withColumn("__batch", lit(-(retractionId + 1L)))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(root.toString)
+    graft.ops.Generations.writeBatch(nbTrain(removedDocs, textCol, labelCol)
+        .select(col("label"), col("word"), (-col("c")).as("c")),
+      root.toString, -(retractionId + 1L))
   }
 
   /** Classify documents THROUGH the persisted model — [[nbClassify]]
@@ -380,11 +374,11 @@ object Classifier {
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, CountsBase)
     graft.ops.Generations.swap(fs, root, CountsBase) { staged =>
-      spark.read.schema(CountsSchema).parquet(cur.toString)
-        .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
-        .where(col("c") =!= 0L) // retraction-cancelled rows bake away
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(
+        spark.read.schema(CountsSchema).parquet(cur.toString)
+          .groupBy(col("label"), col("word")).agg(sum(col("c")).as("c"))
+          .where(col("c") =!= 0L), // retraction-cancelled rows bake away
+        staged.toString, 0L)
     }
   }
 
@@ -404,9 +398,8 @@ object Classifier {
       s"no NB model at $path — nbRetrain replaces an existing model; " +
         "use nbWrite for the initial build")
     graft.ops.Generations.swap(fs, root, CountsBase) { staged =>
-      nbTrain(docs, textCol, labelCol)
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(nbTrain(docs, textCol, labelCol),
+        staged.toString, 0L)
     }
   }
 

@@ -386,7 +386,9 @@ object Dedup {
     * LLM-data workflow is "dedup today's crawl against the existing
     * corpus", and rebuilding signatures over 100 TB per batch is a
     * non-starter; with the index persisted, a new batch costs only its own
-    * signature pass plus two joins against the index.
+    * signature pass plus two joins against the index. Both tables land
+    * under `__batch=0` (the simhash/IVF layout), so
+    * [[ingestAgainstIndex]] appends later batches beside the base build.
     *
     * `maxBucketSize` applies the same over-wide-bucket cap as
     * [[minhashCandidatePairs]] AT WRITE TIME: an uncapped degenerate
@@ -407,11 +409,12 @@ object Dedup {
     val projected = shingleHashProjection(df, textCol, idCol, shingleN).persist()
     projected.count()
     val base = projected.where(size(col("hs")) > 0)
-    base.write.mode("overwrite").parquet(s"$path/sigs")
+    graft.ops.Generations.writeBatch(base, s"$path/sigs", 0L)
     val bucketed = bandBucketRows(base, k, bands).persist()
     bucketed.count()
-    capOverWideBuckets(bucketed, maxBucketSize, "minhashIndexWrite")._1
-      .write.mode("overwrite").parquet(s"$path/buckets")
+    graft.ops.Generations.writeBatch(
+      capOverWideBuckets(bucketed, maxBucketSize, "minhashIndexWrite")._1,
+      s"$path/buckets", 0L)
     bucketed.unpersist(false)
     projected.unpersist(false)
   }
@@ -495,9 +498,9 @@ object Dedup {
     *     vs-index survivors, greater id loses (min-id-wins greedy);
     *   - append: survivors' (id, hs) and bucket rows, batch-partitioned.
     * Shingle-less docs (< shingleN tokens) are LSH-invisible and always
-    * admitted — see Ingest's exactGuard for their dedup story.
-    * `appendToIndex` requires the index to be empty or batch-partitioned
-    * (an ingest-maintained layout, NOT a static `minhashIndexWrite`).
+    * admitted — see Ingest's exactGuard for their dedup story. The index
+    * must be empty or batch-partitioned ([[minhashIndexWrite]] or ingest
+    * appends); a root-file layout is refused.
     */
   def ingestAgainstIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                          batchId: Long, newDf: DataFrame, textCol: String, idCol: String,
@@ -529,28 +532,12 @@ object Dedup {
     val useCont = scorer != "jaccard"
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      graft.ops.Generations.batchIds(fs, p).nonEmpty ||
-        fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    // enforce the layout precondition rather than corrupt: appending
-    // __batch= partitions into a static (root-file) index would leave a
-    // mixed layout parquet partition discovery rejects
-    if (appendToIndex) {
-      def static(dir: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")) &&
-          graft.ops.Generations.batchIds(fs, p).isEmpty
-      }
-      // check BOTH halves: a fully-capped static write leaves sigs/ with
-      // root files while buckets/ is empty — appending would still corrupt
-      val mixed = static(bucketsDir(spark, indexPath)) || static(sigsDir(spark, indexPath))
-      require(!mixed,
-        s"index at $indexPath has the static minhashIndexWrite layout (root data " +
-          "files); ingestAgainstIndex appends need the batch-partitioned layout — " +
-          "start from an empty index dir (or rebuild via ingest batches)")
-    }
+    // both halves are checked, and the bucket ids say whether there is
+    // an index to dedup against at all
+    graft.ops.Generations.requireBatchLayout(fs,
+      new org.apache.hadoop.fs.Path(sigsDir(spark, indexPath)))
+    val indexed = graft.ops.Generations.requireBatchLayout(fs,
+      new org.apache.hadoop.fs.Path(bucketsDir(spark, indexPath))).nonEmpty
     // `projection` lets a composed pipeline (Ingest.curateBatch) share
     // ONE shingle pass across dedup and novelty: it must be
     // shingleHashProjection(newDf, textCol, idCol, shingleN), already
@@ -567,7 +554,7 @@ object Dedup {
     val bucketsSchema = capped.schema
     val sigsSchema = base.schema
     val vsDup =
-      if (!hasData(bucketsDir(spark, indexPath)))
+      if (!indexed)
         base.select(col("id")).where(lit(false)) // typed empty
       else {
         // the index sides are SCANS probed by broadcast batch-side sets
@@ -656,14 +643,10 @@ object Dedup {
     val admit = () => Some(survivors(newDf, idCol)
       .localCheckpoint(true)) // sever lineage before the caches release
     val append = () => {
-      survivors(base, "id")
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(sigsDir(spark, indexPath))
-      survivors(capped, "id")
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(bucketsDir(spark, indexPath))
+      graft.ops.Generations.writeBatch(survivors(base, "id"),
+        sigsDir(spark, indexPath), batchId)
+      graft.ops.Generations.writeBatch(survivors(capped, "id"),
+        bucketsDir(spark, indexPath), batchId)
       None
     }
     val admitted = graft.ops.DriverPool.run(
@@ -711,20 +694,15 @@ object Dedup {
       .agg(count(lit(1)).as("__bw")).where(col("__bw") > maxBucketSize)
       .select(col("band"), col("key"))
     val kept = b.join(wide, Seq("band", "key"), "left_anti")
-    // a batch-partitioned frame folds into `__batch=0`; a flat one stays flat
     def fold(out: DataFrame)(staged: org.apache.hadoop.fs.Path): Unit =
-      (if (out.columns.contains("__batch"))
-        out.withColumn("__batch", lit(0L)).write.mode("overwrite").partitionBy("__batch")
-      else out.write.mode("overwrite")).parquet(staged.toString)
+      graft.ops.Generations.writeBatch(out, staged.toString, 0L)
     graft.ops.Generations.swap(fs, root, "buckets")(fold(kept))
     // MinHash sigs: fold the per-batch fragments too (no width pass —
     // sigs are verification payload, the cap is a bucket concern)
     val sigsCur = graft.ops.Generations.currentDir(fs, root, "sigs")
-    if (fs.exists(sigsCur)) {
-      val s = dropRemoved(spark.read.parquet(sigsCur.toString), removed, "id")
-      if (s.columns.contains("__batch") || removed.isDefined)
-        graft.ops.Generations.swap(fs, root, "sigs")(fold(s))
-    }
+    if (fs.exists(sigsCur))
+      graft.ops.Generations.swap(fs, root, "sigs")(
+        fold(dropRemoved(spark.read.parquet(sigsCur.toString), removed, "id")))
     // tombstones are now baked into the committed generations — clear
     // them (a crash mid-delete leaves no-op tombstones for ids that are
     // already gone; readers stay correct at every point)
@@ -750,8 +728,7 @@ object Dedup {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no index at $path — build it first")
     // __batch partition-directory names — an FS listing, no Spark job
-    // (a flat pre-batch layout counts as one batch)
-    val live = graft.ops.Generations.batchIds(fs, root).size.max(1)
+    val live = graft.ops.Generations.batchIds(fs, root).size
     // pending tombstones are the second degradation (round 13): every
     // read anti-joins them until a compaction bakes them physically —
     // and baking them is what re-opens their ids for ingest
@@ -1174,9 +1151,9 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     val banded = simhashBandedRows(df, textCol, idCol, bits, maxHamming).persist()
     banded.count() // width probe + the capped write read the cache
-    try capOverWideBuckets(banded, maxBucketSize, "simhashIndexWrite")._1
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(s"$path/buckets")
+    try graft.ops.Generations.writeBatch(
+      capOverWideBuckets(banded, maxBucketSize, "simhashIndexWrite")._1,
+      s"$path/buckets", 0L)
     finally banded.unpersist(false)
   }
 
@@ -1226,15 +1203,12 @@ object Dedup {
     val bRoot = new org.apache.hadoop.fs.Path(bucketsDir(spark, path))
     val fs = bRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(bRoot), s"no simhash index at $path — run simhashIndexWrite first")
-    require(graft.ops.Generations.batchIds(fs, bRoot).nonEmpty,
-      s"$bRoot is not the batch-partitioned layout: rebuild with simhashIndexWrite " +
-        "before appending")
+    graft.ops.Generations.requireBatchLayout(fs, bRoot)
     val banded = simhashBandedRows(newDf, textCol, idCol, bits, maxHamming).persist()
     banded.count()
-    try capOverWideBuckets(banded, maxBucketSize, s"simhashAppendBatch(batch $batchId)")._1
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(bRoot.toString)
+    try graft.ops.Generations.writeBatch(
+      capOverWideBuckets(banded, maxBucketSize, s"simhashAppendBatch(batch $batchId)")._1,
+      bRoot.toString, batchId)
     finally banded.unpersist(false)
   }
 

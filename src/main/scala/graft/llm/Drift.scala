@@ -182,10 +182,8 @@ object Drift {
       s"batchId $batchId is at or below the drift-state compaction " +
         s"watermark ${wm.get} — batches folded by driftCompact cannot be " +
         "replayed (drop the accumulating stream's checkpoint before compacting)")
-    binCounts(batch, groupCol, binCol, nBins)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(curDir(spark, path))
+    graft.ops.Generations.writeBatch(binCounts(batch, groupCol, binCol, nBins),
+      curDir(spark, path), batchId)
   }
 
   private def retDir(path: String) = s"$path/ret"
@@ -208,11 +206,9 @@ object Drift {
     require(!folded.contains(retractionId),
       s"retractionId $retractionId was already folded by driftCompact at " +
         s"$path — folded retraction ids are retired; use a fresh id")
-    binCounts(removedDocs, groupCol, binCol, nBins)
-      .withColumn("c", -col("c"))
-      .withColumn("__batch", lit(retractionId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(retDir(path))
+    graft.ops.Generations.writeBatch(
+      binCounts(removedDocs, groupCol, binCol, nBins).withColumn("c", -col("c")),
+      retDir(path), retractionId)
   }
 
   /** The drift TIME SERIES: one PSI row per (accumulated batch, group) —
@@ -547,8 +543,7 @@ object Drift {
     val retIds = graft.ops.Generations.batchIds(fs, retP)
     val live = liveCounts(spark, path) // cur + unfolded ret, netted, guarded
     graft.ops.Generations.swap(fs, root, CurBase) { staged =>
-      live.withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(live, staged.toString, 0L)
       graft.ops.StateFiles.replace(fs,
         new org.apache.hadoop.fs.Path(staged, CompactWatermarkFile), wm.toString.getBytes("UTF-8"))
       if (retIds.nonEmpty)

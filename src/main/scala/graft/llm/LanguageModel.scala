@@ -268,10 +268,8 @@ object LanguageModel {
               path: String): Unit = {
     val spark = docs.sparkSession
     graft.ops.Generations.reset(fsOf(spark, path), new Path(path), BigramsBase)
-    lmTrain(docs, textCol, idCol)
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch")
-      .parquet(s"$path/$BigramsBase")
+    graft.ops.Generations.writeBatch(lmTrain(docs, textCol, idCol),
+      s"$path/$BigramsBase", 0L)
   }
 
   /** Append ONE document batch's bigram counts under their own `__batch`
@@ -287,10 +285,8 @@ object LanguageModel {
     val root = new Path(bigramsDir(spark, path))
     require(fsOf(spark, path).exists(root),
       s"no LM model at $path — run lmWrite first")
-    lmTrain(batch, textCol, idCol)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(root.toString)
+    graft.ops.Generations.writeBatch(lmTrain(batch, textCol, idCol),
+      root.toString, batchId)
   }
 
   /** RETRACT documents from the persisted model — counts are ADDITIVE,
@@ -314,11 +310,9 @@ object LanguageModel {
     val root = new Path(bigramsDir(spark, path))
     require(fsOf(spark, path).exists(root),
       s"no LM model at $path — run lmWrite first")
-    lmTrain(removedDocs, textCol, idCol)
-      .select(col("w1"), col("w2"), (-col("c")).as("c"))
-      .withColumn("__batch", lit(-(retractionId + 1L)))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(root.toString)
+    graft.ops.Generations.writeBatch(lmTrain(removedDocs, textCol, idCol)
+        .select(col("w1"), col("w2"), (-col("c")).as("c")),
+      root.toString, -(retractionId + 1L))
   }
 
   /** The persisted model's summed bigram table — one vocab²-bounded
@@ -360,11 +354,10 @@ object LanguageModel {
     val fs = fsOf(spark, path)
     val cur = graft.ops.Generations.currentDir(fs, root, BigramsBase)
     graft.ops.Generations.swap(fs, root, BigramsBase) { staged =>
-      spark.read.parquet(cur.toString)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c"))
-        .where(col("c") =!= 0L) // retraction-cancelled rows bake away
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(spark.read.parquet(cur.toString)
+          .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c"))
+          .where(col("c") =!= 0L), // retraction-cancelled rows bake away
+        staged.toString, 0L)
     }
   }
 

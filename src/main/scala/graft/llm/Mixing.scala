@@ -336,11 +336,8 @@ object Mixing {
     // corpus writer (ingestBatch/curateBatch): a raw-root write after a
     // corpusCompact would land admissions in the superseded layout —
     // invisible to admitted() and deleted by the next compact/vacuum
-    admitted
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(graft.streaming.Ingest.corpusDataDir(spark, admittedDir))
+    graft.ops.Generations.writeBatch(admitted,
+      graft.streaming.Ingest.corpusDataDir(spark, admittedDir), batchId)
   }
 
   /** The admission CORE of [[mixGateBatch]]: updates the persisted
@@ -407,11 +404,9 @@ object Mixing {
           .drop("__rn", "__pn", "__pt", "__cum")
           .withColumnRenamed("__nt", "n_tokens")
           .localCheckpoint(true) // sever lineage before the caches release
-        stageA.groupBy(col(sourceCol))
-          .agg(count(lit(1)).as("n_surv"), sum(col("__nt")).as("t_surv"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(totalsDir)
+        graft.ops.Generations.writeBatch(stageA.groupBy(col(sourceCol))
+            .agg(count(lit(1)).as("n_surv"), sum(col("__nt")).as("t_surv")),
+          totalsDir, batchId)
         admitted
       } finally stageA.unpersist(false)
     } finally b.unpersist(false)

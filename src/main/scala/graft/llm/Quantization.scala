@@ -335,7 +335,12 @@ object Quantization {
     val vecs = Similarity.ivfVectors(spark, path)
     val model = pqTrain(vecs, "v", "id", m, k, lloydRounds)
     val batches = Similarity.ivfLiveBatches(spark, path)
-    writeCodesAndDrift(vecs, model, path, dynamic = false)
+    // a full re-encode replaces both tables: drop the previous encode's
+    // batches (an index compaction may have folded them away)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("pq_codes", "pq_drift_stats").foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+    writeCodesAndDrift(vecs, model, path)
     writeModelSidecar(spark, model, batches, path)
     model
   }
@@ -349,12 +354,10 @@ object Quantization {
     * writes read it back. Round 11 shipped these as two separate full
     * scans (the encode pass + a second HOF quant-error pass — the
     * round's only real bench regression, ~2× on `k4_ivf_pq_encode`);
-    * fused, the corpus is read once. `dynamic` overwrites only the
-    * written partitions (the append path); a full write replaces both
-    * tables.
+    * fused, the corpus is read once. Both writes overwrite only the
+    * batches they encode.
     */
-  private def writeCodesAndDrift(vecs: DataFrame, model: PqModel, path: String,
-                                 dynamic: Boolean): Unit = {
+  private def writeCodesAndDrift(vecs: DataFrame, model: PqModel, path: String): Unit = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val cbRow = Seq(Tuple1(model.codebooks)).toDF("__cb")
@@ -371,19 +374,16 @@ object Quantization {
       .persist()
     enc.count() // two consumers: the code table and the drift sidecar
     try {
-      val w1 = enc.select(col("id"), col("cell"), col("__batch"), col("code"))
-        .write.mode("overwrite")
-      (if (dynamic) w1.option("partitionOverwriteMode", "dynamic") else w1)
-        .partitionBy("cell", "__batch").parquet(s"$path/pq_codes")
+      graft.ops.Generations.writeBatches(
+        enc.select(col("id"), col("cell"), col("__batch"), col("code")),
+        s"$path/pq_codes", "cell")
       // exact since r15: the quantization error is an integer in the
       // fixed-point space, so the per-batch stats ride the shared
       // exact mean + inverse-CDF p95 (oracle-matched, no approx sketch)
       val stats = Similarity.exactGroupStats(
         enc.select(col("__batch"), col("__qe").cast("long").as("__v")),
         "mean_qe", "p95_qe")
-      val w2 = stats.write.mode("overwrite")
-      (if (dynamic) w2.option("partitionOverwriteMode", "dynamic") else w2)
-        .partitionBy("__batch").parquet(s"$path/pq_drift_stats")
+      graft.ops.Generations.writeBatches(stats, s"$path/pq_drift_stats")
     } finally enc.unpersist(false)
   }
 
@@ -425,26 +425,18 @@ object Quantization {
                        batchId: Long): PqModel = {
     require(batchId > 0, s"batchId must be > 0 (batch 0 is the base encode): $batchId")
     val (model, encodedBatches) = pqLoadModel(spark, path)
-    // refuse a pre-batch-layout code table rather than corrupt it:
-    // writing __batch= leaves under cell dirs whose files sit flat would
-    // break partition discovery on every future read (the ivfAppendBatch
-    // mixed-depth guard, for codes; listing is nCells-bounded)
+    // refuse a pre-batch-layout code table rather than corrupt it
     val codesRoot = new org.apache.hadoop.fs.Path(s"$path/pq_codes")
     val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(codesRoot), s"no code table at $path — run ivfPqWriteCodes first")
-    val flatCell = fs.listStatus(codesRoot).map(_.getPath)
-      .filter(_.getName.startsWith("cell="))
-      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
-    require(!flatCell,
-      s"$codesRoot is not the batch-partitioned layout (pre-append code table): " +
-        "re-derive it with ivfPqWriteCodes before appending")
+    graft.ops.Generations.requireBatchLayout(fs, codesRoot)
     // existence from partition-directory names — no probe job; a batch
     // dir exists iff ivfAppendBatch landed rows for it
     require(Similarity.ivfLiveBatches(spark, path).contains(batchId),
       s"no __batch=$batchId in the index at $path — run ivfAppendBatch first")
     val batch = Similarity.ivfVectors(spark, path)
       .where(col("__batch") === batchId)
-    writeCodesAndDrift(batch, model, path, dynamic = true)
+    writeCodesAndDrift(batch, model, path)
     writeModelSidecar(spark, model, (encodedBatches :+ batchId).distinct.sorted, path)
     model
   }

@@ -161,20 +161,16 @@ object Search {
     import spark.implicits._
     graft.ops.Generations.reset(fsOf(spark, path), new Path(path), PostingsBase)
     graft.ops.Generations.reset(fsOf(spark, path), new Path(path), StatsBase)
-    postingsOf(docs, textCol, idCol, nBuckets)
-      .withColumn("__batch", lit(0L))
-      // layout-aligned write (r19, guide §6): without this the tf
-      // aggregate's (doc, dl, term)-keyed tasks each write up to
-      // nBuckets `tb=` dirs — shufflePartitions × nBuckets small files
-      // per build. One repartition on the layout column lands ~one file
-      // per bucket; write parallelism = nBuckets, which is the sizing
-      // knob production passes proportional to the corpus anyway.
-      .repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb", "__batch")
-      .parquet(s"$path/$PostingsBase")
-    statsOf(docs, textCol)
-      .withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("__batch").parquet(s"$path/$StatsBase")
+    // layout-aligned write (r19, guide §6): without the repartition the
+    // tf aggregate's (doc, dl, term)-keyed tasks each write up to
+    // nBuckets `tb=` dirs — shufflePartitions × nBuckets small files per
+    // build. One repartition on the layout column lands ~one file per
+    // bucket; write parallelism = nBuckets, which is the sizing knob
+    // production passes proportional to the corpus anyway.
+    graft.ops.Generations.writeBatch(
+      postingsOf(docs, textCol, idCol, nBuckets).repartition(col("tb")),
+      s"$path/$PostingsBase", 0L, "tb")
+    graft.ops.Generations.writeBatch(statsOf(docs, textCol), s"$path/$StatsBase", 0L)
     Seq(nBuckets).toDF("n_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -189,16 +185,14 @@ object Search {
 
   /** The postings' live `__batch` set from partition-directory names —
     * nBuckets-bounded FS listings, no Spark job (the
-    * [[Similarity.ivfLiveBatches]] metadata entry point, for text).
+    * [[Similarity.ivfLiveBatches]] metadata entry point, for text). A
+    * pre-batch flat layout refuses.
     */
   private[graft] def liveBatches(spark: SparkSession, path: String): Seq[Long] = {
     val fs = fsOf(spark, path)
     val root = new Path(postingsDir(spark, path))
     require(fs.exists(root), s"no BM25 index at $path — run bm25IndexWrite first")
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("tb="))
-      .flatMap(graft.ops.Generations.batchIds(fs, _))
-      .distinct.sorted.toSeq
+    graft.ops.Generations.requireBatchLayout(fs, root)
   }
 
   /** The stats sidecar's `__batch` set — same dir-name listing. */
@@ -224,22 +218,12 @@ object Search {
     val root = new Path(postingsDir(spark, path))
     val fs = fsOf(spark, path)
     require(fs.exists(root), s"no BM25 index at $path — run bm25IndexWrite first")
-    // refuse a pre-batch-layout postings dir rather than corrupt it (the
-    // ivfAppendBatch mixed-depth guard; listing is nBuckets-bounded)
-    val flatBucket = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("tb="))
-      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
-    require(!flatBucket,
-      s"$root is not the batch-partitioned layout — rebuild with bm25IndexWrite")
-    postingsOf(batch, textCol, idCol, nBuckets)
-      .withColumn("__batch", lit(batchId))
-      .repartition(col("tb")) // one file per touched bucket per batch (r19)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tb", "__batch").parquet(root.toString)
-    statsOf(batch, textCol)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(statsDir(spark, path))
+    graft.ops.Generations.requireBatchLayout(fs, root)
+    graft.ops.Generations.writeBatch(
+      postingsOf(batch, textCol, idCol, nBuckets)
+        .repartition(col("tb")), // one file per touched bucket per batch (r19)
+      root.toString, batchId, "tb")
+    graft.ops.Generations.writeBatch(statsOf(batch, textCol), statsDir(spark, path), batchId)
   }
 
   /** BM25 scored search THROUGH the index — same scores, same exactness
@@ -303,12 +287,10 @@ object Search {
     require(retractionId >= 0L, s"retractionId must be >= 0: $retractionId")
     readMeta(spark, path) // loud no-index refusal
     graft.ops.Tombstones.write(spark, path, removedDocs, idCol, retractionId)
-    statsOf(removedDocs, textCol)
-      .select((-col("n_docs")).as("n_docs"), (-col("n_docs_dl")).as("n_docs_dl"),
-        (-col("sum_dl")).as("sum_dl"))
-      .withColumn("__batch", lit(-(retractionId + 1L)))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(statsDir(spark, path))
+    graft.ops.Generations.writeBatch(statsOf(removedDocs, textCol)
+        .select((-col("n_docs")).as("n_docs"), (-col("n_docs_dl")).as("n_docs_dl"),
+          (-col("sum_dl")).as("sum_dl")),
+      statsDir(spark, path), -(retractionId + 1L))
   }
 
   def bm25Indexed(spark: SparkSession, path: String, query: Seq[String],
@@ -403,12 +385,10 @@ object Search {
       case Some(r) => spark.read.parquet(cur.toString).join(r, Seq("doc"), "left_anti")
     }
     graft.ops.Generations.swap(fs, root, PostingsBase) { staged =>
-      folded
-        .select(col("term"), col("doc"), col("tf"), col("dl"), col("tb"))
-        .repartition(col("tb"))
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("tb", "__batch")
-        .parquet(staged.toString)
+      graft.ops.Generations.writeBatch(
+        folded.select(col("term"), col("doc"), col("tf"), col("dl"), col("tb"))
+          .repartition(col("tb")),
+        staged.toString, 0L, "tb")
     }
     // clear tombstones BEFORE collapsing stats: after this point they
     // are no-ops (the ids are out of the committed postings), and the
@@ -417,11 +397,10 @@ object Search {
     if (removed.isDefined) graft.ops.Tombstones.clear(spark, path)
     val stats = statsDir(spark, path)
     graft.ops.Generations.swap(fs, root, StatsBase) { staged =>
-      spark.read.parquet(stats)
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_docs_dl")).as("n_docs_dl"),
-          sum(col("sum_dl")).as("sum_dl"))
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(spark.read.parquet(stats)
+          .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_docs_dl")).as("n_docs_dl"),
+            sum(col("sum_dl")).as("sum_dl")),
+        staged.toString, 0L)
     }
   }
 

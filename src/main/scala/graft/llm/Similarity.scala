@@ -257,16 +257,19 @@ object Similarity {
     // A rebuild at a previously-compacted path must not stay shadowed by
     // a stale committed generation — clear all generation state first so
     // the fresh `vectors/` (generation 0) is what readers resolve.
-    graft.ops.Generations.reset(ivfFs(spark, path), new org.apache.hadoop.fs.Path(path), "vectors")
+    val fs = ivfFs(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    graft.ops.Generations.reset(fs, root, "vectors")
+    // the base-build stats sidecars sit outside the vectors generations:
+    // clear the previous lineage's appended batches before rewriting them
+    Seq(CellStats, DriftStats).foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
     val (indexed, centroids) = ivfIndex(corpus, vecCol, idCol, nCells, lloydRounds)
     // `__batch` is the second partition level from day one (base build =
     // batch 0) so incremental appends ([[ivfAppendBatch]]) land as new
     // directories under each cell with replay-idempotent dynamic
     // overwrite — the LSH ingest layout precedent. Partition pruning on
     // `cell` (the first level) is unaffected.
-    indexed.withColumn("__batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "__batch")
-      .parquet(s"$path/vectors")
+    graft.ops.Generations.writeBatch(indexed, s"$path/vectors", 0L, "cell")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     // Build-time cell statistics (r8 verdict: nothing measured cell
     // skew) + the batch-0 drift baseline (r9 verdict: "when to rebuild"
@@ -298,24 +301,12 @@ object Similarity {
                      batch: DataFrame, vecCol: String, idCol: String,
                      batchId: Long): Unit = {
     require(batchId > 0, s"batchId must be > 0 (batch 0 is the base build): $batchId")
-    // Refuse a pre-batch-layout index rather than corrupt it: appending
-    // __batch= leaves under cells whose existing files sit at the cell
-    // root would make partition discovery fail (mixed depths) on every
-    // future read — the Ingest.scala static-layout guard, for IVF.
-    // EVERY cell directory is checked (the listing is nCells-bounded, so
-    // forall costs the same as the first-dir probe it replaces): a
-    // mixed-depth layout — a partially upgraded or hand-copied index
-    // whose later cells are still flat — must not slip past a guard that
-    // only sampled the first cell (r9 advice).
+    // refuse a pre-batch-layout index (files directly under any cell
+    // dir) rather than corrupt it with mixed partition depths
     val fs = ivfFs(spark, path)
     val vecRoot = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path))
     require(fs.exists(vecRoot), s"no IVF index at $path — run ivfWriteIndex first")
-    val flatCell = fs.listStatus(vecRoot).map(_.getPath)
-      .filter(_.getName.startsWith("cell="))
-      .exists(graft.ops.Generations.batchIds(fs, _).isEmpty)
-    require(!flatCell,
-      s"$vecRoot is not the batch-partitioned layout (pre-append index): " +
-        "rebuild it with ivfWriteIndex before appending")
+    graft.ops.Generations.requireBatchLayout(fs, vecRoot)
     val centroids = ivfCentroids(spark, path)
     val assigned = assignCells(
         batch.select(col(idCol).as("id"), col(vecCol).as("v")), centroids)
@@ -330,20 +321,17 @@ object Similarity {
         val dim = assigned.select(size(col("v"))).head().getInt(0)
         requireGeomBound(mqRow.getLong(0), dim)
       }
-      assigned.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "__batch").parquet(vecRoot.toString)
-      assigned.groupBy(col("cell"), col("__batch"))
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(ivfStatsDir(spark, path, CellStats))
+      graft.ops.Generations.writeBatches(assigned, vecRoot.toString, "cell")
+      graft.ops.Generations.writeBatch(
+        assigned.groupBy(col("cell")).agg(count(lit(1)).as("n")),
+        ivfStatsDir(spark, path, CellStats), batchId)
       // Per-batch centroid-drift metric (r9 verdict: rebuild-on-drift was
       // a policy knob with nothing measuring drift): the batch's own
       // distance-to-assigned-centroid distribution, landed next to
       // cell_stats with the same replay-idempotent layout. One extra agg
       // over the already-persisted batch — zero additional source scans.
-      driftStatsOf(assigned, centroids)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(ivfStatsDir(spark, path, DriftStats))
+      graft.ops.Generations.writeBatches(driftStatsOf(assigned, centroids),
+        ivfStatsDir(spark, path, DriftStats))
     } finally assigned.unpersist(false)
   }
 
@@ -380,12 +368,11 @@ object Similarity {
     // deferred half); cleared below once the commit marker lands
     val removed = ivfRemovedSet(spark, path)
     graft.ops.Generations.swap(fs, root, "vectors") { staged =>
-      ivfDropRemoved(spark.read.parquet(cur.toString), removed)
-        .select(col("id"), col("v"), col("cell"))
-        .repartition(col("cell"))
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("cell", "__batch")
-        .parquet(staged.toString)
+      graft.ops.Generations.writeBatch(
+        ivfDropRemoved(spark.read.parquet(cur.toString), removed)
+          .select(col("id"), col("v"), col("cell"))
+          .repartition(col("cell")),
+        staged.toString, 0L, "cell")
       // centroids travel WITH the generation (r11): once a rebuild has
       // stored them in-generation, a later compaction must carry them
       // forward or GC of the rebuilt generation would orphan the geometry
@@ -475,9 +462,7 @@ object Similarity {
     val corpus = ivfVectors(spark, path).select(col("id"), col("v"))
     val (indexed, centroids) = ivfIndex(corpus, "v", "id", cells, lloydRounds)
     graft.ops.Generations.swap(fs, root, "vectors") { staged =>
-      indexed.withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("cell", "__batch")
-        .parquet(staged.toString)
+      graft.ops.Generations.writeBatch(indexed, staged.toString, 0L, "cell")
       centroids.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(staged, "_centroids").toString)
       writeStatsSidecars(spark.read.parquet(staged.toString), centroids, staged, "_")
@@ -595,21 +580,12 @@ object Similarity {
     * directory exists iff the batch landed rows: dynamic overwrite never
     * writes empty partitions). The metadata entry point for liveness
     * guards ([[graft.llm.Quantization.ivfPqKnn]]) that would otherwise
-    * pay a distinct-scan job per read.
+    * pay a distinct-scan job per read. A pre-append flat layout refuses.
     */
   def ivfLiveBatches(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Seq[Long] = {
-    val fs = ivfFs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path))
-    val batches = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("cell="))
-      .flatMap(graft.ops.Generations.batchIds(fs, _))
-      .distinct.sorted.toSeq
-    require(batches.nonEmpty,
-      s"$root holds no __batch= partitions (pre-append flat layout?) — " +
-        "rebuild it with ivfWriteIndex")
-    batches
-  }
+                     path: String): Seq[Long] =
+    graft.ops.Generations.requireBatchLayout(ivfFs(spark, path),
+      new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path)))
 
   private val CellStats = "cell_stats"
   private val DriftStats = "drift_stats"
@@ -644,19 +620,15 @@ object Similarity {
       .persist()
     try {
       vecs.count() // two sidecar aggregates read the cache
-      vecs.groupBy(col("cell"), col("__batch"))
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite")
-        .partitionBy("__batch")
-        .parquet(new org.apache.hadoop.fs.Path(root, prefix + CellStats).toString)
+      graft.ops.Generations.writeBatches(
+        vecs.groupBy(col("cell"), col("__batch")).agg(count(lit(1)).as("n")),
+        new org.apache.hadoop.fs.Path(root, prefix + CellStats).toString)
       val d = vecs
         .join(broadcast(centroids.select(col("cell"), col("centroid"))), Seq("cell"))
         .select(col("__batch"),
           squaredDistance(col("__qv"), col("centroid")).cast("long").as("__v"))
-      exactGroupStats(d, "mean_d2", "p95_d2")
-        .write.mode("overwrite")
-        .partitionBy("__batch")
-        .parquet(new org.apache.hadoop.fs.Path(root, prefix + DriftStats).toString)
+      graft.ops.Generations.writeBatches(exactGroupStats(d, "mean_d2", "p95_d2"),
+        new org.apache.hadoop.fs.Path(root, prefix + DriftStats).toString)
     } finally vecs.unpersist(false)
   }
 

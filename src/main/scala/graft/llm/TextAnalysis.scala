@@ -692,9 +692,7 @@ object TextAnalysis {
       col(idCol).as("doc_id"), col(textCol).as("__text")).persist()
     base.count() // four sidecar writes read the cache
     def put(df: DataFrame, sub: String): Unit =
-      df.withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$cardPath/$sub")
+      graft.ops.Generations.writeBatch(df, s"$cardPath/$sub", batchId)
     try {
       val toks = tokens(normalizeText(col("__text")))
       put(base
@@ -882,21 +880,6 @@ object TextAnalysis {
         .where(col("__wm").isNull || col("__batch") > col("__wm"))
         .drop("__wm"))
 
-  /** `partitionBy("__batch")` write that stays READABLE at zero rows: a
-    * partitioned parquet write of an empty frame emits only `_SUCCESS`
-    * (no schema footer anywhere), so the next reader dies on schema
-    * inference — the fully-retracted-index edge the lifecycle-law spec
-    * exposes (retract every doc, then compact). Zero rows → one empty
-    * footer-bearing file placed INSIDE an explicit `__batch=0/` dir, so
-    * the layout stays partition-discoverable and later dynamic appends
-    * coexist; nonzero → the ordinary partitioned write.
-    */
-  private def writeBatchPartitioned(df: DataFrame, dir: String): Unit =
-    if (df.isEmpty)
-      df.drop("__batch").repartition(1)
-        .write.mode("overwrite").parquet(s"$dir/__batch=0")
-    else df.write.mode("overwrite").partitionBy("__batch").parquet(dir)
-
   /** Build the PERSISTED novelty index over a base corpus: per-doc
     * novelty scores land under `scores/__batch=0` and the corpus's
     * distinct gram-hash set under `gramset/__batch=0`. Later batches
@@ -930,23 +913,16 @@ object TextAnalysis {
       val first = hd.groupBy(col("h")).agg(min(col("id")).as("__first"))
       // n_grams/n_novel from the projection + the gram-keyed first table
       // — no re-shuffle of the exploded occurrences (see noveltyStatsOf)
-      noveltyStatsOf(proj, first)
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(s"$path/$ScoresBase")
-      hd.select(col("h")).distinct()
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch")
-        .parquet(s"$path/$GramSetBase")
+      graft.ops.Generations.writeBatch(noveltyStatsOf(proj, first), s"$path/$ScoresBase", 0L)
+      graft.ops.Generations.writeBatch(hd.select(col("h")).distinct(),
+        s"$path/$GramSetBase", 0L)
       // (h, id) occurrence postings — the attribution evidence exact
       // retraction needs (the BM25-postings analogy: an index that
       // supports deletes must know who ELSE holds each gram, or a
       // removed first-occurrence leaves its credit pointing at a
       // ghost). Map-only write off the cached projection; scanned only
       // by [[noveltyRetract]] and folded by [[noveltyCompact]].
-      hd.select(col("h"), col("id"))
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch")
-        .parquet(s"$path/$OccBase")
+      graft.ops.Generations.writeBatch(hd.select(col("h"), col("id")), s"$path/$OccBase", 0L)
     } finally if (ownProj) proj.unpersist(false)
   }
 
@@ -1029,9 +1005,7 @@ object TextAnalysis {
           seen.join(broadcast(grams.select(col("h"))), Seq("h"), "left_semi")), Seq("h"), "left_anti")
         else grams.join(seen.distinct(), Seq("h"), "left_anti")
       def append(df: DataFrame, dir: String): () => Unit = () =>
-        df.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(dir)
+        graft.ops.Generations.writeBatch(df, dir, batchId)
       // stats from the projection + the batch-bounded fresh table — the
       // old hd-rejoin re-shuffled every gram occurrence (noveltyStatsOf)
       graft.ops.DriverPool.run(Seq(
@@ -1258,7 +1232,7 @@ object TextAnalysis {
               col("__batch"))
       }
       graft.ops.Generations.swap(fs, root, ScoresBase) { staged =>
-        writeBatchPartitioned(foldedScores, staged.toString)
+        graft.ops.Generations.writeBatches(foldedScores, staged.toString)
         graft.ops.StateFiles.replace(fs,
           new org.apache.hadoop.fs.Path(staged, FoldedRetsFile), retWm.toString.getBytes("UTF-8"))
       }
@@ -1276,12 +1250,11 @@ object TextAnalysis {
     graft.ops.Generations.swap(fs, root, GramSetBase) { staged =>
       // watermark-aware dead filter: rows a later batch re-added after
       // the kill survive the fold (the gram is revived, not retired)
-      writeBatchPartitioned(
+      graft.ops.Generations.writeBatch(
         dropDeadGrams(curSet.select(col("h"), col("__batch")), liveDead)
           .select(col("h"))
-          .distinct()
-          .withColumn("__batch", lit(0L)),
-        staged.toString)
+          .distinct(),
+        staged.toString, 0L)
       graft.ops.StateFiles.replace(fs,
         new org.apache.hadoop.fs.Path(staged, WatermarkFile), wm.toString.getBytes("UTF-8"))
     }
@@ -1291,10 +1264,8 @@ object TextAnalysis {
       val occ = spark.read.parquet(occDir(spark, path))
         .select(col("h"), col("id"))
       graft.ops.Generations.swap(fs, root, OccBase) { staged =>
-        writeBatchPartitioned(
-          graft.ops.Tombstones.drop(occ, removed, "id")
-            .withColumn("__batch", lit(0L)),
-          staged.toString)
+        graft.ops.Generations.writeBatch(
+          graft.ops.Tombstones.drop(occ, removed, "id"), staged.toString, 0L)
       }
     }
     // 4. retraction GC: sidecars before tombstones (readers gate on the

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 
 /** Crash-atomic directory swap via generation directories + commit
   * markers — the one mechanism every index, model and corpus state
@@ -21,8 +23,18 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
   * `_compact_watermark`, drift's `_compact_watermark` and `_folded_ret`
   * — are written inside the `write` closure through
   * [[StateFiles.replace]], so they ride the same commit as the data and
-  * are read back through [[StateFiles.read]]. [[batchIds]] is the one
-  * listing of a layout dir's `__batch=` partitions.
+  * are read back through [[StateFiles.read]].
+  *
+  * The same families keep their appendable state as replay-idempotent
+  * `__batch=<id>` partitions (the batch-id-keyed idempotent sink of
+  * Structured Streaming), and this object owns that layout too:
+  * [[batchIds]] reads it, [[writeBatch]] writes it (base builds, appends,
+  * negative-id retraction batches, compaction folds), and
+  * [[requireBatchLayout]] refuses a root-file dir before an append.
+  * The writer's empty-write rule: a single-level layout dir left with no
+  * `__batch=` partition gets a schema-only file under the written batch,
+  * so it stays readable; nested layouts (`cell=`, `tb=`, `__cb=`) are
+  * outside that rule.
   *
   * Problem: "rewrite a served directory in place" has no safe ordering.
   * `delete(dir); rename(tmp, dir)` leaves NOTHING served if the process
@@ -150,16 +162,94 @@ object Generations {
   }
 
   /** The `__batch=<id>` partition ids directly under `dir`, sorted and
-    * distinct; Nil when `dir` is absent. A nested layout (`tb=`,
-    * `cell=`) calls this once per layout directory. Listing only — no
+    * distinct; Nil when `dir` is absent. A nested layout (`tb=`, `cell=`,
+    * `__cb=`) is listed whole by [[requireBatchLayout]]. Listing only — no
     * Spark job.
     */
   def batchIds(fs: FileSystem, dir: Path): Seq[Long] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("__batch="))
-      .map(_.stripPrefix("__batch=").toLong)
-      .distinct.sorted
+    if (!fs.exists(dir)) Nil else batchesOf(fs.listStatus(dir).toSeq)._1
+
+  /** The `__batch=` ids of the layout dir `dir`, nested layout dirs
+    * (`cell=`, `tb=`, `__cb=`) included, sorted and distinct — refusing a
+    * dir that holds data files outside any `__batch=` partition: a
+    * root-file layout, at `dir` itself or under a nested layout dir.
+    * `__batch=` partitions written beside such files would mix partition
+    * depths, which parquet partition discovery rejects on every later
+    * read, so every append checks its target first. A missing or empty
+    * dir passes. Listing only.
+    */
+  def requireBatchLayout(fs: FileSystem, dir: Path): Seq[Long] = {
+    val (ids, stray) = walk(fs, dir)
+    require(stray.isEmpty,
+      s"$dir is not the batch-partitioned layout (data files outside any " +
+        s"__batch= partition, e.g. ${stray.head}) — rebuild it with its " +
+        "family's index write before appending")
+    ids.distinct.sorted
+  }
+
+  /** (batch ids, data files outside any batch) under `dir`: `__batch=`
+    * dirs are not entered, other `<col>=<v>` dirs are nested layout dirs,
+    * and `_`/`.`-prefixed names are markers or sidecars.
+    */
+  private def walk(fs: FileSystem, dir: Path): (Seq[Long], Seq[Path]) =
+    if (!fs.exists(dir)) (Nil, Nil)
+    else {
+      val (ids, rest) = batchesOf(fs.listStatus(dir).toSeq)
+      val nested = rest.filter(e => e.isDirectory && e.getPath.getName.contains("="))
+        .map(e => walk(fs, e.getPath))
+      val stray = rest.filter(e => e.isFile && !Seq("_", ".").exists(e.getPath.getName.startsWith))
+        .map(_.getPath)
+      (ids ++ nested.flatMap(_._1), stray ++ nested.flatMap(_._2))
+    }
+
+  /** A layout dir's entries split into its `__batch=` ids (sorted,
+    * distinct) and everything else.
+    */
+  private def batchesOf(entries: Seq[FileStatus]): (Seq[Long], Seq[FileStatus]) = {
+    val (batches, rest) = entries.partition(_.getPath.getName.startsWith("__batch="))
+    (batches.map(_.getPath.getName.stripPrefix("__batch=").toLong).distinct.sorted, rest)
+  }
+
+  /** Write `df` into the layout dir `dir` under `__batch=<batch>` — the
+    * write side of the layout [[batchIds]] reads, shared by every
+    * appendable family's base build, append, negative-id retraction batch
+    * and compaction fold. Partitioned by the `layout` columns (`cell`,
+    * `tb`, `__cb`) then `__batch`, always as a dynamic partition
+    * overwrite: a replayed batch rewrites exactly its own partitions, and
+    * a base build or fold writes into a dir [[reset]] or [[stage]] has
+    * just cleared.
+    *
+    * Empty writes: a partitioned write of zero rows lands no file with a
+    * schema footer, so the next reader of a dir that holds nothing else
+    * dies on schema inference. When a single-level layout dir (no
+    * `layout` columns) holds no `__batch=` partition after the write, a
+    * schema-only file lands under `__batch=<batch>`. That is found by
+    * listing the dir, so a non-empty write pays no extra job. Nested
+    * layouts are outside this rule: a schema-only file has no `cell`,
+    * `tb` or `__cb` value to sit under.
+    */
+  def writeBatch(df: DataFrame, dir: String, batch: Long, layout: String*): Unit =
+    write(df.withColumn("__batch", lit(batch)), dir, batch, layout)
+
+  /** [[writeBatch]] for a frame that carries its own per-row `__batch`
+    * (a full re-encode or a stats pass that keeps batch provenance); an
+    * empty write of a single-level layout lands under `__batch=0`.
+    */
+  def writeBatches(df: DataFrame, dir: String, layout: String*): Unit =
+    write(df, dir, 0L, layout)
+
+  private def write(df: DataFrame, dir: String, emptyBatch: Long,
+                    layout: Seq[String]): Unit = {
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(layout :+ "__batch": _*).parquet(dir)
+    if (layout.isEmpty) {
+      val spark = df.sparkSession
+      val p = new Path(dir)
+      if (batchIds(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), df.drop("__batch").schema)
+          .write.mode("overwrite").parquet(new Path(p, s"__batch=$emptyBatch").toString)
+    }
+  }
 
   /** Drop generations older than the PREVIOUS one (current and previous
     * stay readable — the in-flight-reader grace period). Markers are

@@ -251,18 +251,16 @@ object Graph extends org.apache.spark.internal.Logging {
         // the prune literals must match the column type exactly or the
         // induced cast defeats partition pruning
         .withColumn("__cb", pmod(col("dst"), lit(PairBuckets)).cast("int"))
-        .withColumn("__batch", lit(batchId))
       if (batchId >= 0L)
         // streaming folds: a replayed batch rewrites exactly itself
-        canonical.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch", "__cb").parquet(pairStoreDir(fs, path))
+        Generations.writeBatch(canonical, pairStoreDir(fs, path), batchId, "__cb")
       else
         // one-shot folds with no replay lineage: plain append (duplicate
         // pairs from a re-run are absorbed — every consumer distincts,
-        // and [[pairsCompact]] folds them away physically)
-        canonical.write.mode("append")
-          .partitionBy("__batch", "__cb").parquet(pairStoreDir(fs, path))
+        // and [[pairsCompact]] folds them away physically), in the
+        // writer's `__cb=`/`__batch=` layout
+        canonical.withColumn("__batch", lit(batchId)).write.mode("append")
+          .partitionBy("__cb", "__batch").parquet(pairStoreDir(fs, path))
       val cur = Generations.genDir(root, AssignmentBase,
         Generations.currentGen(fs, root, AssignmentBase))
       val next =
@@ -317,7 +315,7 @@ object Graph extends org.apache.spark.internal.Logging {
     val store = new Path(pairStoreDir(fs, path))
     require(fs.exists(store),
       s"no pair-evidence store at $path — fold at least one batch first")
-    val liveBatches = Generations.batchIds(fs, store).size
+    val liveBatches = Generations.requireBatchLayout(fs, store).size
     val pendingRets = Tombstones.retIds(spark, path).nonEmpty
     if (pendingRets || liveBatches > maxLiveBatches) {
       pairsCompact(spark, path); "compact"
@@ -362,10 +360,8 @@ object Graph extends org.apache.spark.internal.Logging {
           .join(broadcast(ts.select(col("id").as("dst"))), Seq("dst"), "left_anti")
     }
     Generations.swap(fs, root, PairsBase) { staged =>
-      pruned.select(col("src"), col("dst"), col("__cb")).distinct()
-        .withColumn("__batch", lit(0L))
-        .write.mode("overwrite").partitionBy("__batch", "__cb")
-        .parquet(staged.toString)
+      Generations.writeBatch(pruned.select(col("src"), col("dst"), col("__cb")).distinct(),
+        staged.toString, 0L, "__cb")
       StateFiles.replace(fs, new Path(staged, PairsWatermarkFile), wm.toString.getBytes("UTF-8"))
     }
     Tombstones.clear(spark, path)

@@ -109,9 +109,7 @@ object Ingest {
     val kept = Dedup.ingestAgainstIndex(spark, indexPath, batchId, exactDeduped,
       textCol, idCol, shingleN, k, bands, threshold, maxBucketSize,
       scorer = scorer, containmentThreshold = containmentThreshold)
-    kept.withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(corpusDataDir(spark, admittedDir))
+    graft.ops.Generations.writeBatch(kept, corpusDataDir(spark, admittedDir), batchId)
     // the guard id lands as ONE stable type (string) regardless of the
     // source's id type: r7 wrote it in its native type after the
     // cast("long") bug (which silently nulled string ids and defeated the
@@ -122,11 +120,10 @@ object Ingest {
     // Upgrading a pre-r8 hashes dir (long-typed ids) requires clearing
     // <indexPath>/hashes once; the admitted corpus is unaffected.
     if (exactGuard)
-      kept.select(col(idCol).cast("string").as("id"),
-          md5(graft.functions.TextFunctions.normalizeText(col(textCol))).as("ch"))
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(hashesPath)
+      graft.ops.Generations.writeBatch(
+        kept.select(col(idCol).cast("string").as("id"),
+          md5(graft.functions.TextFunctions.normalizeText(col(textCol))).as("ch")),
+        hashesPath, batchId)
   }
 
   /** Attach incremental IVF appends to a streaming frame of embeddings —
@@ -304,11 +301,9 @@ object Ingest {
         .nbClassifyIndexed(spark, modelPath, batch, textCol, idCol)
         .where(col("predicted").isin(keepLabels: _*))
         .withColumnRenamed("doc", "__doc")
-      batch.join(kept, batch(idCol) === kept("__doc"), "inner")
-        .drop("__doc")
-        .withColumn("__batch", lit(id))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(corpusDataDir(spark, admittedDir))
+      graft.ops.Generations.writeBatch(
+        batch.join(kept, batch(idCol) === kept("__doc"), "inner").drop("__doc"),
+        corpusDataDir(spark, admittedDir), id)
     }
   }
 
@@ -333,9 +328,7 @@ object Ingest {
                                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Sinks.startSink(rows, checkpointDir, trigger) { (batch, id) =>
       val spark = batch.sparkSession
-      batch.withColumn("__batch", lit(id))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(tablePath)
+      graft.ops.Generations.writeBatch(batch, tablePath, id)
       graft.ops.Manifest.refresh(spark, tablePath, statsCols)
       bloomCols.foreach(c => graft.ops.Manifest.refreshBloom(spark, tablePath, c))
     }
@@ -510,9 +503,7 @@ object Ingest {
       val stageTasks = Seq(
         // stage 3 — corpus append + sidecar refresh (the x5 shape)
         Some(() => {
-          kept.withColumn("__batch", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch").parquet(dataDir)
+          graft.ops.Generations.writeBatch(kept, dataDir, batchId)
           if (statsCols.nonEmpty) graft.ops.Manifest.refresh(spark, dataDir, statsCols)
           bloomCols.foreach(c => graft.ops.Manifest.refreshBloom(spark, dataDir, c))
         }),
@@ -803,8 +794,7 @@ object Ingest {
     // no stream ever produces a negative id (the LM retraction's
     // negative-partition trick)
     graft.ops.Generations.swap(fs, genRoot, "data") { staged =>
-      live.withColumn("__batch", lit(-1L))
-        .write.mode("overwrite").partitionBy("__batch").parquet(staged.toString)
+      graft.ops.Generations.writeBatch(live, staged.toString, -1L)
     }
     if (removed.isDefined)
       graft.ops.Tombstones.clear(spark, corpusRetRoot(admittedDir))
@@ -1224,11 +1214,9 @@ object Ingest {
                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val benchGrams = graft.llm.Decontaminate.benchGramSet(bench, textCol, idCol, n)
     Sinks.startSink(docs, checkpointDir, trigger) { (batch, id) =>
-      graft.llm.Decontaminate
-        .cleanAgainstGrams(batch, benchGrams, textCol, idCol, n, threshold)
-        .withColumn("__batch", lit(id))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(outDir)
+      graft.ops.Generations.writeBatch(
+        graft.llm.Decontaminate.cleanAgainstGrams(batch, benchGrams, textCol, idCol, n, threshold),
+        outDir, id)
     }
   }
 }

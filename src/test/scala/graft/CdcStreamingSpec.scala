@@ -411,11 +411,11 @@ class CdcStreamingSpec extends AnyFunSuite {
     graft.llm.Dedup.compactIndex(spark, idx, maxBucketSize = 100)
     ingest(3L, (7L, t3))
     assert(ids() === Set(1L, 4L, 6L))
-    // appending into a STATIC (minhashIndexWrite) layout must refuse, not
-    // corrupt the index with a mixed partitioned/root-file layout
+    // appending into a ROOT-FILE layout (parquet written flat into sigs/)
+    // must refuse, not corrupt the index with a mixed partitioned/root-file
+    // layout
     val statIdx = java.nio.file.Files.createTempDirectory("graft-ingest-stat").toString
-    graft.llm.Dedup.minhashIndexWrite(batch((20L, t1)), "text", "id", statIdx,
-      shingleN = 3, k = 8, bands = 4)
+    Seq((20L, Seq(1L, 2L, 3L))).toDF("id", "hs").write.parquet(s"$statIdx/sigs")
     val ex = intercept[IllegalArgumentException] {
       graft.streaming.Ingest.ingestBatch(batch((21L, t2)), statIdx,
         java.nio.file.Files.createTempDirectory("graft-ingest-stat-adm").toString + "/t",

@@ -1,0 +1,67 @@
+#!/bin/bash
+# Single-mechanism invariants of graft's main code, checked by grep.
+# Each concern below has exactly one home; a new second mechanism for it
+# shows up here as a hit outside that home.
+#
+#   Generations.(stage|commit)(   only inside ops/Generations.scala (callers
+#                                 go through swap/publish)
+#   fs.open( fs.create( IOUtils   only inside ops/StateFiles.scala (the one
+#                                 durable small-file protocol)
+#   startsWith("__batch=")        only inside ops/Generations.scala (batchIds,
+#                                 the one reader of the __batch= layout)
+#   partitionBy(..."__batch"...)  only inside ops/Generations.scala (writeBatch,
+#                                 the one writer of the layout), except:
+#                                   - ops/Graph.scala: the append-mode
+#                                     __batch=-1 pair-store fold (one line);
+#                                   - contract/ and Bench.scala, which build
+#                                     fixtures and bench state by hand.
+#
+# Usage: tools/check_invariants.sh   (from anywhere; exits 1 on any break)
+set -u
+cd "$(dirname "$0")/.."
+MAIN=src/main/scala/graft
+fail=0
+
+# hits of an extended regex in main code outside the allowed files
+# (paths relative to $MAIN, matched as prefixes)
+outside() {
+  local pattern="$1"; shift
+  local hits
+  hits=$(grep -rnE "$pattern" "$MAIN" --include='*.scala' | sed "s|^$MAIN/||")
+  for allowed in "$@"; do
+    hits=$(printf '%s\n' "$hits" | grep -v "^$allowed" || true)
+  done
+  printf '%s' "$hits" | sed '/^$/d'
+}
+
+check() {
+  local what="$1" hits="$2"
+  if [ -n "$hits" ]; then
+    echo "FAIL: $what"
+    printf '%s\n' "$hits" | sed 's/^/  /'
+    fail=1
+  else
+    echo "ok:   $what"
+  fi
+}
+
+check "Generations.stage/commit called only inside Generations" \
+  "$(outside 'Generations\.(stage|commit)\(' ops/Generations.scala)"
+check "raw fs.open/fs.create/IOUtils only inside StateFiles" \
+  "$(outside 'fs\.open\(|fs\.create\(|IOUtils' ops/StateFiles.scala)"
+check "startsWith(\"__batch=\") only inside Generations.batchIds" \
+  "$(outside 'startsWith\("__batch="\)' ops/Generations.scala)"
+check "partitionBy(...\"__batch\"...) only inside Generations.writeBatch" \
+  "$(outside 'partitionBy\([^)]*"__batch"' ops/Generations.scala ops/Graph.scala contract/ Bench.scala)"
+
+# Graph keeps exactly one hand-written __batch write: the append-mode fold
+graph=$(grep -nE 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala")
+graph_append=$(grep -nE -B1 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala" | grep -c 'mode("append")')
+if [ "$(printf '%s' "$graph" | sed '/^$/d' | wc -l)" -gt 1 ] || \
+   { [ -n "$graph" ] && [ "$graph_append" -ne 1 ]; }; then
+  check "Graph's only __batch write is the append-mode fold" "$graph"
+else
+  echo "ok:   Graph's only __batch write is the append-mode fold"
+fi
+
+exit $fail

@@ -432,7 +432,7 @@ object Similarity {
     val fs = ivfFs(spark, path)
     val inGen = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path), "_centroids")
     val raw =
-      if (fs.exists(inGen)) spark.read.parquet(inGen.toString)
+      if (fs.exists(inGen)) readStateDir(spark, inGen.toString)
       else spark.read.parquet(s"$path/centroids")
     requireLongVec(raw, "centroid", s"IVF index at $path")
   }
@@ -605,6 +605,26 @@ object Similarity {
     if (ivfFs(spark, path).exists(inGen)) inGen.toString else s"$path/$name"
   }
 
+  /** Read an in-generation state dir (`_centroids/`, or wherever
+    * [[ivfStatsDir]] resolves) through its listed children, with the dir
+    * itself as `basePath`. Spark's reader flags a root path whose name
+    * starts with `_` and logs "All paths were ignored" on every such read
+    * (it still reads it); the children (`cell=`/`__batch=` dirs, part
+    * files) pass that check, and the rows are the same. The children are
+    * listed here rather than globbed: a single glob path makes Spark look
+    * for a streaming-sink log under the literal glob and log a warning
+    * with a stack trace.
+    */
+  private def readStateDir(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): DataFrame = {
+    val children = ivfFs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter { c =>
+        val n = c.getName
+        n.contains("=") || !(n.startsWith("_") || n.startsWith("."))
+      }
+    spark.read.option("basePath", dir).parquet(children.map(_.toString).toIndexedSeq: _*)
+  }
+
   /** Both full-rewrite sidecars (cell stats + drift baseline) of
     * `vectors` against `centroids`, written as `<prefix>cell_stats` and
     * `<prefix>drift_stats` under `root`, over ONE cached read of the
@@ -717,7 +737,7 @@ object Similarity {
     require(ivfFs(spark, path).exists(new org.apache.hadoop.fs.Path(driftDir)),
       s"no drift_stats sidecar at $path (pre-drift index) — rebuild with " +
         "ivfWriteIndex or run ivfCompact once to establish the baseline")
-    val d = spark.read.parquet(driftDir)
+    val d = readStateDir(spark, driftDir)
       .select(col("__batch").cast("long").as("__batch"),
         col("n"), col("mean_d2"), col("p95_d2"))
     val base = d.orderBy(col("__batch")).limit(1).head()
@@ -741,7 +761,7 @@ object Similarity {
     val statsPath = new org.apache.hadoop.fs.Path(ivfStatsDir(spark, path, CellStats))
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(statsPath))
-      spark.read.parquet(statsPath.toString)
+      readStateDir(spark, statsPath.toString)
         .groupBy(col("cell")).agg(sum(col("n")).as("n"))
     else
       ivfVectors(spark, path)

@@ -301,7 +301,7 @@ object Sinks {
           .parquet(targetDir).where(col("__kb").isin(touched: _*)))
       else None
     val all = existing.map(_.unionByName(b, allowMissingColumns = true)).getOrElse(b)
-    commitBuckets(fs, targetDir, latestByKeyAligned(all, keyCols, versionCol))
+    commitBuckets(fs, targetDir, latestByKeyAligned(all, keyCols, versionCol, touched.size))
     // the pin moves AFTER the data lands: a crash in between re-detects
     // the same widening next batch and rewrites the same content
     if (repin) recordPin()
@@ -360,9 +360,9 @@ object Sinks {
     * `Materialize.latestByKey(all, keyCols, version)` — `__kb` is a pure
     * function of a SUBSET of the merge key, so grouping on
     * (__kb, keyCols) partitions rows exactly like keyCols alone — but
-    * the one shuffle it needs is an explicit repartition on `__kb`, the
-    * same column the write below partitions directories by.
-    * HashPartitioning(__kb) satisfies the window's
+    * the one shuffle it needs is the [[byBucket]] exchange on `__kb`,
+    * the same column the write below partitions directories by.
+    * HashPartitioning(__kb, n) satisfies the window's
     * ClusteredDistribution(__kb :: keyCols) (partitioning ⊆ clustering),
     * so Catalyst plans exactly ONE exchange — and every task then holds
     * whole buckets, so the bucket commit lands ~one file per touched
@@ -370,20 +370,43 @@ object Sinks {
     * this, a lineitem-style layout (bucketCols ⊂ keyCols, hashes
     * unaligned) fragmented every micro-batch rewrite into up to
     * `spark.sql.shuffle.partitions` files PER BUCKET, each a parquet
-    * commit now and a scan task next batch. Parallelism of the merge
-    * becomes ≈ touched buckets — the sink's own cost model ("per-batch
-    * cost ∝ touched working set", buckets sized ~64k rows) already
-    * assumes that unit of work.
+    * commit now and a scan task next batch. `buckets` is the number of
+    * buckets the merge produces (the touched count); the merge and its
+    * write run on [[byBucket]]'s task count.
     */
   private def latestByKeyAligned(all: DataFrame, keyCols: Seq[String],
-                                 versionCol: String): DataFrame = {
+                                 versionCol: String, buckets: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy((col("__kb") +: keyCols.map(col)): _*)
       .orderBy(col(versionCol).desc)
-    all.repartition(col("__kb"))
+    byBucket(all, buckets)
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
+  }
+
+  /** The sinks' one bucket exchange: hash `rows` on `__kb` into
+    * `min(buckets, spark.sql.shuffle.partitions)` partitions, `buckets`
+    * being the number of buckets the write produces. Every task holds
+    * whole buckets, so a bucket rewrite still lands one file per bucket,
+    * and the write runs up to the shuffle-partitions count of tasks —
+    * the count an unnumbered `repartition(__kb)` starts from, capped by
+    * the buckets there are to spread.
+    *
+    * The count is explicit because AQE never coalesces a numbered
+    * repartition. Left to AQE, the exchange is coalesced by BYTES (toward
+    * `advisoryPartitionSizeInBytes`, and at least
+    * `coalescePartitions.minPartitionSize` per task): a micro-batch's
+    * touched buckets are a MB or two of shuffle, so they fold into ONE
+    * task that
+    * encodes and commits every bucket file serially while the other
+    * cores idle. A bucket rewrite's cost is set by the files it writes
+    * (one parquet encode and commit per bucket), not by the bytes it
+    * shuffles, so byte-sized partitions are the wrong unit for it.
+    */
+  private def byBucket(rows: DataFrame, buckets: Int): DataFrame = {
+    val cap = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.repartition(math.max(1, math.min(buckets, cap)), col("__kb"))
   }
 
   /** A8 — attach the upsert sink to a (streaming) frame of flattened
@@ -475,10 +498,9 @@ object Sinks {
           .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getBoolean(2)))
         val toRewrite = spans.collect { case (kb, true, false) => kb }
         if (toRewrite.nonEmpty) {
-          commitBuckets(fs, targetDir, cur
+          commitBuckets(fs, targetDir, byBucket(cur
             .where(col("__kb").isin(toRewrite.toIndexedSeq: _*) &&
-              col(versionCol) > t)
-            .repartition(col("__kb")))
+              col(versionCol) > t), toRewrite.length))
         }
         // fully-dead partitions: the bucket commit only replaces buckets
         // present in its output — remove their dirs outright
@@ -639,12 +661,12 @@ object Sinks {
       val exLive = existing.map(_.where(col("__kb").isin(live: _*)))
       val all = exLive.map(_.unionByName(bLive)).getOrElse(bLive)
       // layout-aligned like the upsert merge (r20, guide §2.4/§6): the
-      // one explicit exchange is keyed on the layout column —
-      // HashPartitioning(__kb) satisfies the final aggregate's
+      // one exchange is [[byBucket]]'s on the layout column —
+      // HashPartitioning(__kb, n) satisfies the final aggregate's
       // ClusteredDistribution(keyCols :+ __kb), so no second exchange is
-      // planned and each rewrite lands ~one file per touched bucket
+      // planned and each rewrite lands ~one file per live bucket
       // instead of one per (agg task × bucket)
-      val merged = all.repartition(col("__kb"))
+      val merged = byBucket(all, live.size)
         .groupBy((keyCols :+ "__kb").map(col): _*)
         .agg(sum(col("cnt")).as("cnt"),
           sum(col("sum_val")).cast("decimal(18,6)").as("sum_val"),
@@ -673,15 +695,17 @@ object Sinks {
     * [[applyUpsertBatch]] stays compact by construction; this remains
     * the recovery path for buckets fragmented by OTHER writers (or by
     * pre-r19 binaries, whose merges emitted one file per shuffle task ×
-    * bucket). Compacting rewrites each bucket as ONE file (the shuffle
-    * key is the bucket column, so a task holds whole buckets) through
+    * bucket). Compacting rewrites each bucket as ONE file ([[byBucket]]
+    * over the pinned bucket count, so a task holds whole buckets) through
     * [[commitBuckets]], which replaces only `__kb=*` directories — the
-    * `_graft_buckets` layout pin survives.
+    * `_graft_buckets` layout pin survives. A table without the pin
+    * (written by older code) compacts on the shuffle-partitions count.
     */
   def compact(spark: SparkSession, targetDir: String): Unit = {
     val fs = fsOf(spark, targetDir)
     finishCommit(fs, targetDir)
-    commitBuckets(fs, targetDir, readPinned(spark, targetDir).repartition(col("__kb")))
+    val buckets = readSidecar(fs, targetDir, BucketsFile)(_.toInt).getOrElse(Int.MaxValue)
+    commitBuckets(fs, targetDir, byBucket(readPinned(spark, targetDir), buckets))
   }
 
   /** Read the table through its pinned schema when one exists — buckets
@@ -762,8 +786,7 @@ object Sinks {
       // the layout pin is MANDATORY on later batches: a modulus or
       // key-set drift would prune the wrong partitions; a table without
       // the pin (not created through this sink) is refused, not guessed
-      val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val props = tableProps(spark, table)
       require(props.contains("graft.nKbParts"),
         s"table $table has no graft.nKbParts pin — it was not created " +
           "through this sink; recreate it here (the pin is the guard " +
@@ -806,7 +829,8 @@ object Sinks {
     // __kb, whole partitions per task — the bucketed insertInto then
     // writes ~one file per (touched __kb dir × bucket) instead of one
     // per (merge-shuffle task × dir × bucket)
-    val merged0 = latestByKeyAligned(existing.unionByName(b), keyCols, versionCol)
+    val merged0 = latestByKeyAligned(existing.unionByName(b), keyCols, versionCol,
+      touched.size)
     // sever the read-before-overwrite hazard (the dir sink writes to a
     // stage instead) — except on the batch that just CREATED the (empty) table,
     // whose scan matches zero files (r19: skip the extra pass)
@@ -814,6 +838,10 @@ object Sinks {
       .select(tableCols.map(col): _*) // insertInto matches positionally
     dynamicOverwriteInsert(spark, merged, table)
   }
+
+  private def tableProps(spark: SparkSession, table: String): Map[String, String] =
+    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** insertInto ignores the per-write partitionOverwriteMode OPTION
     * (verified empirically on Spark 4.1: the option'd write replaced the
@@ -937,22 +965,22 @@ object Sinks {
       .select("data_type").head().getString(0)
 
   /** Compaction for the clustered table. Since the r19 layout-aligned
-    * merge each rewrite lands ~one task per touched `__kb` partition
+    * merge each rewrite holds every touched `__kb` partition in one task
     * (nBuckets files per dir — the catalog bucket spec splits within the
     * task), so tables maintained solely through this sink stay compact;
     * this remains the recovery path for partitions fragmented by other
     * writers or pre-r19 binaries (one file per merge-shuffle task ×
     * partition × bucket). Compacting re-clusters each `__kb` partition in one task
-    * (`repartition(__kb)`) so the rewrite lands ~one file per
-    * (partition, bucket) — the catalog's bucket spec is metadata and
-    * survives untouched, so the exchange-free join contract holds
-    * before and after. The checkpoint severs the read-before-overwrite
-    * hazard exactly like the batch path.
+    * ([[byBucket]] over the pinned `graft.nKbParts`) so the rewrite lands
+    * ~one file per (partition, bucket) — the catalog's bucket spec is
+    * metadata and survives untouched, so the exchange-free join contract
+    * holds before and after. The checkpoint severs the
+    * read-before-overwrite hazard exactly like the batch path.
     */
   def compactClustered(spark: SparkSession, table: String): Unit = {
     val tableCols = spark.table(table).columns
-    val snap = spark.table(table)
-      .repartition(col("__kb"))
+    val kbParts = tableProps(spark, table).get("graft.nKbParts").map(_.toInt)
+    val snap = byBucket(spark.table(table), kbParts.getOrElse(Int.MaxValue))
       .localCheckpoint(true)
       .select(tableCols.map(col): _*)
     dynamicOverwriteInsert(spark, snap, table)

@@ -15,6 +15,10 @@
 #                                     __batch=-1 pair-store fold (one line);
 #                                   - contract/ and Bench.scala, which build
 #                                     fixtures and bench state by hand.
+#   repartition(col("__kb"))      nowhere under streaming/: the unnumbered
+#                                 bucket exchange, which AQE coalesces into
+#                                 one write task (Sinks.byBucket is the one
+#                                 bucket exchange of the sinks)
 #
 # Usage: tools/check_invariants.sh   (from anywhere; exits 1 on any break)
 set -u
@@ -53,6 +57,8 @@ check "startsWith(\"__batch=\") only inside Generations.batchIds" \
   "$(outside 'startsWith\("__batch="\)' ops/Generations.scala)"
 check "partitionBy(...\"__batch\"...) only inside Generations.writeBatch" \
   "$(outside 'partitionBy\([^)]*"__batch"' ops/Generations.scala ops/Graph.scala contract/ Bench.scala)"
+check "no AQE-coalescable repartition(col(\"__kb\")) under streaming/" \
+  "$(grep -rnE 'repartition\(col\("__kb"\)\)' "$MAIN/streaming" --include='*.scala' | sed "s|^$MAIN/||")"
 
 # Graph keeps exactly one hand-written __batch write: the append-mode fold
 graph=$(grep -nE 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala")

@@ -423,17 +423,6 @@ object Dedup {
   // Retraction — deletes without an index rewrite (tombstones)        //
   // ---------------------------------------------------------------- //
 
-  private[graft] def removedDir(path: String): String =
-    graft.ops.Tombstones.dir(path)
-
-  private[graft] def removedSet(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Option[DataFrame] =
-    graft.ops.Tombstones.set(spark, path)
-
-  private def dropRemoved(df: DataFrame, removed: Option[DataFrame],
-                          idCol: String): DataFrame =
-    graft.ops.Tombstones.drop(df, removed, idCol)
-
   /** RETRACT documents from a persisted text-similarity index (MinHash
     * OR simhash — both keep the `buckets`(+`sigs`) layout) WITHOUT
     * rewriting it — the Lucene-deletes shape, and the index-family
@@ -562,9 +551,9 @@ object Dedup {
         // hash sets) — the corpus-sized index is never shuffled. Retracted
         // corpus docs must not veto new arrivals (tombstones consulted at
         // read — the retractFromIndex contract)
-        val liveBuckets = dropRemoved(
+        val liveBuckets = graft.ops.Tombstones.drop(
           spark.read.schema(bucketsSchema).parquet(bucketsDir(spark, indexPath)),
-          removedSet(spark, indexPath), "id")
+          graft.ops.Tombstones.set(spark, indexPath), "id")
         val pairs = liveBuckets.select(col("id").as("corpus_id"), col("band"), col("key"))
           .join(broadcast(capped.select(col("id").as("new_id"), col("band"), col("key"))),
             Seq("band", "key"))
@@ -686,8 +675,8 @@ object Dedup {
     // tombstones apply PHYSICALLY here (retractFromIndex's deferred
     // half): retracted rows drop before the width pass, so bucket caps
     // recompute over the surviving membership
-    val removed = removedSet(spark, path)
-    val b = dropRemoved(
+    val removed = graft.ops.Tombstones.set(spark, path)
+    val b = graft.ops.Tombstones.drop(
       spark.read.parquet(graft.ops.Generations.currentDir(fs, root, "buckets").toString),
       removed, "id")
     val wide = b.groupBy(col("band"), col("key"))
@@ -702,7 +691,7 @@ object Dedup {
     val sigsCur = graft.ops.Generations.currentDir(fs, root, "sigs")
     if (fs.exists(sigsCur))
       graft.ops.Generations.swap(fs, root, "sigs")(
-        fold(dropRemoved(spark.read.parquet(sigsCur.toString), removed, "id")))
+        fold(graft.ops.Tombstones.drop(spark.read.parquet(sigsCur.toString), removed, "id")))
     // tombstones are now baked into the committed generations — clear
     // them (a crash mid-delete leaves no-op tombstones for ids that are
     // already gone; readers stay correct at every point)
@@ -826,8 +815,8 @@ object Dedup {
     val newBase = projected.where(size(col("hs")) > 0)
     // tombstoned ids drop out of candidate generation (retractFromIndex
     // deletes-at-read; None in the common never-retracted case)
-    val idxBuckets = dropRemoved(spark.read.parquet(bucketsDir(spark, path)),
-      removedSet(spark, path), "id")
+    val idxBuckets = graft.ops.Tombstones.drop(spark.read.parquet(bucketsDir(spark, path)),
+      graft.ops.Tombstones.set(spark, path), "id")
     val pairs = bandBucketRows(newBase, k, bands).as("n")
       .join(idxBuckets.as("o"),
         col("n.band") === col("o.band") && col("n.key") === col("o.key"))
@@ -1177,8 +1166,8 @@ object Dedup {
     val (bits, maxHamming) = simhashMeta(spark, path)
     // the same tombstone contract as the MinHash paths (retractFromIndex
     // serves both layouts)
-    val idx = dropRemoved(spark.read.parquet(bucketsDir(spark, path)),
-      removedSet(spark, path), "id")
+    val idx = graft.ops.Tombstones.drop(spark.read.parquet(bucketsDir(spark, path)),
+      graft.ops.Tombstones.set(spark, path), "id")
     simhashBandedRows(newDf, textCol, idCol, bits, maxHamming).as("n")
       .join(idx.as("o"),
         col("n.band") === col("o.band") && col("n.key") === col("o.key") &&

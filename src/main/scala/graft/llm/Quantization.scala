@@ -598,9 +598,9 @@ object Quantization {
     val probeTab = probes.join(qTab, Seq("query_id")) // both broadcast-tiny
     // the code table carries rows for tombstoned vectors until the next
     // compaction re-encode — filter them like every vector-table read
-    val codes = Similarity.ivfDropRemoved(
+    val codes = graft.ops.Tombstones.drop(
         spark.read.parquet(s"$path/pq_codes"),
-        Similarity.ivfRemovedSet(spark, path))
+        graft.ops.Tombstones.set(spark, path), "id")
       .where(col("cell").isin(cells: _*)) // static partition pruning
     // a pre-round-11 code table stored array<int> codes; refuse it loudly
     // (the stale-layout rule) rather than mis-score through the byte path

@@ -226,29 +226,6 @@ object Search {
     graft.ops.Generations.writeBatch(statsOf(batch, textCol), statsDir(spark, path), batchId)
   }
 
-  /** BM25 scored search THROUGH the index — same scores, same exactness
-    * discipline as [[TextAnalysis.bm25]] (Okapi, Lucene non-negative
-    * idf, per-term 6dp-decimal sums), but the per-query cost is
-    * |postings(query terms)|: the postings scan is partition-pruned to
-    * the query terms' buckets (static `isin` on `tb`) with the term
-    * equality pushed into the parquet scan, N/avgdl come from the
-    * nBatches-row stats sidecar (driver arithmetic on exact long sums —
-    * equal to the corpus-scan AVG by construction), and df is counted
-    * on the pruned hit set. Returns (doc, n_hit_terms, bm25) for every
-    * doc containing at least one query term.
-    *
-    * Refuses loudly when postings hold a `__batch` the stats sidecar
-    * lacks — the crash window of [[bm25AppendBatch]]; replay the append
-    * to heal (never a silently-wrong N).
-    */
-  /** The retraction ids present under `removed/` — an fs listing. */
-  private def removedRetIds(spark: SparkSession, path: String): Seq[Long] =
-    graft.ops.Tombstones.retIds(spark, path)
-
-  private def bm25RemovedSet(spark: SparkSession, path: String): Option[DataFrame] =
-    graft.ops.Tombstones.set(spark, path)
-      .map(_.select(col("id").as("doc")))
-
   /** RETRACT documents from the BM25 index without a rewrite — the
     * tombstone contract of the other index families, completed for the
     * one index whose SCORES depend on corpus-global statistics: BM25's
@@ -293,6 +270,21 @@ object Search {
       statsDir(spark, path), -(retractionId + 1L))
   }
 
+  /** BM25 scored search THROUGH the index — same scores, same exactness
+    * discipline as [[TextAnalysis.bm25]] (Okapi, Lucene non-negative
+    * idf, per-term 6dp-decimal sums), but the per-query cost is
+    * |postings(query terms)|: the postings scan is partition-pruned to
+    * the query terms' buckets (static `isin` on `tb`) with the term
+    * equality pushed into the parquet scan, N/avgdl come from the
+    * nBatches-row stats sidecar (driver arithmetic on exact long sums —
+    * equal to the corpus-scan AVG by construction), and df is counted
+    * on the pruned hit set. Returns (doc, n_hit_terms, bm25) for every
+    * doc containing at least one query term.
+    *
+    * Refuses loudly when postings hold a `__batch` the stats sidecar
+    * lacks — the crash window of [[bm25AppendBatch]]; replay the append
+    * to heal (never a silently-wrong N).
+    */
   def bm25Indexed(spark: SparkSession, path: String, query: Seq[String],
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(query.nonEmpty, "bm25Indexed needs at least one query term")
@@ -308,7 +300,7 @@ object Search {
     // retraction pairing: every tombstone set must have its negated
     // stats delta (tombstones write first, stats second — a crash
     // between them refuses here and the retraction replay heals)
-    val retIds = removedRetIds(spark, path)
+    val retIds = graft.ops.Tombstones.retIds(spark, path)
     require(retIds.forall(r => stBatches.contains(-(r + 1L))),
       s"retractions $retIds at $path lack stats deltas (have $stBatches) — " +
         "a bm25Retract crashed between its tombstone and stats writes; " +
@@ -331,10 +323,7 @@ object Search {
       .select(col("term"), col("doc"), col("tf"), col("dl"))
     // tombstoned docs drop from the hits BEFORE df is counted, so the
     // per-term df is the SURVIVOR df with no stored correction needed
-    val hits = (bm25RemovedSet(spark, path) match {
-        case None => rawHits
-        case Some(r) => rawHits.join(r, Seq("doc"), "left_anti")
-      })
+    val hits = graft.ops.Tombstones.drop(rawHits, graft.ops.Tombstones.set(spark, path), "doc")
       .persist() // two consumers: df count + the score rows
     hits.count()
     try {
@@ -379,11 +368,8 @@ object Search {
     // tombstones bake into the folded postings; the negated stats
     // deltas fold into the collapsed stats row below, so the compacted
     // index IS the survivor index
-    val removed = bm25RemovedSet(spark, path)
-    val folded = removed match {
-      case None => spark.read.parquet(cur.toString)
-      case Some(r) => spark.read.parquet(cur.toString).join(r, Seq("doc"), "left_anti")
-    }
+    val removed = graft.ops.Tombstones.set(spark, path)
+    val folded = graft.ops.Tombstones.drop(spark.read.parquet(cur.toString), removed, "doc")
     graft.ops.Generations.swap(fs, root, PostingsBase) { staged =>
       graft.ops.Generations.writeBatch(
         folded.select(col("term"), col("doc"), col("tf"), col("dl"), col("tb"))

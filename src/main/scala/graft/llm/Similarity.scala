@@ -366,10 +366,10 @@ object Similarity {
     val cur = graft.ops.Generations.currentDir(fs, root, "vectors")
     // tombstones bake into the folded generation ([[ivfRetract]]'s
     // deferred half); cleared below once the commit marker lands
-    val removed = ivfRemovedSet(spark, path)
+    val removed = graft.ops.Tombstones.set(spark, path)
     graft.ops.Generations.swap(fs, root, "vectors") { staged =>
       graft.ops.Generations.writeBatch(
-        ivfDropRemoved(spark.read.parquet(cur.toString), removed)
+        graft.ops.Tombstones.drop(spark.read.parquet(cur.toString), removed, "id")
           .select(col("id"), col("v"), col("cell"))
           .repartition(col("cell")),
         staged.toString, 0L, "cell")
@@ -432,7 +432,7 @@ object Similarity {
     val fs = ivfFs(spark, path)
     val inGen = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path), "_centroids")
     val raw =
-      if (fs.exists(inGen)) readStateDir(spark, inGen.toString)
+      if (fs.exists(inGen)) graft.ops.StateDirs.read(spark, inGen.toString)
       else spark.read.parquet(s"$path/centroids")
     requireLongVec(raw, "centroid", s"IVF index at $path")
   }
@@ -469,7 +469,7 @@ object Similarity {
     }
     // the rebuild read the corpus THROUGH the tombstone filter
     // (ivfVectors), so the committed generation is retraction-applied
-    if (ivfRemovedSet(spark, path).isDefined)
+    if (graft.ops.Tombstones.set(spark, path).isDefined)
       graft.ops.Tombstones.clear(spark, path)
     if (healCodes) healPqCodes(spark, path) // re-assigned cells = stale codes
   }
@@ -532,13 +532,6 @@ object Similarity {
     graft.ops.Generations.currentDir(ivfFs(spark, path),
       new org.apache.hadoop.fs.Path(path), "vectors").toString
 
-  private[graft] def ivfRemovedDir(path: String): String =
-    graft.ops.Tombstones.dir(path)
-
-  private[graft] def ivfRemovedSet(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): Option[DataFrame] =
-    graft.ops.Tombstones.set(spark, path)
-
   /** RETRACT vectors from the persisted IVF index without a rewrite —
     * the [[graft.llm.Dedup.retractFromIndex]] contract for the vector
     * family: tombstones under `removed/__ret=<retractionId>` (dynamic
@@ -559,11 +552,6 @@ object Similarity {
     graft.ops.Tombstones.write(spark, path, removedIds, idCol, retractionId)
   }
 
-  /** Tombstone filter for an index-side frame keyed by long `id`. */
-  private[graft] def ivfDropRemoved(df: DataFrame,
-                                    removed: Option[DataFrame]): DataFrame =
-    graft.ops.Tombstones.drop(df, removed, "id")
-
   /** The persisted index's vector table (id, v, cell, __batch), read
     * through the current generation — the public read entry point (raw
     * `spark.read.parquet("$path/vectors")` would see a stale generation
@@ -572,8 +560,8 @@ object Similarity {
     * drift stats, rebuilds — sees the surviving corpus.
     */
   def ivfVectors(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    ivfDropRemoved(spark.read.parquet(ivfVectorsDir(spark, path)),
-      ivfRemovedSet(spark, path))
+    graft.ops.Tombstones.drop(spark.read.parquet(ivfVectorsDir(spark, path)),
+      graft.ops.Tombstones.set(spark, path), "id")
 
   /** The index's live `__batch` set, read from the partition DIRECTORY
     * names — nCells-bounded FS listings, no Spark job (a batch partition
@@ -603,26 +591,6 @@ object Similarity {
                                  path: String, name: String): String = {
     val inGen = new org.apache.hadoop.fs.Path(ivfVectorsDir(spark, path), s"_$name")
     if (ivfFs(spark, path).exists(inGen)) inGen.toString else s"$path/$name"
-  }
-
-  /** Read an in-generation state dir (`_centroids/`, or wherever
-    * [[ivfStatsDir]] resolves) through its listed children, with the dir
-    * itself as `basePath`. Spark's reader flags a root path whose name
-    * starts with `_` and logs "All paths were ignored" on every such read
-    * (it still reads it); the children (`cell=`/`__batch=` dirs, part
-    * files) pass that check, and the rows are the same. The children are
-    * listed here rather than globbed: a single glob path makes Spark look
-    * for a streaming-sink log under the literal glob and log a warning
-    * with a stack trace.
-    */
-  private def readStateDir(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): DataFrame = {
-    val children = ivfFs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath).filter { c =>
-        val n = c.getName
-        n.contains("=") || !(n.startsWith("_") || n.startsWith("."))
-      }
-    spark.read.option("basePath", dir).parquet(children.map(_.toString).toIndexedSeq: _*)
   }
 
   /** Both full-rewrite sidecars (cell stats + drift baseline) of
@@ -737,7 +705,7 @@ object Similarity {
     require(ivfFs(spark, path).exists(new org.apache.hadoop.fs.Path(driftDir)),
       s"no drift_stats sidecar at $path (pre-drift index) — rebuild with " +
         "ivfWriteIndex or run ivfCompact once to establish the baseline")
-    val d = readStateDir(spark, driftDir)
+    val d = graft.ops.StateDirs.read(spark, driftDir)
       .select(col("__batch").cast("long").as("__batch"),
         col("n"), col("mean_d2"), col("p95_d2"))
     val base = d.orderBy(col("__batch")).limit(1).head()
@@ -761,7 +729,7 @@ object Similarity {
     val statsPath = new org.apache.hadoop.fs.Path(ivfStatsDir(spark, path, CellStats))
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(statsPath))
-      readStateDir(spark, statsPath.toString)
+      graft.ops.StateDirs.read(spark, statsPath.toString)
         .groupBy(col("cell")).agg(sum(col("n")).as("n"))
     else
       ivfVectors(spark, path)

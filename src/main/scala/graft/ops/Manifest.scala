@@ -109,14 +109,11 @@ object Manifest {
     read(spark, tablePath)
   }
 
-  /** Read the manifest back. Spark logs a one-line
-    * `All paths were ignored: .../_graft_manifest` WARN here — that is the
-    * hidden-path check noticing an explicitly-named `_` path before using
-    * it anyway (the same listing rule that hides the manifest from table
-    * scans); harmless.
+  /** Read the manifest back (through [[StateDirs.read]], like every
+    * `_`-prefixed side dir here).
     */
   def read(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read.parquet(s"$tablePath/$ManifestDir")
+    StateDirs.read(spark, s"$tablePath/$ManifestDir")
 
   /** Current data files under `tablePath`: everything Spark's own input
     * listing would see (skips `_`/`.`-prefixed files and directories —
@@ -214,7 +211,7 @@ object Manifest {
       .withColumn("num_hashes", lit(numHashes))
       .coalesce(1) // one row per data file
       .write.mode("overwrite").parquet(s"$tablePath/${bloomDir(c)}")
-    spark.read.parquet(s"$tablePath/${bloomDir(c)}")
+    StateDirs.read(spark, s"$tablePath/${bloomDir(c)}")
   }
 
   /** Incremental Bloom-sidecar repair — [[refresh]]'s twin: filters are
@@ -230,7 +227,7 @@ object Manifest {
     val sidePath = new org.apache.hadoop.fs.Path(side)
     val fs = sidePath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(sidePath)) return writeBloom(spark, tablePath, c)
-    val existing = spark.read.parquet(side)
+    val existing = StateDirs.read(spark, side)
     val head = existing.select(col("num_bits"), col("num_hashes")).head()
     val (numBits, numHashes) = (head.getInt(0), head.getInt(1))
     val known = existing.select(col("file")).collect().map(_.getString(0))
@@ -260,7 +257,7 @@ object Manifest {
       // read from (the refresh rule); one row per file
       .localCheckpoint(true)
     merged.write.mode("overwrite").parquet(side)
-    spark.read.parquet(side)
+    StateDirs.read(spark, side)
   }
 
   /** Point-lookup read through the Bloom sidecar: scan only the files
@@ -279,7 +276,7 @@ object Manifest {
   def bloomRead(spark: SparkSession, tablePath: String, c: String,
                 value: Column, trustBloom: Boolean = false): DataFrame = {
     val side = s"$tablePath/${bloomDir(c)}"
-    val bl = spark.read.parquet(side)
+    val bl = StateDirs.read(spark, side)
     if (!trustBloom) {
       val known = bl.select(col("file")).collect()
         .map(r => normalizePath(r.getString(0))).toSet

@@ -471,43 +471,70 @@ object Sinks {
                                     bucketCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val fs = fsOf(spark, targetDir)
+    applyTruncating(batch, versionCol, opCol, new TruncateTarget {
+      def floorDir: Option[String] = Some(targetDir)
+      def stored: Option[DataFrame] =
+        if (hasBucketDirs(fs, targetDir)) Some(readPinned(spark, targetDir)) else None
+      def rewrite(rows: DataFrame): Unit = commitBuckets(fs, targetDir, rows)
+      def drop(kb: Int): Unit = fs.delete(new Path(targetDir, s"__kb=$kb"), true): Unit
+    })(applyUpsertBatch(_, targetDir, keyCols, versionCol, nBuckets, bucketCols))
+  }
+
+  /** The four things the two truncate sinks differ in: where the floor
+    * sidecar lives (None before the target exists), how the stored rows
+    * are read (with their `__kb`; None while nothing is stored), how
+    * rewritten buckets are written, and how a wholly dead bucket goes.
+    */
+  private trait TruncateTarget {
+    def floorDir: Option[String]
+    def stored: Option[DataFrame]
+    def rewrite(rows: DataFrame): Unit
+    def drop(kb: Int): Unit
+  }
+
+  /** The truncate sinks' one body: the cut (floor ∪ the batch's last
+    * truncate), the `upsert` of the rows that outlive it, and — for a
+    * truncate newer than the floor — the clear of the stored pre-truncate
+    * rows, then the floor's move.
+    */
+  private def applyTruncating(batch: DataFrame, versionCol: String, opCol: String,
+                              target: TruncateTarget)(upsert: DataFrame => Unit): Unit = {
+    val spark = batch.sparkSession
     // the FLOOR is part of the table, not the batch: a batch arriving
     // AFTER the truncate's batch but carrying straggler rows versioned
     // BEFORE it must not resurrect the cleared key-space. The sidecar
     // persists the highest truncate version ever applied; every batch
     // drops its rows at or below it before merging.
-    val floor: Option[Long] = readSidecar(fs, targetDir, TruncateFile)(_.toLong)
+    val floor: Option[Long] = target.floorDir.flatMap(d =>
+      readSidecar(fsOf(spark, d), d, TruncateFile)(_.toLong))
     val cut = batch.where(col(opCol) === TruncateOp)
       .agg(max(col(versionCol).cast("long"))).head() // one driver row
     val batchT: Option[Long] = if (cut.isNullAt(0)) None else Some(cut.getLong(0))
     val effT: Option[Long] = (floor.toSeq ++ batchT.toSeq).maxOption
     val rows = batch.where(col(opCol) =!= TruncateOp || col(opCol).isNull)
-    val live = effT.map(t => rows.where(col(versionCol) > lit(t))).getOrElse(rows)
-    applyUpsertBatch(live, targetDir, keyCols, versionCol, nBuckets, bucketCols)
+    upsert(effT.map(t => rows.where(col(versionCol) > lit(t))).getOrElse(rows))
     // a truncate NEWER than the floor clears the stored pre-truncate
     // key-space, then moves the floor (floor moves LAST: a crash between
     // the two replays the clear idempotently — the survivor set
     // recomputes identically)
     if (batchT.exists(bt => floor.forall(_ < bt))) {
       val t = lit(effT.get)
-      if (hasBucketDirs(fs, targetDir)) {
-        val cur = readPinned(spark, targetDir)
+      target.stored.foreach { cur =>
         val spans = cur.groupBy(col("__kb"))
           .agg(coalesce(min(col(versionCol)) <= t, lit(false)).as("__hasDead"),
             coalesce(max(col(versionCol)) <= t, lit(false)).as("__allDead"))
           .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getBoolean(2)))
         val toRewrite = spans.collect { case (kb, true, false) => kb }
-        if (toRewrite.nonEmpty) {
-          commitBuckets(fs, targetDir, byBucket(cur
-            .where(col("__kb").isin(toRewrite.toIndexedSeq: _*) &&
-              col(versionCol) > t), toRewrite.length))
-        }
-        // fully-dead partitions: the bucket commit only replaces buckets
-        // present in its output — remove their dirs outright
-        spans.collect { case (kb, _, true) => kb }
-          .foreach(kb => fs.delete(new Path(targetDir, s"__kb=$kb"), true))
+        if (toRewrite.nonEmpty)
+          target.rewrite(byBucket(cur.where(col("__kb").isin(toRewrite.toIndexedSeq: _*) &&
+            col(versionCol) > t), toRewrite.length))
+        // fully-dead buckets: a bucket write only replaces the buckets
+        // present in its output, so these go outright
+        spans.collect { case (kb, _, true) => kb }.foreach(target.drop)
       }
-      writeSidecar(fs, targetDir, TruncateFile, effT.get.toString)
+      // the upsert above created the target, so its floor dir exists
+      val d = target.floorDir.get
+      writeSidecar(fsOf(spark, d), d, TruncateFile, effT.get.toString)
     }
   }
 
@@ -738,9 +765,23 @@ object Sinks {
     *
     * Per-batch cost is the dir sink's: read ONLY the touched `__kb`
     * partitions (CatalogFileIndex partition pruning), latest-wins merge,
-    * dynamic-overwrite exactly those partitions back (bucket files are
-    * rebuilt inside each rewritten partition; untouched partitions keep
-    * their files byte-identical, so the bucket contract never breaks).
+    * overwrite exactly those partitions (bucket files are rebuilt inside
+    * each rewritten partition; untouched partitions keep their files
+    * byte-identical, so the bucket contract never breaks).
+    *
+    * Commit: the TABLE owns its dynamic partition overwrite — it is
+    * created with `OPTIONS ('partitionOverwriteMode' = 'dynamic')`, which
+    * Spark's insert honors over the session's mode, so every write here
+    * is a plain `insertInto` in the caller's own session and never
+    * touches its conf. Spark stages a dynamic overwrite's output and
+    * moves it into place only at job commit, so the merge may read the
+    * very partitions it replaces. The move itself is Spark's: per
+    * partition a delete, then a rename, with no roll-forward — a crash
+    * inside it can leave a partition missing until the batch is
+    * replayed, and a concurrent reader can see one missing for the
+    * length of a rename. A table without the option (not created here)
+    * is refused: its overwrite would run in static mode and replace the
+    * whole table.
     *
     * Schema contract (r18, at parity with the dir sink): the CATALOG is
     * the schema pin. A batch that ADDS columns widens the table in
@@ -761,10 +802,10 @@ object Sinks {
       s"bucketCols (${bucketCols.mkString(",")}) must be a non-empty subset " +
         s"of keyCols (${keyCols.mkString(",")})")
     lazy val batchRows = batch.count()
-    val freshTable = !spark.catalog.tableExists(table)
-    if (freshTable) {
+    if (!spark.catalog.tableExists(table)) {
       // batch 0 defines the table: data columns from the batch schema,
-      // __kb as the partition column, the join key as the bucket spec.
+      // __kb as the partition column, the join key as the bucket spec,
+      // and the dynamic overwrite every later write relies on.
       // The LAYOUT KNOBS (nKbParts, keyCols) are pinned as table
       // properties: like the dir sink's sidecars, a later batch hashing
       // __kb with a different modulus or key set would prune the wrong
@@ -775,6 +816,7 @@ object Sinks {
       val bk = bucketCols.mkString(", ")
       spark.sql(
         s"""CREATE TABLE $table ($colsDdl, __kb INT) USING parquet
+           |OPTIONS ('partitionOverwriteMode' = 'dynamic')
            |PARTITIONED BY (__kb)
            |CLUSTERED BY ($bk) SORTED BY ($bk) INTO $nBuckets BUCKETS
            |TBLPROPERTIES ('graft.nKbParts' = '$nKbParts',
@@ -784,13 +826,8 @@ object Sinks {
         "pin", None, Some(batch.schema), Some(batchRows))
     } else {
       // the layout pin is MANDATORY on later batches: a modulus or
-      // key-set drift would prune the wrong partitions; a table without
-      // the pin (not created through this sink) is refused, not guessed
-      val props = tableProps(spark, table)
-      require(props.contains("graft.nKbParts"),
-        s"table $table has no graft.nKbParts pin — it was not created " +
-          "through this sink; recreate it here (the pin is the guard " +
-          "against layout drift)")
+      // key-set drift would prune the wrong partitions
+      val props = requireSinkTable(spark, table)
       require(props("graft.nKbParts") == nKbParts.toString,
         s"table $table is partitioned with nKbParts=${props("graft.nKbParts")}; " +
           s"got $nKbParts — a different modulus would prune the wrong " +
@@ -821,83 +858,69 @@ object Sinks {
     }
     val b = batch.withColumn("__kb",
       pmod(hash(keyCols.map(col): _*), lit(nKbParts)))
-    val tableCols = spark.table(table).columns
     val touched = b.select(col("__kb")).distinct().collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) return
     val existing = spark.table(table).where(col("__kb").isin(touched: _*))
     // layout-aligned merge (see [[latestByKeyAligned]]): one exchange on
-    // __kb, whole partitions per task — the bucketed insertInto then
-    // writes ~one file per (touched __kb dir × bucket) instead of one
-    // per (merge-shuffle task × dir × bucket)
-    val merged0 = latestByKeyAligned(existing.unionByName(b), keyCols, versionCol,
-      touched.size)
-    // sever the read-before-overwrite hazard (the dir sink writes to a
-    // stage instead) — except on the batch that just CREATED the (empty) table,
-    // whose scan matches zero files (r19: skip the extra pass)
-    val merged = (if (freshTable) merged0 else merged0.localCheckpoint(true))
-      .select(tableCols.map(col): _*) // insertInto matches positionally
-    dynamicOverwriteInsert(spark, merged, table)
+    // __kb, whole partitions per task — the bucketed insert then writes
+    // ~one file per (touched __kb dir × bucket) instead of one per
+    // (merge-shuffle task × dir × bucket)
+    insertOverwrite(latestByKeyAligned(existing.unionByName(b), keyCols, versionCol,
+      touched.size), table)
   }
+
+  /** Overwrite the clustered table's `__kb` partitions present in `rows`
+    * — the table's dynamic-overwrite option replaces exactly those (see
+    * [[applyUpsertBatchClustered]]). `insertInto` matches columns by
+    * position, so `rows` is put in the table's column order first.
+    */
+  private def insertOverwrite(rows: DataFrame, table: String): Unit =
+    rows.select(rows.sparkSession.table(table).columns.map(col).toIndexedSeq: _*)
+      .write.mode("overwrite").insertInto(table)
 
   private def tableProps(spark: SparkSession, table: String): Map[String, String] =
     spark.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
-  /** insertInto ignores the per-write partitionOverwriteMode OPTION
-    * (verified empirically on Spark 4.1: the option'd write replaced the
-    * whole table) — the session conf is the only lever. But the conf is
-    * session-GLOBAL, and the r18 set→insert→restore under a JVM lock
-    * only serialized THIS sink's own calls (r18 advice): any other
-    * writer sharing the SparkSession that inserted during the window ran
-    * in dynamic mode unexpectedly, or had its own setting restored over.
-    * So the insert executes in a CLONED session instead — newSession()
-    * shares the SparkContext and catalog but owns its SQLConf, scoping
-    * the dynamic mode to exactly this write with no mutation of (and no
-    * lock against) the caller's session. The frame crosses sessions
-    * through a global temp view (same shared catalog; the plan
-    * re-resolves under the clone — cheap, and the upstream
-    * localCheckpoint already severed the self-overwrite hazard).
+  /** One `DESCRIBE TABLE EXTENDED` detail row (`Location`, `Storage
+    * Properties`, …) of `table`, if present. The rows are filtered on the
+    * driver: a filter over the command's result would run a Spark job.
     */
-  // one dynamic-mode clone per parent session, built lazily: the clone's
-  // only distinguishing state is a conf that never changes, so paying
-  // newSession() (a full SessionState) on every micro-batch insert would
-  // be pure hot-path overhead
-  private val dynSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private def tableDetail(spark: SparkSession, table: String, name: String): Option[String] =
+    spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+      .find(_.getString(0) == name).map(_.getString(1))
 
-  private def dynamicOverwriteInsert(spark: SparkSession, df: DataFrame,
-                                     table: String): Unit = {
-    val s2 = dynSessions.computeIfAbsent(spark, { parent =>
-      val c = parent.newSession()
-      c.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      c
-    })
-    val view = "graft_dyn_insert_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    df.createOrReplaceGlobalTempView(view)
-    try {
-      val gdb = spark.conf.getOption("spark.sql.globalTempDatabase")
-        .getOrElse("global_temp")
-      s2.table(s"$gdb.$view").write.mode("overwrite").insertInto(table)
-      // the write invalidated s2's relation cache, not the caller's: the
-      // caller's next read of the table would list the OVERWRITTEN files
-      // and fail (or silently read stale data) without this refresh
-      spark.catalog.refreshTable(table)
-    } finally {
-      spark.catalog.dropGlobalTempView(view): Unit
-    }
+  /** The table's layout pins, refusing a table this sink did not
+    * create: one without the `graft.nKbParts` pin (the guard against
+    * layout drift), or without the dynamic-overwrite storage option
+    * (its overwrite would run in static mode and replace the whole
+    * table).
+    */
+  private def requireSinkTable(spark: SparkSession, table: String): Map[String, String] = {
+    def notOurs(missing: String, why: String): String =
+      s"table $table has no $missing — it was not created through this sink; " +
+        s"recreate it here ($why)"
+    val props = tableProps(spark, table)
+    require(props.contains("graft.nKbParts"),
+      notOurs("graft.nKbParts pin", "the pin is the guard against layout drift"))
+    require(tableDetail(spark, table, "Storage Properties")
+        .exists(_.toLowerCase(java.util.Locale.ROOT).contains("partitionoverwritemode=dynamic")),
+      notOurs("'partitionOverwriteMode' = 'dynamic' option",
+        "without it an overwrite runs in static mode and replaces the whole table"))
+    props
   }
 
   /** B19 parity for the CLUSTERED catalog sink: [[applyUpsertBatchClustered]]
-    * with TRUNCATE support — the same semantics and floor discipline as
-    * [[applyUpsertBatchWithTruncates]] (dir-sink scaladoc), adapted to
-    * the catalog: the floor sidecar lives at the table LOCATION (beside
-    * its B17 history), mixed partitions rewrite through the scoped
-    * [[dynamicOverwriteInsert]], and wholly-dead partitions drop via
-    * `ALTER TABLE … DROP PARTITION` (the catalog's delete — dynamic
-    * overwrite cannot remove a partition absent from its output). The
-    * bucket spec is catalog metadata, so the exchange-free join contract
-    * survives the truncate untouched.
+    * with TRUNCATE support — the same semantics, floor discipline and
+    * body as [[applyUpsertBatchWithTruncates]] (dir-sink scaladoc),
+    * adapted to the catalog: the floor sidecar lives at the table
+    * LOCATION (beside its B17 history), the stored rows are the catalog
+    * table, mixed partitions rewrite through the table's dynamic
+    * overwrite, and wholly-dead partitions drop via `ALTER TABLE … DROP
+    * PARTITION` (the catalog's delete — dynamic overwrite cannot remove a
+    * partition absent from its output). The bucket spec is catalog
+    * metadata, so the exchange-free join contract survives the truncate
+    * untouched.
     */
   def applyUpsertBatchClusteredWithTruncates(batch: DataFrame, table: String,
                                              keyCols: Seq[String],
@@ -907,44 +930,15 @@ object Sinks {
                                              nBuckets: Int = 8,
                                              nKbParts: Int = 16): Unit = {
     val spark = batch.sparkSession
-    val rows = batch.where(col(opCol) =!= TruncateOp || col(opCol).isNull)
-    val cut = batch.where(col(opCol) === TruncateOp)
-      .agg(max(col(versionCol).cast("long"))).head()
-    val batchT: Option[Long] = if (cut.isNullAt(0)) None else Some(cut.getLong(0))
-    val floor: Option[Long] =
-      if (!spark.catalog.tableExists(table)) None
-      else {
-        val loc = tableLocation(spark, table)
-        readSidecar(fsOf(spark, loc), loc, TruncateFile)(_.toLong)
-      }
-    val effT: Option[Long] = (floor.toSeq ++ batchT.toSeq).maxOption
-    val live = effT.map(t => rows.where(col(versionCol) > lit(t))).getOrElse(rows)
-    applyUpsertBatchClustered(live, table, keyCols, versionCol, bucketCols,
-      nBuckets, nKbParts)
-    if (batchT.exists(bt => floor.forall(_ < bt)) &&
-        spark.catalog.tableExists(table)) {
-      val t = lit(effT.get)
-      val cur = spark.table(table)
-      val spans = cur.groupBy(col("__kb"))
-        .agg(coalesce(min(col(versionCol)) <= t, lit(false)).as("__hasDead"),
-          coalesce(max(col(versionCol)) <= t, lit(false)).as("__allDead"))
-        .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getBoolean(2)))
-      val toRewrite = spans.collect { case (kb, true, false) => kb }
-      if (toRewrite.nonEmpty) {
-        val tableCols = cur.columns
-        val kept = cur
-          .where(col("__kb").isin(toRewrite.toIndexedSeq: _*) &&
-            col(versionCol) > t)
-          .localCheckpoint(true)
-          .select(tableCols.map(col).toIndexedSeq: _*)
-        dynamicOverwriteInsert(spark, kept, table)
-      }
-      spans.collect { case (kb, _, true) => kb }.foreach { kb =>
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (__kb=$kb)")
-      }
-      val loc = tableLocation(spark, table)
-      writeSidecar(fsOf(spark, loc), loc, TruncateFile, effT.get.toString)
-    }
+    applyTruncating(batch, versionCol, opCol, new TruncateTarget {
+      def floorDir: Option[String] =
+        if (spark.catalog.tableExists(table)) Some(tableLocation(spark, table)) else None
+      def stored: Option[DataFrame] = Some(spark.table(table))
+      def rewrite(rows: DataFrame): Unit = insertOverwrite(rows, table)
+      def drop(kb: Int): Unit =
+        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (__kb=$kb)"): Unit
+    })(applyUpsertBatchClustered(_, table, keyCols, versionCol, bucketCols,
+      nBuckets, nKbParts))
   }
 
   /** Live rows of a [[applyUpsertBatchClustered]] table (tombstones
@@ -960,9 +954,7 @@ object Sinks {
     * events live under (the clustered twin of the dir sink's targetDir).
     */
   def tableLocation(spark: SparkSession, table: String): String =
-    spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .where(col("col_name") === "Location")
-      .select("data_type").head().getString(0)
+    tableDetail(spark, table, "Location").get
 
   /** Compaction for the clustered table. Since the r19 layout-aligned
     * merge each rewrite holds every touched `__kb` partition in one task
@@ -974,15 +966,12 @@ object Sinks {
     * ([[byBucket]] over the pinned `graft.nKbParts`) so the rewrite lands
     * ~one file per (partition, bucket) — the catalog's bucket spec is
     * metadata and survives untouched, so the exchange-free join contract
-    * holds before and after. The checkpoint severs the
-    * read-before-overwrite hazard exactly like the batch path.
+    * holds before and after. Like every write of the sink it reads the
+    * partitions it overwrites through the table's staged dynamic
+    * overwrite, and refuses a table the sink did not create.
     */
   def compactClustered(spark: SparkSession, table: String): Unit = {
-    val tableCols = spark.table(table).columns
-    val kbParts = tableProps(spark, table).get("graft.nKbParts").map(_.toInt)
-    val snap = byBucket(spark.table(table), kbParts.getOrElse(Int.MaxValue))
-      .localCheckpoint(true)
-      .select(tableCols.map(col): _*)
-    dynamicOverwriteInsert(spark, snap, table)
+    val kbParts = requireSinkTable(spark, table)("graft.nKbParts").toInt
+    insertOverwrite(byBucket(spark.table(table), kbParts), table)
   }
 }

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A8d — the clustered catalog upsert sink's contracts beyond the
   * GauntletSpec exchange-free proof: schema parity with the dir sink
   * (catalog-pinned widen / refuse, each a B17 event at the table's
-  * location), replay idempotence, and compaction that shrinks files
-  * without touching the bucket contract.
+  * location), replay idempotence, compaction that shrinks files
+  * without touching the bucket contract, and the table-owned dynamic
+  * overwrite (every insert in the caller's session with no checkpoint
+  * pass; a table without it refused).
   */
 class ClusteredSinkSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -32,6 +34,48 @@ class ClusteredSinkSpec extends AnyFunSuite {
 
   private def batch1 = Seq((1L, 10L, "a", "u", 1L), (2L, 20L, "b", "u", 1L))
     .toDF("k", "sub", "payload", "op", "__v")
+
+  /** Spark jobs `body` starts, by job group, each named by the root
+    * operator of its SQL execution and its stages' task counts. A marker
+    * job run after `body` flushes the asynchronous listener bus (it
+    * delivers in order).
+    */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = "csink-jobs-" + java.util.UUID.randomUUID()
+    val marker = group + "-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId.toString,
+            s.physicalPlanDescription.split("\n").lift(1).getOrElse("?").trim)
+        case _ =>
+      }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)  =>
+            val plan = Option(j.properties.getProperty("spark.sql.execution.id"))
+              .flatMap(id => Option(plans.get(id))).getOrElse("(no SQL execution)")
+            seen.add(s"$plan, tasks ${j.stageInfos.map(_.numTasks).mkString("+")}")
+          case Some(`marker`) => markerDone.countDown()
+          case _              =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "clustered sink batch under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener-bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
 
   test("widening absorbs via the catalog; pin and widen land as B17 events") {
     val t = freshTable()
@@ -335,6 +379,83 @@ class ClusteredSinkSpec extends AnyFunSuite {
     val ev = graft.cdc.SchemaHistory.read(spark, Sinks.tableLocation(spark, t))
       .select("action").collect().map(_.getString(0)).toSeq
     assert(ev === Seq("pin"), "the second batch neither widens nor refuses")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a steady batch runs four Spark jobs: the insert reads the partitions it overwrites") {
+    val t = freshTable()
+    // 20k keys over 16 __kb partitions x 4 buckets; the steady batch
+    // updates, deletes and inserts across every partition
+    def rows(from: Long, to: Long, v: Long) = spark.range(from, to).select(
+      col("id").as("k"), (col("id") * 7).as("sub"),
+      concat(lit(s"p$v-"), col("id").cast("string")).as("payload"),
+      when(col("id") % 10 === 3, lit("d")).otherwise(lit("u")).as("op"),
+      lit(v).as("__v"))
+    Sinks.applyUpsertBatchClustered(rows(0L, 20000L, 1L), t, Seq("k"), "__v",
+      Seq("k"), nBuckets = 4, nKbParts = 16)
+    val batch = rows(10000L, 30000L, 2L)
+    // the touched-set collect (map stage + result) and the insert (merge
+    // shuffle + write): no checkpoint pass between the merge and the write
+    val jobs = jobsDuring(Sinks.applyUpsertBatchClustered(batch, t, Seq("k"), "__v",
+      Seq("k"), nBuckets = 4, nKbParts = 16))
+    assert(jobs.size === 4, jobs.mkString("jobs:\n", "\n", ""))
+    val want = rows(0L, 10000L, 1L).unionByName(batch).where(col("op") =!= "d")
+      .select("k", "payload").as[(Long, String)].collect().sorted.toSeq
+    assert(Sinks.currentStateClustered(spark, t).select("k", "payload")
+      .as[(Long, String)].collect().sorted.toSeq === want)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the table owns dynamic overwrite: a static session's INSERT OVERWRITE keeps the other partitions") {
+    val t = freshTable()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val rows = (1L to 8L).map(k => (k, k * 10L, s"a$k", "u", 1L))
+        .toDF("k", "sub", "payload", "op", "__v")
+      Sinks.applyUpsertBatchClustered(rows, t, Seq("k", "sub"), "__v",
+        Seq("k"), nBuckets = 4, nKbParts = 8)
+      val kbs = spark.table(t).select("__kb").distinct().as[Int].collect().sorted
+      assert(kbs.length >= 2, "fixture must span partitions")
+      val one = kbs.head
+      val others = spark.table(t).where(col("__kb") =!= one).count()
+      // a plain SQL overwrite whose rows all land in ONE partition: in
+      // static mode on a table without the option it would empty the rest
+      spark.sql(s"INSERT OVERWRITE TABLE $t SELECT k, sub, concat(payload, 'x'), " +
+        s"op, __v, __kb FROM $t WHERE __kb = $one")
+      assert(spark.table(t).where(col("__kb") =!= one).count() === others,
+        "the other partitions survive a static-mode session's overwrite")
+      assert(spark.table(t).where(col("__kb") === one)
+        .as[(Long, Long, String, String, Long, Int)].collect()
+        .forall(_._3.endsWith("x")), "the overwritten partition holds the new rows")
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  test("a pinned table without the dynamic-overwrite option is refused by a batch and by compaction") {
+    val t = freshTable()
+    // the sink's layout pins, but no storage option: every overwrite
+    // would run in the session's (static) mode and replace the table
+    spark.sql(s"CREATE TABLE $t (k BIGINT, sub BIGINT, payload STRING, " +
+      "op STRING, __v BIGINT, __kb INT) USING parquet PARTITIONED BY (__kb) " +
+      "CLUSTERED BY (k) SORTED BY (k) INTO 4 BUCKETS " +
+      "TBLPROPERTIES ('graft.nKbParts' = '2', 'graft.keyCols' = 'k,sub')")
+    spark.sql(s"INSERT INTO $t VALUES (9, 90, 'keep', 'u', 1, 0), (8, 80, 'keep', 'u', 1, 1)")
+    val batch = intercept[IllegalArgumentException] {
+      Sinks.applyUpsertBatchClustered(batch1, t, Seq("k", "sub"), "__v",
+        Seq("k"), nBuckets = 4, nKbParts = 2)
+    }
+    assert(batch.getMessage.contains("partitionOverwriteMode") &&
+      batch.getMessage.contains("recreate it here"), batch.getMessage)
+    val compact = intercept[IllegalArgumentException](Sinks.compactClustered(spark, t))
+    assert(compact.getMessage.contains("partitionOverwriteMode"), compact.getMessage)
+    assert(spark.table(t).count() === 2L, "neither refusal touched the table")
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 }

@@ -1842,7 +1842,7 @@ class LshQualitySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(pairsOf(full) === tombstoned)
     // compaction bakes the tombstones physically and clears them
     graft.llm.Dedup.compactIndex(spark, full, maxBucketSize = Int.MaxValue)
-    assert(graft.llm.Dedup.removedSet(spark, full).isEmpty,
+    assert(graft.ops.Tombstones.set(spark, full).isEmpty,
       "compaction must clear the applied tombstone set")
     assert(pairsOf(full) === tombstoned, "baked == tombstoned-at-read")
     val sigIds = spark.read.parquet(

@@ -60,7 +60,7 @@ class IndexMaintainSpec extends AnyFunSuite {
     // compaction bakes the tombstones and clears them; reads unchanged
     val before = ivfTop()
     llm.Similarity.ivfCompact(spark, path)
-    assert(llm.Similarity.ivfRemovedSet(spark, path).isEmpty)
+    assert(graft.ops.Tombstones.set(spark, path).isEmpty)
     assert(ivfTop() === before, "baked == tombstoned-at-read")
     val rawIds = spark.read.parquet(
         llm.Similarity.ivfVectorsDir(spark, path))
@@ -116,7 +116,7 @@ class IndexMaintainSpec extends AnyFunSuite {
     llm.Similarity.ivfCompact(spark, path)
     assert(neigh().intersect(removedIds).isEmpty,
       "…and the compaction deletes the re-added rows with the tombstone")
-    assert(llm.Similarity.ivfRemovedSet(spark, path).isEmpty)
+    assert(graft.ops.Tombstones.set(spark, path).isEmpty)
     // SAFE path: re-ingest AFTER the compaction epoch that absorbed the
     // retraction — the id is a fresh doc again and full-probe reads
     // equal brute force over the complete corpus

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The IVF index keeps its rebuilt centroids and its stats sidecars in
-  * `_`-prefixed dirs inside the vectors generation. Spark's reader drops
-  * such a root path from its listing filter and warns "All paths were
-  * ignored" on every read; the index reads them through their children,
-  * so a rebuild-then-report round logs no such line and reads the same
-  * rows as a plain read of each dir.
+  * `_`-prefixed dirs inside the vectors generation, and the file-stats
+  * manifest keeps `_graft_manifest` and its Bloom sidecars beside the
+  * table. Spark's reader drops such a root path from its listing filter
+  * and warns "All paths were ignored" on every read; both read them
+  * through their children (`graft.ops.StateDirs`), so a rebuild-then-
+  * report round and a manifest write/refresh/read round log no such line
+  * and read the same rows as a plain read of each dir.
   */
 class IvfStateReadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -76,5 +78,32 @@ class IvfStateReadSpec extends AnyFunSuite {
     assert(cells === sorted(spark.read.parquet(new Path(gen, "_cell_stats").toString)
       .groupBy(col("cell")).agg(sum(col("n")).as("n"))))
     assert(centroids === sorted(spark.read.parquet(new Path(gen, "_centroids").toString)))
+  }
+
+  test("a manifest and Bloom write, refresh and read round logs no ignored-paths warning") {
+    import spark.implicits._
+    val table = java.nio.file.Files.createTempDirectory("graft-manifest-state-read").toString + "/t"
+    (0L until 400L).map(i => (i, i % 7)).toDF("id", "g").repartition(4)
+      .write.parquet(table)
+    val (read, logs) = captureLogs {
+      ops.Manifest.write(spark, table, Seq("id"))
+      ops.Manifest.writeBloom(spark, table, "id")
+      // an appended file: both refreshes read the side dir, then rewrite it
+      (1000L until 1010L).map(i => (i, i % 7)).toDF("id", "g").coalesce(1)
+        .write.mode("append").parquet(table)
+      ops.Manifest.refresh(spark, table, Seq("id"))
+      ops.Manifest.refreshBloom(spark, table, "id")
+      (sorted(ops.Manifest.read(spark, table).select("file", "min_id", "max_id", "n_rows")),
+        sorted(ops.Manifest.prunedRead(spark, table, "id", lit(100L), lit(120L))),
+        sorted(ops.Manifest.bloomRead(spark, table, "id", lit(1005L))))
+    }
+    val ignored = logs.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+    val (manifest, pruned, point) = read
+    assert(manifest === sorted(spark.read.parquet(s"$table/${ops.Manifest.ManifestDir}")
+      .select("file", "min_id", "max_id", "n_rows")))
+    assert(manifest.size === 5, "four written files and the appended one")
+    assert(pruned === sorted(spark.read.parquet(table).where(col("id").between(100L, 120L))))
+    assert(point === Seq("[1005,4]"))
   }
 }

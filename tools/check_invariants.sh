@@ -19,6 +19,15 @@
 #                                 bucket exchange, which AQE coalesces into
 #                                 one write task (Sinks.byBucket is the one
 #                                 bucket exchange of the sinks)
+#   newSession( GlobalTempView    nowhere: no cloned session carries a write
+#   spark.sql.sources.partition-  nowhere: the clustered sink's table owns
+#     OverwriteMode               its dynamic overwrite as a storage option
+#                                 and other writers pass the per-write
+#                                 option, so no code sets the session conf
+#   localCheckpoint               nowhere in streaming/Sinks.scala: the
+#                                 directory sinks write to a stage and the
+#                                 clustered sink's dynamic overwrite stages
+#                                 its output, so no read needs severing
 #
 # Usage: tools/check_invariants.sh   (from anywhere; exits 1 on any break)
 set -u
@@ -59,6 +68,12 @@ check "partitionBy(...\"__batch\"...) only inside Generations.writeBatch" \
   "$(outside 'partitionBy\([^)]*"__batch"' ops/Generations.scala ops/Graph.scala contract/ Bench.scala)"
 check "no AQE-coalescable repartition(col(\"__kb\")) under streaming/" \
   "$(grep -rnE 'repartition\(col\("__kb"\)\)' "$MAIN/streaming" --include='*.scala' | sed "s|^$MAIN/||")"
+check "no newSession( or GlobalTempView in main code" \
+  "$(outside 'newSession\(|GlobalTempView')"
+check "no session-conf spark.sql.sources.partitionOverwriteMode in main code" \
+  "$(outside 'spark\.sql\.sources\.partitionOverwriteMode')"
+check "no localCheckpoint in streaming/Sinks.scala" \
+  "$(grep -nE 'localCheckpoint' "$MAIN/streaming/Sinks.scala" | sed "s|^|streaming/Sinks.scala:|")"
 
 # Graph keeps exactly one hand-written __batch write: the append-mode fold
 graph=$(grep -nE 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala")

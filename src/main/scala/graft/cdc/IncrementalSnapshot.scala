@@ -423,16 +423,4 @@ object IncrementalSnapshot {
         col(lsnCol).cast("long")),
       keyCols, lsnCol, opCol, deleteOp)
   }
-
-  /** [[state]] with truncate reconciliation — what a consumer queries
-    * while a snapshot is in flight over a table that may be truncated
-    * under it.
-    */
-  def stateWithTruncates(spark: org.apache.spark.sql.SparkSession,
-                         statePath: String, changes: DataFrame,
-                         keyCols: Seq[String], lsnCol: String,
-                         opCol: String = "op", deleteOp: String = "d",
-                         truncateOp: String = "t"): DataFrame =
-    mergeWithTruncates(landedChunks(spark, statePath), changes, keyCols,
-      lsnCol, opCol, deleteOp, truncateOp)
 }

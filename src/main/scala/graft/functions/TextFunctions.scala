@@ -75,10 +75,6 @@ object TextFunctions {
   def minhashComponent(shingleSet: Column, seed: Int): Column =
     array_min(transform(shingleSet, s => md5(concat(lit(seed.toString), lit(":"), s))))
 
-  /** Full MinHash signature: array of `k` components (seeds 0..k-1). */
-  def minhashSignature(shingleSet: Column, k: Int): Column =
-    array((0 until k).map(minhashComponent(shingleSet, _)): _*)
-
   /** Modulus for the fast minhash family (2^31 - 1, prime). */
   val MinhashP: Long = 2147483647L
 

@@ -18,10 +18,6 @@ import scala.annotation.nowarn
   */
 object VectorFunctions {
 
-  /** Sequential left-to-right double-precision sum of an array column. */
-  def arraySum(a: Column): Column =
-    aggregate(a, lit(0.0d), (acc, x) => acc + x.cast("double"))
-
   /** Dot product of two equal-length numeric array columns. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),

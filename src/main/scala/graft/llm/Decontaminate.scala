@@ -163,14 +163,4 @@ object Decontaminate {
         sum(when(col("__c") >= threshold, 1L).otherwise(0L)).as("n_hits"))
       .withColumn("contaminated", col("max_cos") >= threshold)
   }
-
-  /** The production form of the semantic pass: `docs` minus rows whose
-    * embedding clears `threshold` against any benchmark vector.
-    */
-  def semanticClean(docs: DataFrame, bench: DataFrame, vecCol: String,
-                    idCol: String, threshold: Double = 0.99): DataFrame = {
-    val flagged = semanticOverlapStats(docs, bench, vecCol, idCol, threshold)
-      .where(col("contaminated")).select(col(idCol))
-    docs.join(flagged, Seq(idCol), "left_anti")
-  }
 }

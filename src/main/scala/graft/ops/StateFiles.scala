@@ -52,8 +52,8 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSy
   * The main file only ever appears by renaming a closed tmp, so a main
   * that does not parse is real corruption and [[read]] throws.
   *
-  * The directory sinks' bucket commit (`Sinks.commitBuckets` /
-  * `finishCommit`) is the directory form of replace: the staged
+  * The directory sinks' bucket commit (the `write` and `finishCommit`
+  * of `Sinks`' directory target) is the directory form of replace: the staged
   * `__kb=` dirs under `_graft_stage` are the tmp, the stage's
   * `_SUCCESS` says it is complete, and promoting a bucket deletes the
   * live dir and renames the staged one into place (primitive 2, applied

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
   TimerValues, ValueState}
@@ -243,16 +243,5 @@ object Stateful {
       .groupByKey(_.key)
       .transformWithState(new EventTimeUpsertProcessor(ttl.toMillis),
         TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** Convenience: run the upsert over a batch frame of change events and
-    * return the final materialized table (deleted keys absent) — must
-    * equal Materialize.changelog on the same input.
-    */
-  def materializeBatch(changes: Dataset[Change]): DataFrame = {
-    import changes.sparkSession.implicits._
-    upsertStream(changes)
-      .filter(!_.deleted)
-      .toDF()
   }
 }

@@ -35,48 +35,6 @@ class ClusteredSinkSpec extends AnyFunSuite {
   private def batch1 = Seq((1L, 10L, "a", "u", 1L), (2L, 20L, "b", "u", 1L))
     .toDF("k", "sub", "payload", "op", "__v")
 
-  /** Spark jobs `body` starts, by job group, each named by the root
-    * operator of its SQL execution and its stages' task counts. A marker
-    * job run after `body` flushes the asynchronous listener bus (it
-    * delivers in order).
-    */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = "csink-jobs-" + java.util.UUID.randomUUID()
-    val marker = group + "-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          plans.put(s.executionId.toString,
-            s.physicalPlanDescription.split("\n").lift(1).getOrElse("?").trim)
-        case _ =>
-      }
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)  =>
-            val plan = Option(j.properties.getProperty("spark.sql.execution.id"))
-              .flatMap(id => Option(plans.get(id))).getOrElse("(no SQL execution)")
-            seen.add(s"$plan, tasks ${j.stageInfos.map(_.numTasks).mkString("+")}")
-          case Some(`marker`) => markerDone.countDown()
-          case _              =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "clustered sink batch under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener-bus marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener never saw the marker job")
-    } finally sc.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq
-  }
-
   test("widening absorbs via the catalog; pin and widen land as B17 events") {
     val t = freshTable()
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -396,7 +354,7 @@ class ClusteredSinkSpec extends AnyFunSuite {
     val batch = rows(10000L, 30000L, 2L)
     // the touched-set collect (map stage + result) and the insert (merge
     // shuffle + write): no checkpoint pass between the merge and the write
-    val jobs = jobsDuring(Sinks.applyUpsertBatchClustered(batch, t, Seq("k"), "__v",
+    val jobs = JobProbe.jobs(spark)(Sinks.applyUpsertBatchClustered(batch, t, Seq("k"), "__v",
       Seq("k"), nBuckets = 4, nKbParts = 16))
     assert(jobs.size === 4, jobs.mkString("jobs:\n", "\n", ""))
     val want = rows(0L, 10000L, 1L).unionByName(batch).where(col("op") =!= "d")

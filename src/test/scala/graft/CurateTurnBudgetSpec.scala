@@ -26,50 +26,12 @@ class CurateTurnBudgetSpec extends AnyFunSuite {
 
   import CurateTurnFixture._
 
-  /** Spark jobs launched by `body` with their call sites; a marker job
-    * flushes the async listener bus so every job `body` started has been
-    * counted.
-    */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // an AQE stage job is submitted from a planner thread: name it by the
-    // call site of the SQL execution it belongs to
-    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    @volatile var sawMarker = false
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          executions.put(s.executionId.toString, s.description)
-        case _ =>
-      }
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        if (props.map(_.getProperty("spark.jobGroup.id")).orNull == "__budget_marker")
-          sawMarker = true
-        else seen.add(props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .flatMap(id => Option(executions.get(id)))
-          .getOrElse(j.stageInfos.maxBy(_.stageId).name))
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setJobGroup("__budget_marker", "listener flush")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis + 30000
-      while (!sawMarker && System.currentTimeMillis < deadline) Thread.sleep(10)
-      assert(sawMarker, "listener bus never delivered the marker job")
-    } finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq
-  }
-
   test("a later curate turn stays under the job ceiling and equals the standalone chain") {
     val model = trainModel(spark)
     val (idx, adm, nov) = (tmp("graft-budget-idx"), tmp("graft-budget-adm") + "/t",
       tmp("graft-budget-nov"))
     turn(spark, 0, model, idx, adm, nov)
-    val jobs = jobsDuring(turn(spark, 1, model, idx, adm, nov))
+    val jobs = JobProbe.jobs(spark)(turn(spark, 1, model, idx, adm, nov))
     assert(jobs.size <= JobCeiling,
       s"${jobs.size} jobs in one turn (ceiling $JobCeiling):\n" +
         jobs.groupBy(identity).map { case (s, v) => s"${v.size}× $s" }.toSeq.sorted.mkString("\n"))

@@ -30,36 +30,6 @@ class SignalsFencingSpec extends AnyFunSuite {
     Signals.turn(spark, root, tableOf, _ => Seq("k"), _ => 10,
       (_, cid) => 100L + cid, maxChunks, epoch)
 
-  /** Count Spark jobs launched by `body`, excluding the marker job used
-    * to flush the (async) listener bus: events are delivered in order,
-    * so once the marker's start event arrives every job `body` launched
-    * has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sawMarker = false
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val gid = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (gid == "__graft_job_marker") sawMarker = true
-        else count.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setJobGroup("__graft_job_marker", "listener flush")
-      try spark.range(1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis + 30000
-      while (!sawMarker && System.currentTimeMillis < deadline) Thread.sleep(10)
-      assert(sawMarker, "listener bus never delivered the marker job")
-    } finally spark.sparkContext.removeSparkListener(l)
-    count.get
-  }
-
   test("a zombie driver's fenced writes refuse after a successor acquires the epoch") {
     val root = tmp("graft-sig-fence")
     val e1 = Signals.acquireWriter(spark, root)
@@ -307,7 +277,7 @@ class SignalsFencingSpec extends AnyFunSuite {
       ("b", "stop-snapshot", """{"data-collections":["t1"]}""", 2L)))
     assert(turn(root) === 2 && turn(root) === 0) // t2 drains and pops
     var rows: Array[org.apache.spark.sql.Row] = null
-    val jobs = jobsDuring {
+    val jobs = JobProbe.count(spark) {
       rows = Signals.progress(spark, root).collect()
     }
     assert(jobs === 0, s"progress must be job-free, launched $jobs jobs")
@@ -476,7 +446,7 @@ class SignalsFencingSpec extends AnyFunSuite {
     var maxTurnJobs = 0
     def soakTurn(): Int = {
       var landed = 0
-      val jobs = jobsDuring {
+      val jobs = JobProbe.count(spark) {
         landed = Signals.turn(spark, root, soakTable, _ => Seq("k"), _ => 30,
           (_, cid) => 100L + cid, maxChunks = 2)
       }
@@ -538,7 +508,7 @@ class SignalsFencingSpec extends AnyFunSuite {
       s"a turn launched $maxTurnJobs jobs over $turns turns — not O(chunks)")
     // and the management readout over all 50 collections is job-free
     var nRows = 0
-    val progressJobs = jobsDuring {
+    val progressJobs = JobProbe.count(spark) {
       nRows = Signals.progress(spark, root).collect().length
     }
     assert(nRows === 50 && progressJobs === 0,

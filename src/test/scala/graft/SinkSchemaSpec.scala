@@ -148,4 +148,48 @@ class SinkSchemaSpec extends AnyFunSuite {
     }
     assert(rehash.getMessage.contains("existing layout"))
   }
+
+  test("the upsert pins its merge key: a different key set refuses, also on a table written before the pin") {
+    val target = freshTarget()
+    def keyed(from: Long, to: Long, v: Long) = spark.range(from, to).select(
+      col("id").as("k"), (col("id") % 3).as("sub"), lit(v).as("version"),
+      lit("u").as("op"), concat(lit(s"p$v-"), col("id").cast("string")).as("payload"))
+    Sinks.applyUpsertBatch(keyed(0L, 200L, 1L), target, Seq("k"), "version", nBuckets = 4)
+    val drift = intercept[IllegalArgumentException] {
+      Sinks.applyUpsertBatch(keyed(160L, 240L, 2L), target, Seq("k", "sub"), "version")
+    }
+    assert(drift.getMessage.contains("merges on keyCols=k; got k,sub"), drift.getMessage)
+    assert(Sinks.currentState(spark, target).count() === 200L, "the refusal moved the table")
+    // a table written before the key pin existed: the next batch pins its key
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(target, "_graft_key_cols"), false))
+    Sinks.applyUpsertBatch(keyed(150L, 250L, 2L), target, Seq("k"), "version")
+    intercept[IllegalArgumentException] {
+      Sinks.applyUpsertBatch(keyed(160L, 240L, 3L), target, Seq("k", "sub"), "version")
+    }
+    val live = Sinks.currentState(spark, target)
+    assert(live.count() === 250L && live.select("k").distinct().count() === 250L)
+  }
+
+  test("the rollup pins its merge key: a reordered or widened key set refuses") {
+    def events(v: Long) = spark.range(0, 100).select((col("id") % 10).as("a"),
+      (col("id") % 7).as("b"), lit(v.toDouble).as("value"))
+    val target = freshTarget()
+    Sinks.applyRollupBatch(events(1L), target, Seq("a", "b"), "value",
+      nBuckets = 4, batchId = Some(0L))
+    val reordered = intercept[IllegalArgumentException] {
+      Sinks.applyRollupBatch(events(2L), target, Seq("b", "a"), "value", batchId = Some(1L))
+    }
+    assert(reordered.getMessage.contains("merges on keyCols=a,b; got b,a"), reordered.getMessage)
+    val narrow = freshTarget()
+    Sinks.applyRollupBatch(events(1L), narrow, Seq("a"), "value",
+      nBuckets = 4, batchId = Some(0L))
+    val widened = intercept[IllegalArgumentException] {
+      Sinks.applyRollupBatch(events(2L), narrow, Seq("a", "b"), "value", batchId = Some(1L))
+    }
+    assert(widened.getMessage.contains("merges on keyCols=a; got a,b"), widened.getMessage)
+    val rollup = Sinks.currentRollup(spark, target)
+    assert(rollup.count() === 70L && rollup.select("a", "b").distinct().count() === 70L)
+  }
 }

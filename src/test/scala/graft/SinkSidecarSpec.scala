@@ -68,7 +68,7 @@ class SinkSidecarSpec extends AnyFunSuite {
     crashInReplaceWindow(target, "_graft_last_batch")
     // the replay fast path reads the sidecar and returns before any job;
     // without it the replay falls through to the per-bucket guard scan
-    val jobs = jobsDuring {
+    val jobs = JobProbe.count(spark) {
       Sinks.applyRollupBatch(events((1L, 3.0)), target, Seq("user_id"), "value",
         batchId = Some(1L))
     }
@@ -79,27 +79,4 @@ class SinkSidecarSpec extends AnyFunSuite {
     assert(state === Set((1L, 2L, 4.0), (2L, 1L, 2.0)))
   }
 
-  /** Spark jobs launched by `body`; a marker job flushes the async
-    * listener bus so every job `body` started has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sawMarker = false
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull ==
-            "__sidecar_marker") sawMarker = true
-        else count.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setJobGroup("__sidecar_marker", "listener flush")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis + 30000
-      while (!sawMarker && System.currentTimeMillis < deadline) Thread.sleep(10)
-      assert(sawMarker, "listener bus never delivered the marker job")
-    } finally spark.sparkContext.removeSparkListener(l)
-    count.get
-  }
 }

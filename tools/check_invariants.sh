@@ -28,6 +28,13 @@
 #                                 directory sinks write to a stage and the
 #                                 clustered sink's dynamic overwrite stages
 #                                 its output, so no read needs severing
+#   in streaming/Sinks.scala, one bucket-table target (BucketTable):
+#     pmod(hash(                  once: the __kb hash of the one merge body
+#     distinct().collect()        once: that body's touched-bucket collect
+#     commitBuckets( finish-      only inside the directory target
+#       Commit( StageDir          (DirTable): the stage-and-promote commit
+#     TruncateTarget              nowhere: the truncate sinks run over
+#                                 BucketTable like every other sink
 #
 # Usage: tools/check_invariants.sh   (from anywhere; exits 1 on any break)
 set -u
@@ -74,6 +81,30 @@ check "no session-conf spark.sql.sources.partitionOverwriteMode in main code" \
   "$(outside 'spark\.sql\.sources\.partitionOverwriteMode')"
 check "no localCheckpoint in streaming/Sinks.scala" \
   "$(grep -nE 'localCheckpoint' "$MAIN/streaming/Sinks.scala" | sed "s|^|streaming/Sinks.scala:|")"
+
+# Sinks.scala: one merge body and one directory commit over BucketTable
+SINKS="$MAIN/streaming/Sinks.scala"
+at_most_once() {
+  local what="$1" pattern="$2" hits
+  hits=$(grep -nF "$pattern" "$SINKS" | sed "s|^|streaming/Sinks.scala:|")
+  if [ "$(printf '%s' "$hits" | sed '/^$/d' | wc -l)" -gt 1 ]; then
+    check "$what" "$hits"
+  else
+    echo "ok:   $what"
+  fi
+}
+at_most_once "the __kb hash pmod(hash( appears once in Sinks.scala" 'pmod(hash('
+at_most_once "the touched distinct().collect() appears once in Sinks.scala" 'distinct().collect()'
+# the directory target's block: its class line up to its closing brace
+dir_block=$(awk '/^  private final class DirTable/ {on=1} on {print NR} on && /^  }$/ {exit}' "$SINKS")
+dir_first=$(printf '%s\n' "$dir_block" | head -1)
+dir_last=$(printf '%s\n' "$dir_block" | tail -1)
+check "commitBuckets(/finishCommit(/StageDir only inside the directory target" \
+  "$(grep -nE 'commitBuckets\(|finishCommit\(|StageDir' "$SINKS" | awk -F: -v a="${dir_first:-0}" \
+     -v b="${dir_last:-0}" '$1 < a || $1 > b' | grep -v 'private val StageDir' |
+     sed "s|^|streaming/Sinks.scala:|")"
+check "no TruncateTarget in streaming/Sinks.scala" \
+  "$(grep -n 'TruncateTarget' "$SINKS" | sed "s|^|streaming/Sinks.scala:|")"
 
 # Graph keeps exactly one hand-written __batch write: the append-mode fold
 graph=$(grep -nE 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala")

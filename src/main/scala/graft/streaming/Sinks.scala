@@ -3,7 +3,7 @@ package graft.streaming
 import graft.cdc.SchemaHistory
 import graft.ops.StateFiles
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
@@ -16,7 +16,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, St
   * back and rewrites ONLY the buckets it touches — the per-batch cost is
   * proportional to the touched working set, not the table. (On a
   * lakehouse format a merge is one MERGE INTO; plain parquet needs this
-  * read-merge-overwrite cycle.)
+  * read-merge-overwrite cycle.) A fresh directory table auto-sizes its
+  * `__kb` modulus to one bucket per 64k rows of its first write, floored
+  * at the write parallelism, so a small table's full rewrite is one file
+  * per write task ([[applyUpsertBatch]] states the rule's property and
+  * trade-off); the exchange puts bucket k on task k mod n ([[byBucket]]).
   *
   * THE TARGET CONTRACT is what Structured Streaming asks of a
   * foreachBatch sink: an idempotent per-batch overwrite. The private
@@ -60,6 +64,16 @@ object Sinks {
     */
   private val RowsPerBucket = 65536L
   private val MaxAutoBuckets = 65536
+
+  /** How many buckets a full rewrite runs at once, one file per task: the
+    * [[byBucket]] exchange never has more than the shuffle-partitions
+    * count of tasks, and tasks beyond the cores only wait for a core.
+    */
+  private def writeParallelism(spark: SparkSession): Int =
+    math.min(spark.sparkContext.defaultParallelism, shufflePartitions(spark))
+
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -209,7 +223,8 @@ object Sinks {
               "explicitly (it will be pinned)")
           val chosen =
             if (nBuckets > 0) nBuckets
-            else math.min(math.max(16L, rows / RowsPerBucket + 1), MaxAutoBuckets.toLong).toInt
+            else math.min(math.max(writeParallelism(spark).toLong, rows / RowsPerBucket + 1),
+              MaxAutoBuckets.toLong).toInt
           writeSidecar(fs, dir, BucketsFile, chosen.toString)
           chosen
       }
@@ -427,8 +442,10 @@ object Sinks {
                            applied: Option[DataFrame => Set[Int]] = None)
                           (merge: DataFrame => DataFrame): Unit = {
     val b = rows.withColumn("__kb", pmod(hash(layout.hashCols.map(col): _*), lit(layout.buckets)))
-    // bounded by the modulus: a driver-safe collect
-    val touched = b.select(col("__kb")).distinct().collect().map(_.getInt(0)).toSeq
+    // one job and no shuffle: each task returns its partition's distinct
+    // buckets (at most the modulus), the driver takes their union
+    val touched = b.select(col("__kb")).as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect().distinct.toSeq
     if (touched.isEmpty) return
     val stored = t.read(readSchema).map { s =>
       val pruned = s.where(col("__kb").isin(touched: _*))
@@ -448,7 +465,7 @@ object Sinks {
     * semantically `Materialize.latestByKey(all, keyCols, version)` —
     * `__kb` is a function of the merge key, so grouping on
     * (__kb, keyCols) groups exactly like keyCols — but the byBucket
-    * HashPartitioning(__kb, n) satisfies its window's
+    * partitioning on `__kb` satisfies its window's
     * ClusteredDistribution(__kb :: keyCols), so Catalyst plans ONE
     * exchange and every task holds whole buckets: a rewrite lands ~one
     * file per touched bucket, not one per (merge task × bucket).
@@ -479,13 +496,24 @@ object Sinks {
     if (!t.pinFirst) pin()
   }
 
-  /** The sinks' one bucket exchange: hash `rows` on `__kb` into
-    * `min(buckets, spark.sql.shuffle.partitions)` partitions, `buckets`
-    * being the number of buckets the write produces. Every task holds
-    * whole buckets, so a bucket rewrite still lands one file per bucket,
-    * and the write runs up to the shuffle-partitions count of tasks —
-    * the count an unnumbered `repartition(__kb)` starts from, capped by
-    * the buckets there are to spread.
+  /** The sinks' one bucket exchange: send each row of `rows` to task
+    * `__kb mod n`, `n = min(buckets, spark.sql.shuffle.partitions)`,
+    * `buckets` being the number of buckets the write produces. Every task
+    * holds whole buckets, so a bucket rewrite still lands one file per
+    * bucket, and the write runs up to the shuffle-partitions count of
+    * tasks — the count an unnumbered `repartition(__kb)` starts from,
+    * capped by the buckets there are to spread.
+    *
+    * PLACEMENT: `repartitionById` passes `__kb` through as the partition
+    * id (`ShufflePartitionIdPassThrough`, `pmod(__kb, n)`), so a fully
+    * touched table and [[compactTable]] spread their buckets evenly: 16
+    * buckets on 4 tasks are 4/4/4/4, where Spark's Murmur3 hash gave
+    * 3/3/4/6 and the batch waited for the task with 6. For a sparse
+    * touched set `kb mod n` is exact only by luck (touched 0, 4 and 8 of
+    * 16 over `n = 3` is even, 0, 3 and 6 is not); in expectation it is no
+    * worse than the hash. The partitioning still satisfies a
+    * `ClusteredDistribution` containing `__kb`, so the upsert window and
+    * the rollup aggregate above it plan no second exchange.
     *
     * The count is explicit because AQE never coalesces a numbered
     * repartition. Left to AQE, the exchange is coalesced by BYTES (toward
@@ -497,10 +525,9 @@ object Sinks {
     * writes (one parquet encode and commit per bucket), not by the bytes
     * it shuffles, so byte-sized partitions are the wrong unit for it.
     */
-  private def byBucket(rows: DataFrame, buckets: Int): DataFrame = {
-    val cap = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    rows.repartition(math.max(1, math.min(buckets, cap)), col("__kb"))
-  }
+  private def byBucket(rows: DataFrame, buckets: Int): DataFrame =
+    rows.repartitionById(math.max(1, math.min(buckets, shufflePartitions(rows.sparkSession))),
+      col("__kb"))
 
   /** The one compaction: rewrite every bucket through [[byBucket]] over
     * the pinned modulus, so each lands ~one file (per catalog bucket);
@@ -517,10 +544,17 @@ object Sinks {
     * target. `versionCol` must totally order events per key (e.g. lsn).
     *
     * `nBuckets = 0` (the default) auto-sizes on first write from the
-    * batch volume (one bucket per [[RowsPerBucket]] rows, floor 16) and
-    * pins the result; later batches reuse the pinned value. At 100 TB
-    * pass an explicit count sized from the TABLE (≈ tableRows / 64k) on
-    * the first write — the first batch is a poor proxy for its volume.
+    * batch volume and pins the result; later batches reuse the pinned
+    * value. The rule is one bucket per [[RowsPerBucket]] rows, floored at
+    * the write parallelism `min(defaultParallelism,
+    * spark.sql.shuffle.partitions)`: a small table whose batches touch
+    * most of its buckets then rewrites one bucket file per write task
+    * ([[byBucket]]), not several small ones. The trade-off: a sparse
+    * batch into a small table rewrites a larger share of it. A table
+    * that will grow past its first write — at 100 TB, every table —
+    * should pass an explicit count sized from the TABLE (≈ tableRows /
+    * 64k) on the first write; the first batch is a poor proxy for its
+    * volume.
     * `bucketCols` (r18): the layout hash columns, default the merge key;
     * a key subset (e.g. just the order key) co-locates the table for a
     * downstream join. Both are pinned on first write, like `keyCols`.
@@ -672,14 +706,17 @@ object Sinks {
                                      opCol: String = "op",
                                      nBuckets: Int = 0,
                                      bucketCols: Seq[String] = Nil): Unit = {
-    val data = batch.where(col(opCol) =!= HeartbeatOp || col(opCol).isNull)
+    // the max rides the merge's first job, which always runs and reads
+    // every batch row (the touched collect), so it costs no job of its own
+    val observed = Observation()
+    val data = batch.observe(observed, max(col(versionCol).cast("long")).as("hi"))
+      .where(col(opCol) =!= HeartbeatOp || col(opCol).isNull)
     applyUpsertBatch(data, targetDir, keyCols, versionCol, nBuckets, bucketCols)
-    val hi = batch.agg(max(col(versionCol).cast("long"))).head()
-    if (!hi.isNullAt(0)) {
+    Option(observed.get("hi")).map(_.asInstanceOf[Long]).foreach { hi =>
       val fs = fsOf(batch.sparkSession, targetDir)
       // monotone: replays never lower the floor
-      if (readSidecar(fs, targetDir, OffsetFile)(_.toLong).forall(_ < hi.getLong(0)))
-        writeSidecar(fs, targetDir, OffsetFile, hi.getLong(0).toString)
+      if (readSidecar(fs, targetDir, OffsetFile)(_.toLong).forall(_ < hi))
+        writeSidecar(fs, targetDir, OffsetFile, hi.toString)
     }
   }
 
@@ -753,7 +790,7 @@ object Sinks {
       else stored.groupBy(col("__kb")).agg(max(col("__bid")).as("mb"))
         .where(col("mb") >= id).select(col("__kb")).collect().map(_.getInt(0)).toSet)
     // layout-aligned like the upsert merge (r20): byBucket's
-    // HashPartitioning(__kb, n) satisfies the aggregate's
+    // partitioning on __kb satisfies the aggregate's
     // ClusteredDistribution(keyCols :+ __kb), so no second exchange
     mergeBuckets(t, partial, t.layout(keyCols, nBuckets, partial.count()),
         applied = applied) { all =>

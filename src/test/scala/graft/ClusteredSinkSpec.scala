@@ -340,7 +340,7 @@ class ClusteredSinkSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("a steady batch runs four Spark jobs: the insert reads the partitions it overwrites") {
+  test("a steady batch runs three Spark jobs: the insert reads the partitions it overwrites") {
     val t = freshTable()
     // 20k keys over 16 __kb partitions x 4 buckets; the steady batch
     // updates, deletes and inserts across every partition
@@ -352,11 +352,11 @@ class ClusteredSinkSpec extends AnyFunSuite {
     Sinks.applyUpsertBatchClustered(rows(0L, 20000L, 1L), t, Seq("k"), "__v",
       Seq("k"), nBuckets = 4, nKbParts = 16)
     val batch = rows(10000L, 30000L, 2L)
-    // the touched-set collect (map stage + result) and the insert (merge
+    // the touched-set collect (one job, no shuffle) and the insert (merge
     // shuffle + write): no checkpoint pass between the merge and the write
     val jobs = JobProbe.jobs(spark)(Sinks.applyUpsertBatchClustered(batch, t, Seq("k"), "__v",
       Seq("k"), nBuckets = 4, nKbParts = 16))
-    assert(jobs.size === 4, jobs.mkString("jobs:\n", "\n", ""))
+    assert(jobs.size === 3, jobs.mkString("jobs:\n", "\n", ""))
     val want = rows(0L, 10000L, 1L).unionByName(batch).where(col("op") =!= "d")
       .select("k", "payload").as[(Long, String)].collect().sorted.toSeq
     assert(Sinks.currentStateClustered(spark, t).select("k", "payload")

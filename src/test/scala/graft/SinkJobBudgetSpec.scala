@@ -39,37 +39,37 @@ class SinkJobBudgetSpec extends AnyFunSuite {
     assert(jobs.size === want, jobs.mkString("jobs:\n", "\n", ""))
   }
 
-  test("a steady upsert batch runs 4 jobs") {
+  test("a steady upsert batch runs 3 jobs") {
     val target = freshDir()
     Sinks.applyUpsertBatch(orders(spark), target, Seq("k"), "v", nBuckets = Buckets)
-    assertJobs(4)(Sinks.applyUpsertBatch(ordersBatch(spark), target, Seq("k"), "v"))
+    assertJobs(3)(Sinks.applyUpsertBatch(ordersBatch(spark), target, Seq("k"), "v"))
   }
 
-  test("a steady upsert batch of the lineitem layout (bucketCols within keyCols) runs 4 jobs") {
+  test("a steady upsert batch of the lineitem layout (bucketCols within keyCols) runs 3 jobs") {
     val target = freshDir()
     def lines(df: DataFrame) = df.select((col("k") / 4).cast("long").as("k"),
       (col("k") % 4).as("line"), col("v"), col("op"), col("payload"))
     Sinks.applyUpsertBatch(lines(orders(spark)), target, Seq("k", "line"), "v",
       nBuckets = Buckets, bucketCols = Seq("k"))
-    assertJobs(4)(Sinks.applyUpsertBatch(lines(ordersBatch(spark)), target, Seq("k", "line"),
+    assertJobs(3)(Sinks.applyUpsertBatch(lines(ordersBatch(spark)), target, Seq("k", "line"),
       "v", bucketCols = Seq("k")))
   }
 
-  test("a steady truncate-sink batch without a truncate runs 5 jobs") {
+  test("a steady truncate-sink batch without a truncate runs 4 jobs") {
     val target = freshDir()
     Sinks.applyUpsertBatchWithTruncates(orders(spark), target, Seq("k"), "v",
       nBuckets = Buckets)
-    assertJobs(5)(Sinks.applyUpsertBatchWithTruncates(ordersBatch(spark), target,
+    assertJobs(4)(Sinks.applyUpsertBatchWithTruncates(ordersBatch(spark), target,
       Seq("k"), "v"))
   }
 
-  test("a steady heartbeat-sink batch runs 6 jobs") {
+  test("a steady heartbeat-sink batch runs 3 jobs, the upsert's count") {
     val target = freshDir()
     Sinks.applyUpsertBatchWithHeartbeats(orders(spark), target, Seq("k"), "v",
       nBuckets = Buckets)
     val beats = spark.range(0, 4).select(lit(null).cast("long").as("k"),
       (col("id") + 3L).as("v"), lit("h").as("op"), lit(null).cast("string").as("payload"))
-    assertJobs(6)(Sinks.applyUpsertBatchWithHeartbeats(
+    assertJobs(3)(Sinks.applyUpsertBatchWithHeartbeats(
       ordersBatch(spark).unionByName(beats), target, Seq("k"), "v"))
     assert(Sinks.readOffsetLedger(spark, target) === Some(6L))
   }

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition coalescing left on: a micro-batch's few MB of touched
   * buckets must not fold into one serial write task. Each rewritten
   * `__kb=` dir still holds exactly one data file, and the rows are the
-  * ones the batch semantics define.
+  * ones the batch semantics define. A full rewrite puts bucket k on task
+  * k mod n, and a fresh auto-sized table has one bucket per write task.
   */
 class SinkParallelMergeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -76,6 +77,35 @@ class SinkParallelMergeSpec extends AnyFunSuite {
       .map(d => d.getName -> d.listFiles().count(f =>
         f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
       .toMap
+
+  /** The write task of each `__kb=` dir, read from its data file's
+    * `part-NNNNN` index (the partition id of the task that wrote it).
+    */
+  private def taskOfBucket(target: String): Map[Int, Int] =
+    new java.io.File(target).listFiles().filter(_.getName.startsWith("__kb="))
+      .map { d =>
+        val tasks = d.listFiles().map(_.getName).filter(n =>
+          n.startsWith("part-") && n.endsWith(".parquet")).map(_.slice(5, 10).toInt).distinct
+        assert(tasks.length === 1, s"${d.getName} was written by tasks ${tasks.toSeq}")
+        d.getName.stripPrefix("__kb=").toInt -> tasks.head
+      }.toMap
+
+  /** Every bucket of a fully rewritten table sits on task `kb mod n`, so
+    * each of the `n` write tasks holds the same number of buckets.
+    */
+  private def assertPlacement(target: String, n: Int): Unit = {
+    val placed = taskOfBucket(target)
+    assert(placed.keySet === (0 until Buckets).toSet)
+    assert(placed.forall { case (kb, task) => task === kb % n }, placed.toSeq.sorted)
+    assert(placed.values.groupBy(identity).values.map(_.size).toSet === Set(Buckets / n),
+      placed.toSeq.sorted)
+  }
+
+  /** The bucket count a table pinned on its first write. */
+  private def pinnedBuckets(s: SparkSession, target: String): Option[Int] = {
+    val fs = new org.apache.hadoop.fs.Path(target).getFileSystem(s.sparkContext.hadoopConfiguration)
+    graft.ops.StateFiles.read(fs, new org.apache.hadoop.fs.Path(target, "_graft_buckets"))(_.toInt)
+  }
 
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -187,6 +217,46 @@ class SinkParallelMergeSpec extends AnyFunSuite {
     val files = filesPerBucket(target)
     assert(files.size === Buckets && files.values.forall(_ === 1), files)
     assert(sorted(Sinks.currentState(spark, target)) === before)
+  }
+
+  test("an all-touched merge and compact put bucket k on write task k mod n") {
+    val target = freshDir()
+    val n = math.min(Buckets, shufflePartitions(spark))
+    Sinks.applyUpsertBatch(orders(spark), target, Seq("k"), "v", nBuckets = Buckets)
+    Sinks.applyUpsertBatch(ordersBatch(spark), target, Seq("k"), "v")
+    assertPlacement(target, n)
+    val merged = sorted(Sinks.currentState(spark, target))
+    assert(merged === expectedUpsert(orders(spark), ordersBatch(spark), Seq("k")))
+    Sinks.compact(spark, target)
+    assertPlacement(target, n)
+    assert(sorted(Sinks.currentState(spark, target)) === merged)
+  }
+
+  /** A fresh auto-sized table of `s` pins the write parallelism. */
+  private def checkFloor(s: SparkSession): Unit = {
+    val target = freshDir()
+    val want = math.min(s.sparkContext.defaultParallelism, shufflePartitions(s))
+    Sinks.applyUpsertBatch(orders(s), target, Seq("k"), "v")
+    assert(pinnedBuckets(s, target) === Some(want))
+    val files = filesPerBucket(target)
+    assert(files.size === want && files.values.forall(_ === 1), files)
+    Sinks.applyUpsertBatch(ordersBatch(s), target, Seq("k"), "v")
+    assert(pinnedBuckets(s, target) === Some(want), "later batches reuse the pin")
+    assert(sorted(Sinks.currentState(s, target)) ===
+      expectedUpsert(orders(s), ordersBatch(s), Seq("k")))
+  }
+
+  test("a fresh auto-sized table pins min(defaultParallelism, shuffle partitions) buckets") {
+    checkFloor(spark)
+    val fewer = spark.newSession()
+    fewer.conf.set("spark.sql.shuffle.partitions", "2")
+    checkFloor(fewer)
+  }
+
+  test("the auto-size floor is the same with AQE off") {
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    checkFloor(noAqe)
   }
 
   test("the clustered sink inserts its touched partitions on parallel tasks") {

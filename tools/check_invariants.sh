@@ -15,10 +15,13 @@
 #                                     __batch=-1 pair-store fold (one line);
 #                                   - contract/ and Bench.scala, which build
 #                                     fixtures and bench state by hand.
-#   repartition(col("__kb"))      nowhere under streaming/: the unnumbered
-#                                 bucket exchange, which AQE coalesces into
-#                                 one write task (Sinks.byBucket is the one
-#                                 bucket exchange of the sinks)
+#   repartition(...col("__kb"))   nowhere under streaming/, numbered or not:
+#                                 the unnumbered hash exchange is coalesced
+#                                 by AQE into one write task, and a numbered
+#                                 one spreads buckets by Murmur3 (16 on 4
+#                                 tasks as 3/3/4/6); Sinks.byBucket's
+#                                 repartitionById, bucket k on task k mod n,
+#                                 is the one bucket exchange of the sinks
 #   newSession( GlobalTempView    nowhere: no cloned session carries a write
 #   spark.sql.sources.partition-  nowhere: the clustered sink's table owns
 #     OverwriteMode               its dynamic overwrite as a storage option
@@ -30,7 +33,8 @@
 #                                 its output, so no read needs severing
 #   in streaming/Sinks.scala, one bucket-table target (BucketTable):
 #     pmod(hash(                  once: the __kb hash of the one merge body
-#     distinct().collect()        once: that body's touched-bucket collect
+#     mapPartitions(              once: that body's touched-bucket collect
+#                                 (one job, no shuffle)
 #     commitBuckets( finish-      only inside the directory target
 #       Commit( StageDir          (DirTable): the stage-and-promote commit
 #     TruncateTarget              nowhere: the truncate sinks run over
@@ -73,8 +77,15 @@ check "startsWith(\"__batch=\") only inside Generations.batchIds" \
   "$(outside 'startsWith\("__batch="\)' ops/Generations.scala)"
 check "partitionBy(...\"__batch\"...) only inside Generations.writeBatch" \
   "$(outside 'partitionBy\([^)]*"__batch"' ops/Generations.scala ops/Graph.scala contract/ Bench.scala)"
-check "no AQE-coalescable repartition(col(\"__kb\")) under streaming/" \
-  "$(grep -rnE 'repartition\(col\("__kb"\)\)' "$MAIN/streaming" --include='*.scala' | sed "s|^$MAIN/||")"
+# a call's arguments may span lines: match balanced parentheses over the file
+check "no hash repartition(...col(\"__kb\")) under streaming/ (byBucket's is repartitionById)" \
+  "$(find "$MAIN/streaming" -name '*.scala' -exec perl -0777 -ne '
+      while (/\brepartition(\((?:[^()]++|(?1))*\))/g) {
+        my ($args, $at) = ($1, $-[0]);
+        next unless $args =~ /col\("__kb"\)/;
+        (my $flat = $args) =~ s/\s+/ /g;
+        printf "%s:%d: repartition%s\n", $ARGV, 1 + (substr($_, 0, $at) =~ tr/\n//), $flat;
+      }' {} + | sed "s|^$MAIN/||")"
 check "no newSession( or GlobalTempView in main code" \
   "$(outside 'newSession\(|GlobalTempView')"
 check "no session-conf spark.sql.sources.partitionOverwriteMode in main code" \
@@ -87,14 +98,14 @@ SINKS="$MAIN/streaming/Sinks.scala"
 at_most_once() {
   local what="$1" pattern="$2" hits
   hits=$(grep -nF "$pattern" "$SINKS" | sed "s|^|streaming/Sinks.scala:|")
-  if [ "$(printf '%s' "$hits" | sed '/^$/d' | wc -l)" -gt 1 ]; then
+  if [ "$(printf '%s\n' "$hits" | grep -c .)" -gt 1 ]; then
     check "$what" "$hits"
   else
     echo "ok:   $what"
   fi
 }
 at_most_once "the __kb hash pmod(hash( appears once in Sinks.scala" 'pmod(hash('
-at_most_once "the touched distinct().collect() appears once in Sinks.scala" 'distinct().collect()'
+at_most_once "the touched collect's mapPartitions( appears once in Sinks.scala" 'mapPartitions('
 # the directory target's block: its class line up to its closing brace
 dir_block=$(awk '/^  private final class DirTable/ {on=1} on {print NR} on && /^  }$/ {exit}' "$SINKS")
 dir_first=$(printf '%s\n' "$dir_block" | head -1)
@@ -109,7 +120,7 @@ check "no TruncateTarget in streaming/Sinks.scala" \
 # Graph keeps exactly one hand-written __batch write: the append-mode fold
 graph=$(grep -nE 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala")
 graph_append=$(grep -nE -B1 'partitionBy\([^)]*"__batch"' "$MAIN/ops/Graph.scala" | grep -c 'mode("append")')
-if [ "$(printf '%s' "$graph" | sed '/^$/d' | wc -l)" -gt 1 ] || \
+if [ "$(printf '%s\n' "$graph" | grep -c .)" -gt 1 ] || \
    { [ -n "$graph" ] && [ "$graph_append" -ne 1 ]; }; then
   check "Graph's only __batch write is the append-mode fold" "$graph"
 else

@@ -1,8 +1,10 @@
 package graft
 
 import graft.cdc.Materialize
+import graft.ops.StateFiles
 import graft.streaming.Sinks
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -103,8 +105,8 @@ class SinkParallelMergeSpec extends AnyFunSuite {
 
   /** The bucket count a table pinned on its first write. */
   private def pinnedBuckets(s: SparkSession, target: String): Option[Int] = {
-    val fs = new org.apache.hadoop.fs.Path(target).getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.ops.StateFiles.read(fs, new org.apache.hadoop.fs.Path(target, "_graft_buckets"))(_.toInt)
+    val fs = new Path(target).getFileSystem(s.sparkContext.hadoopConfiguration)
+    StateFiles.read(fs, new Path(target, "_graft_buckets"))(_.toInt)
   }
 
   private def sorted(df: DataFrame): Seq[Row] =
